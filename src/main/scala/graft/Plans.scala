@@ -4,14 +4,19 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `explain("formatted")` for every SparkEntry query to a file —
-  * the per-round plan-review artifact (PLANS.md). Grep it for
-  * `PushedFilters`, `ReadSchema`, `BroadcastHashJoin`, `WholeStageCodegen`
-  * to confirm scans prune, dims broadcast, and hot paths stay in codegen. */
+/** Dumps `explain("formatted")` for every SPARK_GRAFT_ONLY-selected
+  * SparkEntry query (all when unset), in one of two modes:
+  *  - `Plans [sfDir] [out]`: one file (default PLANS.md), a `## <query>`
+  *    section per plan — the plan-review artifact. Grep it for
+  *    `PushedFilters`, `ReadSchema`, `BroadcastHashJoin`, `WholeStageCodegen`
+  *    to confirm scans prune, dims broadcast, and hot paths stay in codegen.
+  *  - `Plans <sfDir> <outDir> <suffix>`: one file per query,
+  *    `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence of
+  *    an optimization (plans/rNN/<query>_{before,after}.txt).
+  */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
@@ -19,18 +24,29 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# Physical plans (explain formatted) — generated by graft.Plans\n")
-    sb.append(s"Scale dir: $sfDir\n")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan =
-        try fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-      sb.append(s"\n## $name\n```\n$plan```\n")
+    val only = QueryFilter.fromEnv()
+    val sections = SparkEntry.queries.toSeq.sortBy(_._1).filter(t => only(t._1))
+      .map { case (name, fn) =>
+        val plan =
+          try fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+        name -> s"## $name\n```\n$plan```\n"
+      }
+    args match {
+      case Array(_, outDir, suffix) =>
+        Files.createDirectories(Paths.get(outDir))
+        sections.foreach { case (name, section) =>
+          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), section)
+          println(s"wrote $outDir/${name}_$suffix.txt")
+        }
+      case _ =>
+        val out = if (args.length > 1) args(1) else "PLANS.md"
+        Files.writeString(Paths.get(out),
+          "# Physical plans (explain formatted) — generated by graft.Plans\n" +
+            s"Scale dir: $sfDir\n" + sections.map("\n" + _._2).mkString)
+        println(s"wrote $out")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
     spark.stop()
   }
 }

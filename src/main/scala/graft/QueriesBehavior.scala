@@ -1308,49 +1308,26 @@ object QueriesBehavior {
        |WHERE ie = 0 AND pv IS NOT NULL AND nv IS NOT NULL
        |GROUP BY 1 ORDER BY hour""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q193_resample_interp" -> q193,
-    "q184_disorder_audit" -> q184,
-    "q158_time_to_convert" -> q158,
-    "q161_cohort_ltv" -> q161,
-    "q152_rfm_segments" -> q152,
-    "q147_ab_lift" -> q147,
-    "q150_debounce" -> q150,
-    "q132_audience_overlap" -> q132,
-    "q90_funnel"      -> q90,
-    "q91_retention"   -> q91,
-    "q92_transitions" -> q92,
-    "q93_weekly_delta" -> q93,
-    "q96_weekly_churn" -> q96,
-    "q97_conversion_latency" -> q97,
-    "q103_session_paths" -> q103,
-    "q115_linear_attribution" -> q115,
-    "q116_twap" -> q116,
-    "q117_session_stats" -> q117,
-    "q121_weighted_median" -> q121,
-    "q123_wau" -> q123,
-    "q124_decayed_engagement" -> q124)
-
-  val oracleSql: Map[String, String] = Map(
-    "q193_resample_interp" -> q193Sql,
-    "q184_disorder_audit" -> q184Sql,
-    "q158_time_to_convert" -> q158Sql,
-    "q161_cohort_ltv" -> q161Sql,
-    "q152_rfm_segments" -> q152Sql,
-    "q147_ab_lift" -> q147Sql,
-    "q150_debounce" -> q150Sql,
-    "q132_audience_overlap" -> q132Sql,
-    "q90_funnel"      -> q90Sql,
-    "q91_retention"   -> q91Sql,
-    "q92_transitions" -> q92Sql,
-    "q93_weekly_delta" -> q93Sql,
-    "q96_weekly_churn" -> q96Sql,
-    "q97_conversion_latency" -> q97Sql,
-    "q103_session_paths" -> q103Sql,
-    "q115_linear_attribution" -> q115Sql,
-    "q116_twap" -> q116Sql,
-    "q117_session_stats" -> q117Sql,
-    "q121_weighted_median" -> q121Sql,
-    "q123_wau" -> q123Sql,
-    "q124_decayed_engagement" -> q124Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q193_resample_interp", q193, Some(q193Sql)),
+    Query("q184_disorder_audit", q184, Some(q184Sql)),
+    Query("q158_time_to_convert", q158, Some(q158Sql)),
+    Query("q161_cohort_ltv", q161, Some(q161Sql)),
+    Query("q152_rfm_segments", q152, Some(q152Sql)),
+    Query("q147_ab_lift", q147, Some(q147Sql)),
+    Query("q150_debounce", q150, Some(q150Sql)),
+    Query("q132_audience_overlap", q132, Some(q132Sql)),
+    Query("q90_funnel", q90, Some(q90Sql)),
+    Query("q91_retention", q91, Some(q91Sql)),
+    Query("q92_transitions", q92, Some(q92Sql)),
+    Query("q93_weekly_delta", q93, Some(q93Sql)),
+    Query("q96_weekly_churn", q96, Some(q96Sql)),
+    Query("q97_conversion_latency", q97, Some(q97Sql)),
+    Query("q103_session_paths", q103, Some(q103Sql)),
+    Query("q115_linear_attribution", q115, Some(q115Sql)),
+    Query("q116_twap", q116, Some(q116Sql)),
+    Query("q117_session_stats", q117, Some(q117Sql)),
+    Query("q121_weighted_median", q121, Some(q121Sql)),
+    Query("q123_wau", q123, Some(q123Sql)),
+    Query("q124_decayed_engagement", q124, Some(q124Sql)))
 }

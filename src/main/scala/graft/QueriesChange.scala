@@ -653,27 +653,15 @@ object QueriesChange {
       |  ON p.user_id = v.user_id AND p.ts >= v.ts
       |ORDER BY purchase_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q84_set_ops"       -> q84,
-    "q85_snapshot_diff" -> q85,
-    "q86_scd2_history"  -> q86,
-    "q98_unpivot"       -> q98,
-    "q99_gap_fill"      -> q99,
-    "q107_incremental_agg" -> q107,
-    "q113_scd2_lookup"  -> q113,
-    "q176_ivm_join_view" -> q176,
-    "q191_incr_sessionize" -> q191,
-    "q192_partition_diff" -> q192)
-
-  val oracleSql: Map[String, String] = Map(
-    "q84_set_ops"       -> q84Sql,
-    "q85_snapshot_diff" -> q85Sql,
-    "q86_scd2_history"  -> q86Sql,
-    "q98_unpivot"       -> q98Sql,
-    "q99_gap_fill"      -> q99Sql,
-    "q107_incremental_agg" -> q107Sql,
-    "q113_scd2_lookup"  -> q113Sql,
-    "q176_ivm_join_view" -> q176Sql,
-    "q191_incr_sessionize" -> q191Sql,
-    "q192_partition_diff" -> q192Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q84_set_ops", q84, Some(q84Sql)),
+    Query("q85_snapshot_diff", q85, Some(q85Sql)),
+    Query("q86_scd2_history", q86, Some(q86Sql)),
+    Query("q98_unpivot", q98, Some(q98Sql)),
+    Query("q99_gap_fill", q99, Some(q99Sql)),
+    Query("q107_incremental_agg", q107, Some(q107Sql)),
+    Query("q113_scd2_lookup", q113, Some(q113Sql)),
+    Query("q176_ivm_join_view", q176, Some(q176Sql)),
+    Query("q191_incr_sessionize", q191, Some(q191Sql)),
+    Query("q192_partition_diff", q192, Some(q192Sql)))
 }

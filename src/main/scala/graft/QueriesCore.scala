@@ -409,41 +409,22 @@ object QueriesCore {
       |WHERE l_linenumber = maxln
       |GROUP BY l_suppkey ORDER BY value DESC, l_suppkey LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q48_most_wins" -> q48,
-    "q49_most_lastplaces" -> q49,
-    "q45_team_hash_rollup" -> q45,
-    "q01_pricing_summary" -> q01,
-    "q02_topk_customers" -> q02,
-    "q03_revenue_by_nation" -> q03,
-    "q04_conditional_agg" -> q04,
-    "q05_daily_rollup" -> q05,
-    "q06_sessionize" -> q06,
-    "q07_streaks" -> q07,
-    "q08_smoothed_series" -> q08,
-    "q09_cumulative_series" -> q09,
-    "q10_latest_per_user" -> q10,
-    "q11_recent_n" -> q11,
-    "q12_range_join_seasons" -> q12,
-    "q13_pivot_event_types" -> q13,
-    "q14_team_rollup" -> q14)
-
-  val oracleSql: Map[String, String] = Map(
-    "q48_most_wins" -> q48Sql,
-    "q49_most_lastplaces" -> q49Sql,
-    "q45_team_hash_rollup" -> q45Sql,
-    "q01_pricing_summary" -> q01Sql,
-    "q02_topk_customers" -> q02Sql,
-    "q03_revenue_by_nation" -> q03Sql,
-    "q04_conditional_agg" -> q04Sql,
-    "q05_daily_rollup" -> q05Sql,
-    "q06_sessionize" -> q06Sql,
-    "q07_streaks" -> q07Sql,
-    "q08_smoothed_series" -> q08Sql,
-    "q09_cumulative_series" -> q09Sql,
-    "q10_latest_per_user" -> q10Sql,
-    "q11_recent_n" -> q11Sql,
-    "q12_range_join_seasons" -> q12Sql,
-    "q13_pivot_event_types" -> q13Sql,
-    "q14_team_rollup" -> q14Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q48_most_wins", q48, Some(q48Sql)),
+    Query("q49_most_lastplaces", q49, Some(q49Sql)),
+    Query("q45_team_hash_rollup", q45, Some(q45Sql)),
+    Query("q01_pricing_summary", q01, Some(q01Sql)),
+    Query("q02_topk_customers", q02, Some(q02Sql)),
+    Query("q03_revenue_by_nation", q03, Some(q03Sql)),
+    Query("q04_conditional_agg", q04, Some(q04Sql)),
+    Query("q05_daily_rollup", q05, Some(q05Sql)),
+    Query("q06_sessionize", q06, Some(q06Sql)),
+    Query("q07_streaks", q07, Some(q07Sql)),
+    Query("q08_smoothed_series", q08, Some(q08Sql)),
+    Query("q09_cumulative_series", q09, Some(q09Sql)),
+    Query("q10_latest_per_user", q10, Some(q10Sql)),
+    Query("q11_recent_n", q11, Some(q11Sql)),
+    Query("q12_range_join_seasons", q12, Some(q12Sql)),
+    Query("q13_pivot_event_types", q13, Some(q13Sql)),
+    Query("q14_team_rollup", q14, Some(q14Sql)))
 }

@@ -1197,47 +1197,25 @@ object QueriesCorpus {
        |  (SELECT accuracy_ppm FROM acc) AS accuracy_ppm
        |FROM ev GROUP BY y, pred ORDER BY y, pred""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q204_classifier_eval" -> q204,
-    "q203_classifier_train" -> q203,
-    "q202_line_dedup" -> q202,
-    "q201_decontamination" -> q201,
-    "q200_domain_cap" -> q200,
-    "q189_source_drift" -> q189,
-    "q71_quantized_topk" -> q71,
-    "q207_mmr_diversify" -> q207,
-    "q70_bpe_pairs" -> q70,
-    "q69_classifier_score" -> q69,
-    "q68_embedding_quantize" -> q68,
-    "q67_vocab_coverage" -> q67,
-    "q65_doc_chunking" -> q65,
-    "q66_sequence_pack" -> q66,
-    "q59_repetition_stats" -> q59,
-    "q60_pii_scrub" -> q60,
-    "q61_boilerplate_prune" -> q61,
-    "q62_inverted_index_topk" -> q62,
-    "q63_token_budget_mixture" -> q63,
-    "q64_semantic_dedup" -> q64)
-
-  val oracleSql: Map[String, String] = Map(
-    "q204_classifier_eval" -> q204Sql,
-    "q203_classifier_train" -> q203Sql,
-    "q202_line_dedup" -> q202Sql,
-    "q201_decontamination" -> q201Sql,
-    "q200_domain_cap" -> q200Sql,
-    "q189_source_drift" -> q189Sql,
-    "q71_quantized_topk" -> q71Sql,
-    "q207_mmr_diversify" -> q207Sql,
-    "q70_bpe_pairs" -> q70Sql,
-    "q69_classifier_score" -> q69Sql,
-    "q68_embedding_quantize" -> q68Sql,
-    "q67_vocab_coverage" -> q67Sql,
-    "q65_doc_chunking" -> q65Sql,
-    "q66_sequence_pack" -> q66Sql,
-    "q59_repetition_stats" -> q59Sql,
-    "q60_pii_scrub" -> q60Sql,
-    "q61_boilerplate_prune" -> q61Sql,
-    "q62_inverted_index_topk" -> q62Sql,
-    "q63_token_budget_mixture" -> q63Sql,
-    "q64_semantic_dedup" -> q64Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q204_classifier_eval", q204, Some(q204Sql), Some("state")),
+    Query("q203_classifier_train", q203, Some(q203Sql), Some("state")),
+    Query("q202_line_dedup", q202, Some(q202Sql)),
+    Query("q201_decontamination", q201, Some(q201Sql)),
+    Query("q200_domain_cap", q200, Some(q200Sql)),
+    Query("q189_source_drift", q189, Some(q189Sql)),
+    Query("q71_quantized_topk", q71, Some(q71Sql)),
+    Query("q207_mmr_diversify", q207, Some(q207Sql)),
+    Query("q70_bpe_pairs", q70, Some(q70Sql)),
+    Query("q69_classifier_score", q69, Some(q69Sql), Some("state")),
+    Query("q68_embedding_quantize", q68, Some(q68Sql)),
+    Query("q67_vocab_coverage", q67, Some(q67Sql)),
+    Query("q65_doc_chunking", q65, Some(q65Sql)),
+    Query("q66_sequence_pack", q66, Some(q66Sql)),
+    Query("q59_repetition_stats", q59, Some(q59Sql)),
+    Query("q60_pii_scrub", q60, Some(q60Sql)),
+    Query("q61_boilerplate_prune", q61, Some(q61Sql)),
+    Query("q62_inverted_index_topk", q62, Some(q62Sql)),
+    Query("q63_token_budget_mixture", q63, Some(q63Sql)),
+    Query("q64_semantic_dedup", q64, Some(q64Sql), Some("cents")))
 }

@@ -673,27 +673,15 @@ object QueriesCuration {
        |ORDER BY r.bucket""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q187_distribution_match" -> q187,
-    "q177_kanonymity" -> q177,
-    "q73_dup_ngram_coverage" -> q73,
-    "q74_normalize_dedup" -> q74,
-    "q75_centroid_assign" -> q75,
-    "q76_doc_keywords" -> q76,
-    "q77_bpe_merge_round2" -> q77,
-    "q78_eval_holdout" -> q78,
-    "q79_dedup_scrub" -> q79,
-    "q102_bigram_fluency" -> q102)
-
-  val oracleSql: Map[String, String] = Map(
-    "q187_distribution_match" -> q187Sql,
-    "q177_kanonymity" -> q177Sql,
-    "q73_dup_ngram_coverage" -> q73Sql,
-    "q74_normalize_dedup" -> q74Sql,
-    "q75_centroid_assign" -> q75Sql,
-    "q76_doc_keywords" -> q76Sql,
-    "q77_bpe_merge_round2" -> q77Sql,
-    "q78_eval_holdout" -> q78Sql,
-    "q79_dedup_scrub" -> q79Sql,
-    "q102_bigram_fluency" -> q102Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q187_distribution_match", q187, Some(q187Sql)),
+    Query("q177_kanonymity", q177, Some(q177Sql)),
+    Query("q73_dup_ngram_coverage", q73, Some(q73Sql)),
+    Query("q74_normalize_dedup", q74, Some(q74Sql)),
+    Query("q75_centroid_assign", q75, Some(q75Sql)),
+    Query("q76_doc_keywords", q76, Some(q76Sql)),
+    Query("q77_bpe_merge_round2", q77, Some(q77Sql)),
+    Query("q78_eval_holdout", q78, Some(q78Sql)),
+    Query("q79_dedup_scrub", q79, Some(q79Sql)),
+    Query("q102_bigram_fluency", q102, Some(q102Sql)))
 }

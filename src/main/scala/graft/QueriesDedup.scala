@@ -1443,47 +1443,25 @@ object QueriesDedup {
        |FROM ci ORDER BY rows_per_band""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q188_lsh_tuning" -> q188,
-    "q213_neardup_recall" -> q213,
-    "q186_ingest_dedup" -> q186,
-    "q180_fusion_dedup" -> q180,
-    "q179_sorted_neighborhood" -> q179,
-    "q146_entity_resolution" -> q146,
-    "q127_editdist_confirm" -> q127,
-    "q137_shingle_containment" -> q137,
-    "q119_source_similarity" -> q119,
-    "q54_simhash_neardup" -> q54,
-    "q52_embedding_neardup_bucketed" -> q52,
-    "q199_adaptive_lsh_neardup" -> q199,
-    "q51_dedup_components" -> q51,
-    "q208_leakage_split" -> q208,
-    "q26_exact_dedup" -> q26,
-    "q27_minhash_lsh" -> q27,
-    "q28_simhash" -> q28,
-    "q29_ngram_jaccard" -> q29,
-    "q30_embedding_neardup" -> q30,
-    "q114_dup_cluster_histogram" -> q114)
-
-  val oracleSql: Map[String, String] = Map(
-    "q188_lsh_tuning" -> q188Sql,
-    "q213_neardup_recall" -> q213Sql,
-    "q186_ingest_dedup" -> q186Sql,
-    "q180_fusion_dedup" -> q180Sql,
-    "q179_sorted_neighborhood" -> q179Sql,
-    "q146_entity_resolution" -> q146Sql,
-    "q127_editdist_confirm" -> q127Sql,
-    "q137_shingle_containment" -> q137Sql,
-    "q119_source_similarity" -> q119Sql,
-    "q54_simhash_neardup" -> q54Sql,
-    "q52_embedding_neardup_bucketed" -> q52Sql,
-    "q199_adaptive_lsh_neardup" -> q199Sql,
-    "q51_dedup_components" -> q51Sql,
-    "q208_leakage_split" -> q208Sql,
-    "q26_exact_dedup" -> q26Sql,
-    "q27_minhash_lsh" -> q27Sql,
-    "q28_simhash" -> q28Sql,
-    "q29_ngram_jaccard" -> q29Sql,
-    "q30_embedding_neardup" -> q30Sql,
-    "q114_dup_cluster_histogram" -> q114Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q188_lsh_tuning", q188, Some(q188Sql)),
+    Query("q213_neardup_recall", q213, Some(q213Sql)),
+    Query("q186_ingest_dedup", q186, Some(q186Sql)),
+    Query("q180_fusion_dedup", q180, Some(q180Sql)),
+    Query("q179_sorted_neighborhood", q179, Some(q179Sql)),
+    Query("q146_entity_resolution", q146, Some(q146Sql)),
+    Query("q127_editdist_confirm", q127, Some(q127Sql)),
+    Query("q137_shingle_containment", q137, Some(q137Sql)),
+    Query("q119_source_similarity", q119, Some(q119Sql)),
+    Query("q54_simhash_neardup", q54, Some(q54Sql)),
+    Query("q52_embedding_neardup_bucketed", q52, Some(q52Sql)),
+    Query("q199_adaptive_lsh_neardup", q199, Some(q199Sql)),
+    Query("q51_dedup_components", q51, Some(q51Sql)),
+    Query("q208_leakage_split", q208, Some(q208Sql)),
+    Query("q26_exact_dedup", q26, Some(q26Sql)),
+    Query("q27_minhash_lsh", q27, Some(q27Sql)),
+    Query("q28_simhash", q28, Some(q28Sql)),
+    Query("q29_ngram_jaccard", q29, Some(q29Sql)),
+    Query("q30_embedding_neardup", q30, Some(q30Sql)),
+    Query("q114_dup_cluster_histogram", q114, Some(q114Sql)))
 }

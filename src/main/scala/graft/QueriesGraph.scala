@@ -783,21 +783,12 @@ object QueriesGraph {
        |FROM r$TempRounds GROUP BY 1 ORDER BY epoch_month""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q194_temporal_reach" -> q194,
-    "q129_supplier_walk" -> q129,
-    "q130_triangle_count" -> q130,
-    "q133_kcore" -> q133,
-    "q144_bfs_hops" -> q144,
-    "q154_label_propagation" -> q154,
-    "q167_weighted_paths" -> q167)
-
-  val oracleSql: Map[String, String] = Map(
-    "q194_temporal_reach" -> q194Sql,
-    "q129_supplier_walk" -> q129Sql,
-    "q130_triangle_count" -> q130Sql,
-    "q133_kcore" -> q133Sql,
-    "q144_bfs_hops" -> q144Sql,
-    "q154_label_propagation" -> q154Sql,
-    "q167_weighted_paths" -> q167Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q194_temporal_reach", q194, Some(q194Sql)),
+    Query("q129_supplier_walk", q129, Some(q129Sql)),
+    Query("q130_triangle_count", q130, Some(q130Sql), Some("cut")),
+    Query("q133_kcore", q133, Some(q133Sql), Some("cut")),
+    Query("q144_bfs_hops", q144, Some(q144Sql), Some("cut")),
+    Query("q154_label_propagation", q154, Some(q154Sql), Some("cut")),
+    Query("q167_weighted_paths", q167, Some(q167Sql), Some("cut")))
 }

@@ -933,27 +933,15 @@ object QueriesQuant {
        |FROM keyed GROUP BY band ORDER BY band""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q214_dpo_pairs" -> q214,
-    "q163_survival_hazard" -> q163,
-    "q164_mannwhitney_auc" -> q164,
-    "q165_fifo_allocation" -> q165,
-    "q166_heaps_curve" -> q166,
-    "q168_calibration_bins" -> q168,
-    "q169_rater_kappa" -> q169,
-    "q170_bootstrap_ci" -> q170,
-    "q209_bradley_terry" -> q209,
-    "q210_pref_cycles" -> q210)
-
-  val oracleSql: Map[String, String] = Map(
-    "q214_dpo_pairs" -> q214Sql,
-    "q163_survival_hazard" -> q163Sql,
-    "q164_mannwhitney_auc" -> q164Sql,
-    "q165_fifo_allocation" -> q165Sql,
-    "q166_heaps_curve" -> q166Sql,
-    "q168_calibration_bins" -> q168Sql,
-    "q169_rater_kappa" -> q169Sql,
-    "q170_bootstrap_ci" -> q170Sql,
-    "q209_bradley_terry" -> q209Sql,
-    "q210_pref_cycles" -> q210Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q214_dpo_pairs", q214, Some(q214Sql)),
+    Query("q163_survival_hazard", q163, Some(q163Sql)),
+    Query("q164_mannwhitney_auc", q164, Some(q164Sql)),
+    Query("q165_fifo_allocation", q165, Some(q165Sql)),
+    Query("q166_heaps_curve", q166, Some(q166Sql)),
+    Query("q168_calibration_bins", q168, Some(q168Sql)),
+    Query("q169_rater_kappa", q169, Some(q169Sql)),
+    Query("q170_bootstrap_ci", q170, Some(q170Sql)),
+    Query("q209_bradley_terry", q209, Some(q209Sql)),
+    Query("q210_pref_cycles", q210, Some(q210Sql)))
 }

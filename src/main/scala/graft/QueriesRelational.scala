@@ -695,47 +695,25 @@ object QueriesRelational {
       |  CAST(MAX(open_after) AS BIGINT) AS peak_open
       |FROM run GROUP BY 1 ORDER BY month""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q159_benford_audit" -> q159,
-    "q160_open_orders" -> q160,
-    "q149_fk_audit" -> q149,
-    "q72_interval_overlap" -> q72,
-    "q57_asof_attribution" -> q57,
-    "q50_quantile_buckets" -> q50,
-    "q46_percentile_disc" -> q46,
-    "q42_rollup_revenue" -> q42,
-    "q43_ntile_quartiles" -> q43,
-    "q15_anti_join" -> q15,
-    "q16_semi_join" -> q16,
-    "q17_json_extract" -> q17,
-    "q18_day_flags" -> q18,
-    "q19_distinct" -> q19,
-    "q20_minmax_audit" -> q20,
-    "q21_multikey_join" -> q21,
-    "q22_union_distinct" -> q22,
-    "q23_guarded_ratios" -> q23,
-    "q24_dim_fallback" -> q24,
-    "q25_unknown_audit" -> q25)
-
-  val oracleSql: Map[String, String] = Map(
-    "q159_benford_audit" -> q159Sql,
-    "q160_open_orders" -> q160Sql,
-    "q149_fk_audit" -> q149Sql,
-    "q72_interval_overlap" -> q72Sql,
-    "q57_asof_attribution" -> q57Sql,
-    "q50_quantile_buckets" -> q50Sql,
-    "q46_percentile_disc" -> q46Sql,
-    "q42_rollup_revenue" -> q42Sql,
-    "q43_ntile_quartiles" -> q43Sql,
-    "q15_anti_join" -> q15Sql,
-    "q16_semi_join" -> q16Sql,
-    "q17_json_extract" -> q17Sql,
-    "q18_day_flags" -> q18Sql,
-    "q19_distinct" -> q19Sql,
-    "q20_minmax_audit" -> q20Sql,
-    "q21_multikey_join" -> q21Sql,
-    "q22_union_distinct" -> q22Sql,
-    "q23_guarded_ratios" -> q23Sql,
-    "q24_dim_fallback" -> q24Sql,
-    "q25_unknown_audit" -> q25Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q159_benford_audit", q159, Some(q159Sql)),
+    Query("q160_open_orders", q160, Some(q160Sql)),
+    Query("q149_fk_audit", q149, Some(q149Sql)),
+    Query("q72_interval_overlap", q72, Some(q72Sql)),
+    Query("q57_asof_attribution", q57, Some(q57Sql)),
+    Query("q50_quantile_buckets", q50, Some(q50Sql)),
+    Query("q46_percentile_disc", q46, Some(q46Sql)),
+    Query("q42_rollup_revenue", q42, Some(q42Sql)),
+    Query("q43_ntile_quartiles", q43, Some(q43Sql)),
+    Query("q15_anti_join", q15, Some(q15Sql)),
+    Query("q16_semi_join", q16, Some(q16Sql)),
+    Query("q17_json_extract", q17, Some(q17Sql)),
+    Query("q18_day_flags", q18, Some(q18Sql)),
+    Query("q19_distinct", q19, Some(q19Sql)),
+    Query("q20_minmax_audit", q20, Some(q20Sql)),
+    Query("q21_multikey_join", q21, Some(q21Sql)),
+    Query("q22_union_distinct", q22, Some(q22Sql)),
+    Query("q23_guarded_ratios", q23, Some(q23Sql)),
+    Query("q24_dim_fallback", q24, Some(q24Sql)),
+    Query("q25_unknown_audit", q25, Some(q25Sql)))
 }

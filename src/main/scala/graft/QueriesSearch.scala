@@ -620,21 +620,12 @@ object QueriesSearch {
        |FROM m GROUP BY n, bucket ORDER BY n, bucket""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q205_rouge_bleu" -> q205,
-    "q181_retrieval_eval" -> q181,
-    "q173_ndcg_eval" -> q173,
-    "q81_fuzzy_search" -> q81,
-    "q143_rrf_fusion" -> q143,
-    "q110_trigram_search" -> q110,
-    "q128_bm25_topk" -> q128)
-
-  val oracleSql: Map[String, String] = Map(
-    "q205_rouge_bleu" -> q205Sql,
-    "q181_retrieval_eval" -> q181Sql,
-    "q173_ndcg_eval" -> q173Sql,
-    "q81_fuzzy_search" -> q81Sql,
-    "q143_rrf_fusion" -> q143Sql,
-    "q110_trigram_search" -> q110Sql,
-    "q128_bm25_topk" -> q128Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q205_rouge_bleu", q205, Some(q205Sql)),
+    Query("q181_retrieval_eval", q181, Some(q181Sql)),
+    Query("q173_ndcg_eval", q173, Some(q173Sql)),
+    Query("q81_fuzzy_search", q81, Some(q81Sql)),
+    Query("q143_rrf_fusion", q143, Some(q143Sql)),
+    Query("q110_trigram_search", q110, Some(q110Sql)),
+    Query("q128_bm25_topk", q128, Some(q128Sql)))
 }

@@ -726,23 +726,13 @@ object QueriesSimilarity {
        |ORDER BY cluster""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q185_dbscan" -> q185,
-    "q175_grid_density" -> q175,
-    "q31_cosine_topk" -> q31,
-    "q32_ann_lsh_bucket" -> q32,
-    "q41_ann_ivf_probe" -> q41,
-    "q83_kmeans_train" -> q83,
-    "q108_power_iteration" -> q108,
-    "q155_pq_adc" -> q155)
-
-  val oracleSql: Map[String, String] = Map(
-    "q185_dbscan" -> q185Sql,
-    "q175_grid_density" -> q175Sql,
-    "q31_cosine_topk" -> q31Sql,
-    "q32_ann_lsh_bucket" -> q32Sql,
-    "q41_ann_ivf_probe" -> q41Sql,
-    "q83_kmeans_train" -> q83Sql,
-    "q108_power_iteration" -> q108Sql,
-    "q155_pq_adc" -> q155Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q185_dbscan", q185, Some(q185Sql)),
+    Query("q175_grid_density", q175, Some(q175Sql)),
+    Query("q31_cosine_topk", q31, Some(q31Sql)),
+    Query("q32_ann_lsh_bucket", q32, Some(q32Sql)),
+    Query("q41_ann_ivf_probe", q41, Some(q41Sql), Some("cents")),
+    Query("q83_kmeans_train", q83, Some(q83Sql), Some("cents")),
+    Query("q108_power_iteration", q108, Some(q108Sql)),
+    Query("q155_pq_adc", q155, Some(q155Sql)))
 }

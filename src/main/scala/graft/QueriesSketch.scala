@@ -899,29 +899,16 @@ object QueriesSketch {
        |FROM est e JOIN ex USING (grp, q_pct) JOIN rt USING (grp, q_pct)
        |ORDER BY e.grp, e.q_pct""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q217_quantile_sketch" -> q217,
-    "q218_quantile_serve" -> q218,
-    "q183_hll_portable" -> q183,
-    "q135_hist_quantiles" -> q135,
-    "q136_kmv_setops" -> q136,
-    "q138_cms_heavyhitters" -> q138,
-    "q139_bloom_audit" -> q139,
-    "q140_priority_sample" -> q140,
-    "q141_changepoint" -> q141,
-    "q157_trailing_burst" -> q157,
-    "q142_ams_f2" -> q142)
-
-  val oracleSql: Map[String, String] = Map(
-    "q217_quantile_sketch" -> q217Sql,
-    "q218_quantile_serve" -> q218Sql,
-    "q183_hll_portable" -> q183Sql,
-    "q135_hist_quantiles" -> q135Sql,
-    "q136_kmv_setops" -> q136Sql,
-    "q138_cms_heavyhitters" -> q138Sql,
-    "q139_bloom_audit" -> q139Sql,
-    "q140_priority_sample" -> q140Sql,
-    "q141_changepoint" -> q141Sql,
-    "q157_trailing_burst" -> q157Sql,
-    "q142_ams_f2" -> q142Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q217_quantile_sketch", q217, Some(q217Sql)),
+    Query("q218_quantile_serve", q218, Some(q218Sql)),
+    Query("q183_hll_portable", q183, Some(q183Sql)),
+    Query("q135_hist_quantiles", q135, Some(q135Sql)),
+    Query("q136_kmv_setops", q136, Some(q136Sql)),
+    Query("q138_cms_heavyhitters", q138, Some(q138Sql)),
+    Query("q139_bloom_audit", q139, Some(q139Sql)),
+    Query("q140_priority_sample", q140, Some(q140Sql)),
+    Query("q141_changepoint", q141, Some(q141Sql)),
+    Query("q157_trailing_burst", q157, Some(q157Sql)),
+    Query("q142_ams_f2", q142, Some(q142Sql)))
 }

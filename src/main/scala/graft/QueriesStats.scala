@@ -1907,67 +1907,35 @@ object QueriesStats {
        |FROM digest GROUP BY k_got ORDER BY k_got""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q198_negative_sampling" -> q198,
-    "q195_group_kfold" -> q195,
-    "q196_feature_hashing" -> q196,
-    "q197_loo_target_encoding" -> q197,
-    "q190_rank_transform" -> q190,
-    "q182_theilsen_trend" -> q182,
-    "q162_skew_audit" -> q162,
-    "q153_leadlag_xcorr" -> q153,
-    "q148_seasonal_backtest" -> q148,
-    "q145_skyline" -> q145,
-    "q87_exact_moments"     -> q87,
-    "q88_length_histogram"  -> q88,
-    "q89_temperature_mixture" -> q89,
-    "q94_cube_marginals"    -> q94,
-    "q95_above_nation_avg"  -> q95,
-    "q100_exact_corr"       -> q100,
-    "q101_outlier_days"     -> q101,
-    "q105_shard_plan"       -> q105,
-    "q106_mad_outliers"     -> q106,
-    "q109_zorder_layout"    -> q109,
-    "q206_zonemap_prune"    -> q206,
-    "q111_chisq_audit"      -> q111,
-    "q112_revenue_concentration" -> q112,
-    "q118_copurchase" -> q118,
-    "q134_item_cosine" -> q134,
-    "q172_item_recs" -> q172,
-    "q120_group_trend" -> q120,
-    "q122_systematic_sample" -> q122,
-    "q125_vocab_drift" -> q125,
-    "q126_ship_latency" -> q126)
-
-  val oracleSql: Map[String, String] = Map(
-    "q198_negative_sampling" -> q198Sql,
-    "q195_group_kfold" -> q195Sql,
-    "q196_feature_hashing" -> q196Sql,
-    "q197_loo_target_encoding" -> q197Sql,
-    "q190_rank_transform" -> q190Sql,
-    "q182_theilsen_trend" -> q182Sql,
-    "q162_skew_audit" -> q162Sql,
-    "q153_leadlag_xcorr" -> q153Sql,
-    "q148_seasonal_backtest" -> q148Sql,
-    "q145_skyline" -> q145Sql,
-    "q87_exact_moments"     -> q87Sql,
-    "q88_length_histogram"  -> q88Sql,
-    "q89_temperature_mixture" -> q89Sql,
-    "q94_cube_marginals"    -> q94Sql,
-    "q95_above_nation_avg"  -> q95Sql,
-    "q100_exact_corr"       -> q100Sql,
-    "q101_outlier_days"     -> q101Sql,
-    "q105_shard_plan"       -> q105Sql,
-    "q106_mad_outliers"     -> q106Sql,
-    "q109_zorder_layout"    -> q109Sql,
-    "q206_zonemap_prune"    -> q206Sql,
-    "q111_chisq_audit"      -> q111Sql,
-    "q112_revenue_concentration" -> q112Sql,
-    "q118_copurchase" -> q118Sql,
-    "q134_item_cosine" -> q134Sql,
-    "q172_item_recs" -> q172Sql,
-    "q120_group_trend" -> q120Sql,
-    "q122_systematic_sample" -> q122Sql,
-    "q125_vocab_drift" -> q125Sql,
-    "q126_ship_latency" -> q126Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q198_negative_sampling", q198, Some(q198Sql)),
+    Query("q195_group_kfold", q195, Some(q195Sql)),
+    Query("q196_feature_hashing", q196, Some(q196Sql)),
+    Query("q197_loo_target_encoding", q197, Some(q197Sql)),
+    Query("q190_rank_transform", q190, Some(q190Sql)),
+    Query("q182_theilsen_trend", q182, Some(q182Sql)),
+    Query("q162_skew_audit", q162, Some(q162Sql)),
+    Query("q153_leadlag_xcorr", q153, Some(q153Sql)),
+    Query("q148_seasonal_backtest", q148, Some(q148Sql)),
+    Query("q145_skyline", q145, Some(q145Sql)),
+    Query("q87_exact_moments", q87, Some(q87Sql)),
+    Query("q88_length_histogram", q88, Some(q88Sql)),
+    Query("q89_temperature_mixture", q89, Some(q89Sql)),
+    Query("q94_cube_marginals", q94, Some(q94Sql)),
+    Query("q95_above_nation_avg", q95, Some(q95Sql)),
+    Query("q100_exact_corr", q100, Some(q100Sql)),
+    Query("q101_outlier_days", q101, Some(q101Sql)),
+    Query("q105_shard_plan", q105, Some(q105Sql)),
+    Query("q106_mad_outliers", q106, Some(q106Sql)),
+    Query("q109_zorder_layout", q109, Some(q109Sql)),
+    Query("q206_zonemap_prune", q206, Some(q206Sql)),
+    Query("q111_chisq_audit", q111, Some(q111Sql)),
+    Query("q112_revenue_concentration", q112, Some(q112Sql)),
+    Query("q118_copurchase", q118, Some(q118Sql), Some("cut")),
+    Query("q134_item_cosine", q134, Some(q134Sql)),
+    Query("q172_item_recs", q172, Some(q172Sql)),
+    Query("q120_group_trend", q120, Some(q120Sql)),
+    Query("q122_systematic_sample", q122, Some(q122Sql)),
+    Query("q125_vocab_drift", q125, Some(q125Sql)),
+    Query("q126_ship_latency", q126, Some(q126Sql)))
 }

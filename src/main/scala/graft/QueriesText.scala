@@ -1337,58 +1337,31 @@ object QueriesText {
        |FROM per_doc GROUP BY n_segments ORDER BY n_segments""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q151_pmi_collocations" -> q151,
-    "q171_phash_neardup" -> q171,
-    "q174_audiofp_neardup" -> q174,
-    "q178_audio_segments" -> q178,
-    "q53_decontaminate" -> q53,
-    "q55_stratified_sample" -> q55,
-    "q56_mixture_sample" -> q56,
-    "q58_multimodal_resize" -> q58,
-    "q47_frame_sample" -> q47,
-    "q219_avi_frames" -> q219,
-    "q44_hash_split" -> q44,
-    "q40_approx_distinct" -> q40,
-    "q131_kmv_distinct" -> q131,
-    "q33_lang_id" -> q33,
-    "q211_langid_train" -> q211,
-    "q212_langid_eval" -> q212,
-    "q215_langid_wide_train" -> q215,
-    "q216_langid_wide_eval" -> q216,
-    "q34_quality_score" -> q34,
-    "q35_token_stats" -> q35,
-    "q36_fingerprint" -> q36,
-    "q37_multimodal_decode" -> q37,
-    "q82_image_decode" -> q82,
-    "q156_audio_decode" -> q156,
-    "q38_tie_records" -> q38,
-    "q39_token_explode" -> q39)
-
-  val oracleSql: Map[String, String] = Map(
-    "q151_pmi_collocations" -> q151Sql,
-    "q171_phash_neardup" -> q171Sql,
-    "q174_audiofp_neardup" -> q174Sql,
-    "q178_audio_segments" -> q178Sql,
-    "q53_decontaminate" -> q53Sql,
-    "q55_stratified_sample" -> q55Sql,
-    "q56_mixture_sample" -> q56Sql,
-    "q58_multimodal_resize" -> q58Sql,
-    "q47_frame_sample" -> q47Sql,
-    "q219_avi_frames" -> q219Sql,
-    "q44_hash_split" -> q44Sql,
-    "q131_kmv_distinct" -> q131Sql,
-    "q33_lang_id" -> q33Sql,
-    "q211_langid_train" -> q211Sql,
-    "q212_langid_eval" -> q212Sql,
-    "q215_langid_wide_train" -> q215Sql,
-    "q216_langid_wide_eval" -> q216Sql,
-    "q34_quality_score" -> q34Sql,
-    "q35_token_stats" -> q35Sql,
-    "q36_fingerprint" -> q36Sql,
-    "q37_multimodal_decode" -> q37Sql,
-    "q82_image_decode" -> q82Sql,
-    "q156_audio_decode" -> q156Sql,
-    "q38_tie_records" -> q38Sql,
-    "q39_token_explode" -> q39Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q151_pmi_collocations", q151, Some(q151Sql)),
+    Query("q171_phash_neardup", q171, Some(q171Sql)),
+    Query("q174_audiofp_neardup", q174, Some(q174Sql)),
+    Query("q178_audio_segments", q178, Some(q178Sql)),
+    Query("q53_decontaminate", q53, Some(q53Sql)),
+    Query("q55_stratified_sample", q55, Some(q55Sql)),
+    Query("q56_mixture_sample", q56, Some(q56Sql)),
+    Query("q58_multimodal_resize", q58, Some(q58Sql)),
+    Query("q47_frame_sample", q47, Some(q47Sql)),
+    Query("q219_avi_frames", q219, Some(q219Sql)),
+    Query("q44_hash_split", q44, Some(q44Sql)),
+    Query("q40_approx_distinct", q40, None),
+    Query("q131_kmv_distinct", q131, Some(q131Sql)),
+    Query("q33_lang_id", q33, Some(q33Sql)),
+    Query("q211_langid_train", q211, Some(q211Sql), Some("state")),
+    Query("q212_langid_eval", q212, Some(q212Sql), Some("state")),
+    Query("q215_langid_wide_train", q215, Some(q215Sql), Some("state")),
+    Query("q216_langid_wide_eval", q216, Some(q216Sql), Some("state")),
+    Query("q34_quality_score", q34, Some(q34Sql)),
+    Query("q35_token_stats", q35, Some(q35Sql)),
+    Query("q36_fingerprint", q36, Some(q36Sql)),
+    Query("q37_multimodal_decode", q37, Some(q37Sql)),
+    Query("q82_image_decode", q82, Some(q82Sql)),
+    Query("q156_audio_decode", q156, Some(q156Sql)),
+    Query("q38_tie_records", q38, Some(q38Sql)),
+    Query("q39_token_explode", q39, Some(q39Sql)))
 }

@@ -241,11 +241,7 @@ object QueriesTokenizer {
        |GROUP BY source ORDER BY source""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q80_bpe_merge_round3" -> q80,
-    "q104_bpe_encode" -> q104)
-
-  val oracleSql: Map[String, String] = Map(
-    "q80_bpe_merge_round3" -> q80Sql,
-    "q104_bpe_encode" -> q104Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q80_bpe_merge_round3", q80, Some(q80Sql)),
+    Query("q104_bpe_encode", q104, Some(q104Sql), Some("merges")))
 }

@@ -1,8 +1,8 @@
 package graft
 
-/** The `SPARK_GRAFT_ONLY` query-name filter shared by [[Verify]] and
-  * [[Bench]]: comma/space-separated substrings, a query runs if its name
-  * contains any of them; unset (or blank) selects everything. */
+/** The `SPARK_GRAFT_ONLY` query-name filter shared by [[Verify]],
+  * [[Bench]] and [[Plans]]: comma/space-separated substrings, a query runs
+  * if its name contains any of them; unset (or blank) selects everything. */
 object QueryFilter {
   def fromEnv(env: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
       : String => Boolean = {

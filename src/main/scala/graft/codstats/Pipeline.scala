@@ -52,13 +52,14 @@ object Pipeline {
     * and the rebuild runs even on an empty tick so meta.updatedAt always
     * reflects the last successful run.
     *
-    * Idempotency: each batch anti-joins the store's existing
-    * (game_id, player_uno_id) keys before appending — the reference's
-    * INSERT OR IGNORE (its parser does the same NOT-IN over all ingested
-    * keys, parse_matches.sh:580-596). This guards BOTH re-delivered
-    * documents under new filenames AND foreachBatch replays after a crash
-    * between the append and the checkpoint commit. At scale the key read
-    * is column-pruned to the two id columns.
+    * Idempotency: each batch keeps one row per (game_id, player_uno_id)
+    * and anti-joins the store's existing keys before appending — the
+    * reference's INSERT OR IGNORE (its parser does the same NOT-IN over all
+    * ingested keys, parse_matches.sh:580-596). This guards re-delivered
+    * documents under new filenames, whether they land in a later tick or in
+    * the same one, AND foreachBatch replays after a crash between the
+    * append and the checkpoint commit. At scale the key read is
+    * column-pruned to the two id columns.
     */
   def continuousRun(spark: SparkSession, landingDir: String,
                     checkpointDir: String, factDir: String, reportDir: String,
@@ -76,9 +77,10 @@ object Pipeline {
       .trigger(Trigger.AvailableNow())
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        val unique = batch.dropDuplicates("game_id", "player_uno_id")
         val fresh = (store() match {
-          case Some(existing) => Normalize.newGamesOnly(batch, existing)
-          case None           => batch
+          case Some(existing) => Normalize.newGamesOnly(unique, existing)
+          case None           => unique
         }).localCheckpoint()
         // a zero-row batch must not create a data-less factDir (parquet
         // schema inference would fail on the next store() read)

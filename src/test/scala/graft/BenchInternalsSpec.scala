@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The anomaly recorder's pure helpers: the stage-interval union (what
   * `uncovered_s` — the driver-stall column — is computed from) and the
-  * JSON string escaper for stage names. */
+  * JSON string escaper shared with Verify's oracle_sql.json. */
 class BenchInternalsSpec extends AnyFunSuite {
 
   test("coveredSec unions overlapping, nested, and disjoint intervals") {
@@ -22,9 +22,10 @@ class BenchInternalsSpec extends AnyFunSuite {
   }
 
   test("jsonStr escapes quotes, backslashes, and control chars") {
-    assert(Bench.jsonStr("plain") == "\"plain\"")
-    assert(Bench.jsonStr("a\"b") == "\"a\\\"b\"")
-    assert(Bench.jsonStr("a\\b") == "\"a\\\\b\"")
-    assert(Bench.jsonStr("a\nb\tc") == "\"a b c\"")
+    assert(Json.str("plain") == "\"plain\"")
+    assert(Json.str("a\"b") == "\"a\\\"b\"")
+    assert(Json.str("a\\b") == "\"a\\\\b\"")
+    assert(Json.str("a\nb\tc\rd") == "\"a\\nb\\tc\\rd\"")
+    assert(Json.str("a\u0001b") == "\"a\\u0001b\"")
   }
 }

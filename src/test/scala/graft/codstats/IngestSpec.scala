@@ -134,6 +134,31 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(fact).count() == 1L)
   }
 
+  test("continuousRun: two copies of one document in the same tick append once") {
+    val landing = Files.createTempDirectory("graft_d_landing")
+    val fact = Files.createTempDirectory("graft_d_fact").toString + "/store"
+    val ckpt = Files.createTempDirectory("graft_d_ckpt")
+    val reports = Files.createTempDirectory("graft_d_reports")
+    val players = Seq(Model.Player("u1", "p1", is_core = true)).toDS()
+    val seasons = Model.seedSeasons.map { case (id, a, b) => Model.Season(id,
+      java.sql.Timestamp.from(java.time.Instant.parse(a)),
+      java.sql.Timestamp.from(java.time.Instant.parse(b))) }.toDS()
+    def tick(): Unit = Pipeline.continuousRun(spark, landing.toString,
+      ckpt.toString, fact, reports.toString,
+      players, Model.seedGameModes.toDS(), seasons)
+    // first tick: no store yet, so only the in-batch dedup can drop the copy
+    writeDoc(landing, "match_m1_u1.json", "m1", "u1", 1590000000L)
+    writeDoc(landing, "match_m1_u1_copy.json", "m1", "u1", 1590000000L)
+    tick()
+    assert(spark.read.parquet(fact).count() == 1L)
+    // later tick: the store anti-join runs too, on the deduplicated batch
+    writeDoc(landing, "match_m2_u1.json", "m2", "u1", 1590003600L)
+    writeDoc(landing, "match_m2_u1_copy.json", "m2", "u1", 1590003600L)
+    tick()
+    val keys = spark.read.parquet(fact).select("game_id").as[String].collect()
+    assert(keys.sorted.toSeq == Seq("m1", "m2"))
+  }
+
   test("recoverFactStore drops whole-store leftovers once the swap completed") {
     val base = Files.createTempDirectory("graft_rec").toString
     val dir = base + "/store"

@@ -40,9 +40,9 @@ FAMILIES = {
     "quant": ["q44", "q50", "q55", "q56", "q63", "q89", "q122", "q168",
               "q169", "q170", "q173", "q181", "q187", "q195", "q198", "q205",
               "q208", "q209", "q210", "q214"],
-    "stats": ["q87", "q100", "q101", "q106", "q108", "q111", "q112", "q121",
-              "q126", "q141", "q147", "q148", "q153", "q159", "q162", "q163",
-              "q164", "q182", "q184", "q189", "q190", "q197"],
+    "stats": ["q87", "q100", "q101", "q105", "q106", "q108", "q109", "q111",
+              "q112", "q121", "q126", "q147", "q148", "q153", "q159", "q162",
+              "q163", "q164", "q182", "q184", "q189", "q190", "q197"],
     "behavior": ["q90", "q91", "q92", "q93", "q96", "q97", "q103", "q115",
                  "q117", "q123", "q124", "q132", "q150", "q152", "q158",
                  "q160", "q161", "q165"],
