@@ -238,9 +238,8 @@ object Pipeline {
     "headshots", "damage_done", "distance_traveled", "monsters", "gooseeggs")
 
   private def renameCumalative(df: DataFrame): DataFrame =
-    cumalativeKeys.foldLeft(df.withColumnRenamed("kd_cum", "cumalative_kd")) {
-      (d, m) => d.withColumnRenamed(s"${m}_cum", s"cumalative_$m")
-    }
+    df.withColumnsRenamed((("kd" +: cumalativeKeys).map(m =>
+      s"${m}_cum" -> s"cumalative_$m")).toMap)
 
   /** The frozen report-tree inventory (FIXTURES.md §4 ↔ the files the
     * reference frontend loads, generate_lookup_data.sh): one entry per
@@ -259,9 +258,28 @@ object Pipeline {
 
   /** Materialize the standard report set under `outDir` — one directory
     * per file the reference frontend loads (write_meta +
-    * write_leaderboards + per-player loops, generate_lookup_data.sh). */
+    * write_leaderboards + per-player loops, generate_lookup_data.sh).
+    *
+    * The stats view (`ctx.stats`: fact ⨝ players ⨝ tracked modes) is
+    * persisted once for the rebuild and every report family reads that one
+    * copy. The reference keeps its normalized layer as a materialized table
+    * for the same reason: its view version was ~100x slower
+    * (parse_matches.sh:62-65). Without it, the 11 families built on the
+    * view re-scan the fact store and re-join both dims, 12 times per
+    * rebuild (player_stats reads the view twice); with it, once. Only the
+    * unknown-mode audit, which reads the fact rows before the tracked-mode
+    * filter, scans the store apart. The level is
+    * MEMORY_AND_DISK (`persist()`), so at scale the view spills to local
+    * disk instead of being recomputed. It is released in a `finally`, so a
+    * failed write leaves no cached data behind.
+    */
   def runReports(ctx: Context, outDir: String): Unit = {
-    val s = ctx.stats
+    val s = ctx.stats.persist()
+    try writeReports(ctx, s, outDir)
+    finally s.unpersist()
+  }
+
+  private def writeReports(ctx: Context, s: DataFrame, outDir: String): Unit = {
     writeJsonReport(ctx.spark.sql(
       "SELECT unix_millis(current_timestamp()) AS updatedAt"), s"$outDir/meta")
     writeJsonReport(Reports.seasonsDoc(ctx.seasons), s"$outDir/seasons")

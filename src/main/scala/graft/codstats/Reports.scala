@@ -392,22 +392,15 @@ object Reports {
     val d  = col("deaths_cum")
     val gk = col("gulag_kills_cum")
     val gd = col("gulag_deaths_cum")
-    framed
-      .withColumn("kd_cum", when(d === 0.0, k).otherwise(k / d))
-      .withColumn("kills_per_game",
-        when(m === 0.0, 0.0).otherwise(k / m))
-      .withColumn("deaths_per_game",
-        when(m === 0.0, 0.0).otherwise(d / m))
-      .withColumn("dmg_per_game",
-        when(m === 0.0, 0.0).otherwise(col("damage_done_cum") / m))
-      .withColumn("dmg_per_kill",
-        when(k === 0.0, 0.0).otherwise(col("damage_done_cum") / k))
-      .withColumn("gulag_win_pct",
-        when(gk + gd === 0.0, 0.0).otherwise(lit(100.0) * gk / (gk + gd)))
-      .withColumn("monster_pct",
-        when(m === 0.0, 0.0).otherwise(lit(100.0) * col("monsters_cum") / m))
-      .withColumn("gooseegg_pct",
-        when(m === 0.0, 0.0).otherwise(lit(100.0) * col("gooseeggs_cum") / m))
+    framed.select(col("*"),
+      when(d === 0.0, k).otherwise(k / d).as("kd_cum"),
+      when(m === 0.0, 0.0).otherwise(k / m).as("kills_per_game"),
+      when(m === 0.0, 0.0).otherwise(d / m).as("deaths_per_game"),
+      when(m === 0.0, 0.0).otherwise(col("damage_done_cum") / m).as("dmg_per_game"),
+      when(k === 0.0, 0.0).otherwise(col("damage_done_cum") / k).as("dmg_per_kill"),
+      when(gk + gd === 0.0, 0.0).otherwise(lit(100.0) * gk / (gk + gd)).as("gulag_win_pct"),
+      when(m === 0.0, 0.0).otherwise(lit(100.0) * col("monsters_cum") / m).as("monster_pct"),
+      when(m === 0.0, 0.0).otherwise(lit(100.0) * col("gooseeggs_cum") / m).as("gooseegg_pct"))
   }
 
   /** Per-game series — the by-game twin of [[timeSeries]]

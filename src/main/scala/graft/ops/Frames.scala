@@ -15,9 +15,16 @@ import org.apache.spark.sql.functions._
   * segment-tree windowed aggregation sums in a different order than Spark's
   * buffer scan.
   *
-  * At 100 TB: one shuffle on the partition key; all k-frames and the
-  * cumulative frame share a single sort. Frames are per-entity, so a series
-  * of any length streams through a single ordered scan.
+  * Each function adds all of its frames in ONE projection, appended after the
+  * input's columns in a fixed order. The analyzer groups window expressions
+  * that share a (partition, order) spec into one logical `Window` operator,
+  * so every k-frame and the cumulative frame of every measure come out of
+  * exactly one `Window`: one shuffle on the partition key and one sort,
+  * whatever the number of measures × frames. A fold of `withColumn` calls
+  * instead leaves one `Window` per few columns, each with its own sort (7
+  * for a 12-measure × 2-frame series). `FramesPlanSpec` pins the single
+  * `Window` and the column order. Frames are per-entity, so a series of any
+  * length streams through a single ordered scan.
   */
 object Frames {
 
@@ -29,16 +36,14 @@ object Frames {
                             measures: Seq[(String, Column)], ks: Seq[Int],
                             scale: Double): DataFrame = {
     val base = Window.partitionBy(entity).orderBy(order)
-    measures.foldLeft(df) { case (acc, (name, m)) =>
-      val withSma = ks.foldLeft(acc) { (a, k) =>
+    val cumW = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.select(col("*") +: measures.flatMap { case (name, m) =>
+      ks.map { k =>
         val w = base.rowsBetween(-(k - 1), Window.currentRow)
-        a.withColumn(s"${name}_sma$k",
-          sum(m).over(w).cast("double") / (count(lit(1)).over(w) * scale).cast("double"))
-      }
-      withSma.withColumn(s"${name}_cum",
-        sum(m).over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double") / scale)
-    }
+        (sum(m).over(w).cast("double") / (count(lit(1)).over(w) * scale).cast("double"))
+          .as(s"${name}_sma$k")
+      } :+ (sum(m).over(cumW).cast("double") / scale).as(s"${name}_cum")
+    }: _*)
   }
 
   /** The reference's series buckets verbatim: trailing-k-frame SUMS (its
@@ -48,9 +53,8 @@ object Frames {
     * sum(...) OVER k-frames for 10 measures, avg(kdRatio/scorePerMinute)).
     *
     * Emits `<name>_s<k>` + `<name>_cum` per sum measure and `<name>_a<k>`
-    * + `<name>_cuma` per avg measure. All frames share the one
-    * (entity, order) sort — a single shuffle + single ordered scan
-    * regardless of how many measures × frames are requested.
+    * + `<name>_cuma` per avg measure, in that order (sum measures first).
+    * All frames sit in one logical `Window` over the (entity, order) sort.
     */
   def rollingSumsAndAvgs(df: DataFrame, entity: Seq[Column], order: Column,
                          sumMeasures: Seq[(String, Column)],
@@ -58,17 +62,13 @@ object Frames {
                          ks: Seq[Int]): DataFrame = {
     val base = Window.partitionBy(entity: _*).orderBy(order)
     val cumW = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withSums = sumMeasures.foldLeft(df) { case (acc, (name, m)) =>
-      ks.foldLeft(acc) { (a, k) =>
-        a.withColumn(s"${name}_s$k",
-          sum(m).over(base.rowsBetween(-(k - 1), Window.currentRow)))
-      }.withColumn(s"${name}_cum", sum(m).over(cumW))
-    }
-    avgMeasures.foldLeft(withSums) { case (acc, (name, m)) =>
-      ks.foldLeft(acc) { (a, k) =>
-        a.withColumn(s"${name}_a$k",
-          avg(m).over(base.rowsBetween(-(k - 1), Window.currentRow)))
-      }.withColumn(s"${name}_cuma", avg(m).over(cumW))
-    }
+    def frames(measures: Seq[(String, Column)], agg: Column => Column,
+               kSuffix: String, cumSuffix: String): Seq[Column] =
+      measures.flatMap { case (name, m) =>
+        ks.map(k => agg(m).over(base.rowsBetween(-(k - 1), Window.currentRow))
+          .as(s"${name}_$kSuffix$k")) :+ agg(m).over(cumW).as(s"${name}_$cumSuffix")
+      }
+    df.select(col("*") +: (frames(sumMeasures, sum, "s", "cum") ++
+      frames(avgMeasures, avg, "a", "cuma")): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.codstats
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 import Model._
@@ -286,6 +287,40 @@ class PipelineSpec extends SparkSpec {
       .listFiles().filter(_.getName.startsWith("season_id=")).map(_.getName).toSet
     // alice's games fall in s1; 'lifetime' overlaps everything
     assert(aliceSeasons == Set("season_id=s1", "season_id=lifetime"))
+  }
+
+  /** Runs `body` and returns the persistent RDDs it left registered (the
+    * shared session may already hold other suites' checkpoints). */
+  private def leftPersisted(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  test("runReports releases its persisted stats view on return") {
+    val out = java.nio.file.Files.createTempDirectory("graft_reports").toString
+    assert(leftPersisted(Pipeline.runReports(ctx, out)).isEmpty)
+    assert(ctx.stats.storageLevel == StorageLevel.NONE)
+  }
+
+  test("runReports releases the stats view when a report write throws") {
+    // outDir below a regular file: the first write fails, before the view
+    // is materialized (it is registered with the cache all the same)
+    val file = java.nio.file.Files.createTempFile("graft_reports", ".txt")
+    assert(leftPersisted(intercept[Exception](
+      Pipeline.runReports(ctx, s"$file/reports"))).isEmpty)
+    assert(ctx.stats.storageLevel == StorageLevel.NONE)
+    // a player id too long for a directory name fails the partitioned
+    // sessions write, after the view-backed reports materialized it
+    val longId = "p" * 300
+    val players = Seq(Player("uno-alice", longId, is_core = true)).toDS()
+    val failing = ctx.copy(players = players)
+    val out = java.nio.file.Files.createTempDirectory("graft_reports").toString
+    assert(leftPersisted(intercept[Exception](
+      Pipeline.runReports(failing, out))).isEmpty)
+    assert(failing.stats.storageLevel == StorageLevel.NONE)
+    assert(new java.io.File(s"$out/leaderboards").isDirectory)
+    assert(!new java.io.File(s"$out/time_series").exists())
   }
 
   test("player stats doc: one row per player, season-ordered metrics+placements") {
