@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.annotation.JsonFormat
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: every SparkEntry query timed at SPARK_GRAFT_SF_DIR,
@@ -96,8 +99,8 @@ object Bench {
   /** Passive stage recorder for the whole ledger run. The recurring
     * driver-session anomaly (q146 rep-1 = 55 s / 12 GB allocated while
     * every builder-side rerun of the same code+data is clean) never
-    * reproduces where the SPARK_GRAFT_ER_STAGES knob can be turned on,
-    * so the bisect has to ride along in the driver session itself:
+    * reproduces where a diagnostic knob can be turned on, so the bisect
+    * has to ride along in the driver session itself:
     * listener events are free, collected for every query, and only
     * SERIALIZED for reps that trip the anomaly threshold — the artifact
     * then names the stage (or, if the wall is not covered by any stage,
@@ -154,28 +157,72 @@ object Bench {
     tot / 1e3
   }
 
+  /** One timed rep: wall seconds, GC ms inside it, heap MB before and
+    * after, its wall-clock window (epoch ms — matched against the stage
+    * recorder's intervals after the ledger, so listener-bus async posting
+    * can't race the read) and its Catalyst phase durations (ms). */
+  private[graft] final case class Rep(sec: Double, gcMs: Long,
+      heapBeforeMb: Long, heapAfterMb: Long, w0: Long, w1: Long,
+      phasesMs: Map[String, Long]) {
+    def row: RepRow = RepRow(Mains.r3(sec), gcMs, heapBeforeMb, heapAfterMb)
+  }
+
+  /** A rep as the detail file publishes it: `[sec, gc_ms, heap_before_mb,
+    * heap_after_mb]`. */
+  @JsonFormat(shape = JsonFormat.Shape.ARRAY)
+  final case class RepRow(sec: Double, gcMs: Long, heapBeforeMb: Long,
+      heapAfterMb: Long)
+
+  /** Session state after a query: GC ms across its reps, code-cache and
+    * heap MB once it is released. */
+  final case class Telemetry(gcMs: Long, codeCacheMb: Long, heapMb: Long)
+
+  /** One query's ledger result: best-of-N seconds (-1 when no rep
+    * succeeded), the steady-state spread (-1 when unknown), the session
+    * telemetry, and its successful reps in run order. */
+  private[graft] final case class QueryRun(name: String, best: Double,
+      spread: Double, telemetry: Telemetry, reps: Seq[Rep])
+
+  /** One stage inside an anomalous rep's window. */
+  final case class AnomalyStage(offS: Double, durS: Double, runS: Double,
+      gcS: Double, tasks: Int, inMb: Long, shRdMb: Long, shWrMb: Long,
+      spillMb: Long, peakMb: Long, name: String)
+
+  /** An anomalous rep's breakdown: stage coverage, the wall no stage
+    * covers, its Catalyst phases and the wall no job covers. */
+  final case class Anomaly(rep: Int, sec: Double, nStages: Int,
+      stageCoveredS: Double, uncoveredS: Double,
+      phasesS: ListMap[String, Double], jobGapS: Double,
+      stages: Seq[AnomalyStage])
+
+  /** The full ledger, written to the detail file. */
+  final case class Detail(metric: String, value: Double, unit: String,
+      coldSum: Double, sentinelStart: Double, sentinelEnd: Double,
+      queries: ListMap[String, Double], spreads: ListMap[String, Double],
+      telemetry: ListMap[String, Telemetry],
+      reps: ListMap[String, Seq[RepRow]],
+      cacheServed: ListMap[String, String],
+      anomalies: ListMap[String, Seq[Anomaly]], errors: Seq[String],
+      sf: String)
+
+  /** The last stdout line: the headline, counts and the slowest queries,
+    * small enough to survive a ~2 KiB stdout tail whole. */
+  final case class Summary(metric: String, value: Double, unit: String,
+      coldSum: Double, nQueries: Int, nAnomalies: Int,
+      sentinelStart: Double, sentinelEnd: Double, errors: Seq[String],
+      slowest: ListMap[String, Double], queriesDetail: String, sf: String)
+
+  /** Anomalous-rep rule: a rep ≥ 5 s that is also ≥ 3× the query's best,
+    * or any rep ≥ 15 s. */
+  private[graft] def anomalous(sec: Double, best: Double): Boolean =
+    sec >= 15.0 || (sec >= 5.0 && best > 0 && sec >= 3 * best)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_DETAIL.json")
-    val spark = buildSession()
+    val spark = Mains.session()
     runLedger(spark, sfDir, out)
     spark.stop()
-  }
-
-  def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // scaling-study knob: decouple shuffle partitions from thread count
-    // (partition-size sensitivity is how a plateau is attributed to
-    // bandwidth vs a serial stage); defaults to threads as before
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   /** One full ledger over `sfDir`, written to `out` — extracted so
@@ -202,32 +249,8 @@ object Bench {
 
     // Optional SPARK_GRAFT_ONLY name filter for local iteration.
     val onlySelected = QueryFilter.fromEnv()
-    val sortedQs = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => onlySelected(n) }
-    // Run-order knob for session-state experiments (the r10 q146/q148
-    // driver anomaly was run-order-coupled: contiguous sorted-order
-    // neighborhood slow in one session, same code fast in another).
-    // sorted (default) | reversed | rotate:N (sorted, rotated left N).
-    // If a query is slow only when ~190 queries precede it, the cause
-    // is session residue, not the query's plan.
-    val order = sys.env.getOrElse("SPARK_GRAFT_ORDER", "sorted")
-    val selected = order match {
-      case "reversed" => sortedQs.reverse
-      case r if r.startsWith("rotate:") =>
-        // a malformed rotate count must not abort the whole ledger —
-        // fall back to sorted order with a named complaint on stderr
-        r.stripPrefix("rotate:").toIntOption match {
-          case Some(k0) if sortedQs.nonEmpty =>
-            val k = ((k0 % sortedQs.size) + sortedQs.size) % sortedQs.size
-            sortedQs.drop(k) ++ sortedQs.take(k)
-          case Some(_) => sortedQs
-          case None =>
-            System.err.println(s"[bench] SPARK_GRAFT_ORDER='$r' is not " +
-              "rotate:<int>; running sorted order")
-            sortedQs
-        }
-      case _ => sortedQs
-    }
     // Best-of-2 per query: the host shows 2-3x run-to-run noise (shared
     // VM), and min-of-repetitions is the standard way to measure the
     // query rather than the machine's mood. A query that throws is
@@ -248,28 +271,18 @@ object Bench {
     // high-spread query is host noise until it clears the spread.
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMillis()
-      // Per-rep ledger: (sec, gc_ms inside this rep, heap_mb before,
-      // heap_mb after). The r10/r12 driver sessions showed q146 at
-      // 15-25 s best-of-N with ~20 s of GC charged somewhere inside its
-      // reps while all four same-round runs measured 1.7-4.4 s — and the
+      // Per-rep rows: the r10/r12 driver sessions showed q146 at 15-25 s
+      // best-of-N with ~20 s of GC charged somewhere inside its reps
+      // while all four same-round runs measured 1.7-4.4 s — and the
       // per-QUERY gc_ms column cannot distinguish "one catastrophic rep"
       // (a session-state collision: some earlier query's deferred bill
       // landing here) from "all reps slow" (the query itself). Rep-level
       // rows answer that directly: a single outlier rep with the GC
       // spike names session residue; uniform slow reps name the plan.
-      val repRows = scala.collection.mutable.ArrayBuffer
-        .empty[(Double, Long, Long, Long)]
-      // wall-clock window of each rep (epoch ms) — matched against the
-      // stage recorder's intervals at emit time (post-hoc, so listener-
-      // bus async posting can't race the read)
-      val repWindows = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long)]
-      // per-rep Catalyst phase durations (analysis / optimization /
-      // planning, ms) from QueryPlanningTracker — the named share of
-      // any uncovered_s driver stall; appended only on success so the
-      // three rep buffers stay index-aligned
-      val repPhases = scala.collection.mutable.ArrayBuffer
-        .empty[Map[String, Long]]
+      // Catalyst phase durations (analysis / optimization / planning)
+      // come from QueryPlanningTracker — the named share of any
+      // uncovered_s driver stall. Only successful reps are recorded.
+      val reps = scala.collection.mutable.ArrayBuffer.empty[Rep]
       def rep(): Option[Double] = {
         val h0 = heapUsed() >> 20; val g0 = gcMillis()
         val w0 = System.currentTimeMillis()
@@ -277,10 +290,9 @@ object Bench {
         try { val qe = fn(spark, sfDir).queryExecution
           qe.toRdd.count()
           val sec = (System.nanoTime() - t0) / 1e9
-          repRows += ((sec, gcMillis() - g0, h0, heapUsed() >> 20))
-          repWindows += ((w0, System.currentTimeMillis()))
-          repPhases += qe.tracker.phases
-            .map { case (k, v) => k -> v.durationMs }.toMap
+          reps += Rep(sec, gcMillis() - g0, h0, heapUsed() >> 20, w0,
+            System.currentTimeMillis(),
+            qe.tracker.phases.map { case (k, v) => k -> v.durationMs }.toMap)
           Some(sec) }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
@@ -338,146 +350,104 @@ object Bench {
       // so the column now answers "did memory actually return before the
       // next query started" — a climbing heap_mb under flat sentinels is
       // a genuine leak (an unreleased reference), not GC laziness.
-      val tele = (gcMillis() - gc0, codeCacheUsed() >> 20, heapUsed() >> 20)
-      (name, times.minOption.getOrElse(-1.0), spread, tele, repRows.toList,
-        repWindows.toList, repPhases.toList)
+      QueryRun(name, times.minOption.getOrElse(-1.0), spread,
+        Telemetry(gcMillis() - gc0, codeCacheUsed() >> 20, heapUsed() >> 20),
+        reps.toList)
     }
     val sentinelEnd = sentinel3()
     spark.sparkContext.removeSparkListener(recorder)
-    val qs = results.map { case (k, v, _, _, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errors = results
-      .collect { case (k, v, _, _, _, _, _) if v < 0 => s"\"$k\"" }
-      .mkString("[", ",", "]")
-    val spreads = results
-      .map { case (k, _, sp, _, _, _, _) =>
-        s"\"" + k + "\":" + (math.round(sp * 1000) / 1000.0) }
-      .mkString("{", ",", "}")
-    val telemetry = results
-      .map { case (k, _, _, (gc, cc, hp), _, _, _) =>
-        s"\"" + k + s"\":{\"gc_ms\":$gc,\"code_cache_mb\":$cc,\"heap_mb\":$hp}" }
-      .mkString("{", ",", "}")
-    // Per-rep rows (BENCH_DETAIL only — the headline stays best-of-N):
-    // [sec, gc_ms, heap_before_mb, heap_after_mb] per rep in run order.
-    val reps = results
-      .map { case (k, _, _, _, rs, _, _) =>
-        val arr = rs.map { case (sec, gc, hb, ha) =>
-          s"[${math.round(sec * 1000) / 1000.0},$gc,$hb,$ha]" }
-          .mkString("[", ",", "]")
-        s"\"" + k + "\":" + arr }
-      .mkString("{", ",", "}")
-    def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    // Anomalous-rep stage ledgers: a rep ≥ 5 s that is also ≥ 3× the
-    // query's best (or any rep ≥ 15 s) gets its stage breakdown
-    // serialized — top stages by wall inside the rep's window, plus the
-    // wall NOT covered by any stage (= driver-side analysis/codegen/AQE
-    // time). This is the q146 cold-rep bisect running passively in
-    // whatever session the storm actually strikes.
-    val allStages = {
+    val anomalies = {
       import scala.jdk.CollectionConverters._
-      recorder.recs.asScala.toVector
+      val stages = recorder.recs.asScala.toVector
+      val jobs = recorder.jobs.asScala.toVector
+      ListMap.from(results.map(q => q.name -> anomaliesOf(q, stages, jobs))
+        .filter(_._2.nonEmpty))
     }
-    def mb(b: Long): Long = b >> 20
-    // SPARK_GRAFT_ANOM_SEC lowers the trip wire for local validation of
-    // the serialization path (default 5 s + 3× best, or 15 s flat).
-    val anomSec = sys.env.get("SPARK_GRAFT_ANOM_SEC")
-      .flatMap(_.toDoubleOption).getOrElse(5.0)
-    val allJobs = {
-      import scala.jdk.CollectionConverters._
-      recorder.jobs.asScala.toVector
-    }
-    val anomalies = results.flatMap { case (k, best, _, _, rs, ws, ps) =>
-      val entries = rs.zip(ws).zipWithIndex.collect {
-        case (((sec, _, _, _), (w0, w1)), i)
-            if sec >= 15.0 ||
-              (sec >= anomSec && best > 0 && sec >= 3 * best) =>
-          val inWin = allStages
-            .filter(r => r.doneMs >= w0 && r.subMs <= w1 && r.subMs >= 0)
-          // each interval CLIPPED to the rep window before the union: a
-          // stage spanning in from a prior rep must not inflate
-          // stage_covered_s past the rep wall (it can otherwise mask
-          // the uncovered_s driver-stall signal this bisect exists for)
-          val covered = coveredSec(inWin.map(r =>
-            (math.max(r.subMs, w0), math.min(r.doneMs, w1))))
-          // uncovered_s decomposition: Catalyst phase durations from
-          // the rep's QueryPlanningTracker (analysis / optimization /
-          // planning — pre-execution driver work) plus job_gap_s (wall
-          // inside the window covered by NO job — AQE re-planning and
-          // scheduling between jobs). The remainder is codegen +
-          // result handling.
-          val phases = ps.lift(i).getOrElse(Map.empty)
-            .toSeq.sortBy(_._1)
-            .map { case (n, ms) => s"${Json.str(n)}:${r3(ms / 1e3)}" }
-            .mkString("{", ",", "}")
-          val jobCovered = coveredSec(allJobs
-            .filter(j => j._2 >= w0 && j._1 <= w1 && j._1 >= 0)
-            .map(j => (math.max(j._1, w0), math.min(j._2, w1))))
-          // off_s = stage submission offset from rep start: AQE-
-          // materialized stages carry framework-thread callsites (no
-          // graft frame to name), so the TIMELINE plus the data-volume
-          // columns carry the bisect for them
-          val top = inWin.sortBy(r => -(r.doneMs - r.subMs)).take(8)
-            .map { r =>
-              s"""{"off_s":${r3(math.max(0L, r.subMs - w0) / 1e3)},""" +
-                s""""dur_s":${r3((r.doneMs - r.subMs) / 1e3)},""" +
-                s""""run_s":${r3(r.runMs / 1e3)},"gc_s":${r3(r.gcMs / 1e3)},""" +
-                s""""tasks":${r.tasks},"in_mb":${mb(r.inB)},""" +
-                s""""sh_rd_mb":${mb(r.srB)},"sh_wr_mb":${mb(r.swB)},""" +
-                s""""spill_mb":${mb(r.spillB)},"peak_mb":${mb(r.peakB)},""" +
-                s""""name":${Json.str(r.name.take(100))}}"""
-            }.mkString("[", ",", "]")
-          s"""{"rep":${i + 1},"sec":${r3(sec)},"n_stages":${inWin.size},""" +
-            s""""stage_covered_s":${r3(covered)},""" +
-            s""""uncovered_s":${r3(math.max(0.0, sec - covered))},""" +
-            s""""phases_s":$phases,""" +
-            s""""job_gap_s":${r3(math.max(0.0, sec - jobCovered))},""" +
-            s""""stages":$top}"""
-      }
-      if (entries.isEmpty) None
-      else Some(s"\"" + k + "\":" + entries.mkString("[", ",", "]"))
-    }.mkString("{", ",", "}")
-    // cold_sum = sum of FIRST reps: the cache-honest companion to the
-    // best-of-N headline — one-time builds (session caches, codegen,
-    // scan warmup) land in rep 1 and are excluded from `value`, so the
-    // pair brackets the engine between cold and warm steady-state.
-    val coldSum = results.flatMap(_._5.headOption.map(_._1)).sum
-    val cacheServed =
-      SparkEntry.registry.flatMap(q => q.cacheTag.map(q.name -> _)).toMap
-    val cacheTags = results.collect {
-      case (k, _, _, _, _, _, _) if cacheServed.contains(k) =>
-        s"\"" + k + "\":\"" + cacheServed(k) + "\""
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val sentinels =
-      s""""sentinel_start":${r3(sentinelStart)},"sentinel_end":${r3(sentinelEnd)}"""
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","cold_sum":${r3(coldSum)},$sentinels,"order":"$order","queries":$qs,"spreads":$spreads,"telemetry":$telemetry,"reps":$reps,"cache_served":$cacheTags,"anomalies":$anomalies,"errors":$errors,"sf":"$sfDir"}"""
+    val (detail, summary) =
+      records(results, anomalies, sentinelStart, sentinelEnd, sfDir, out)
     // Full-map line first: any capture that keeps the whole stream gets
-    // every per-query timing on stdout.
-    println(line)
+    // every per-query timing on stdout; the file keeps it diffable across
+    // rounds (committed per round; the stdout tail is the backup).
+    Mains.emit(detail, out)
     // The driver's artifact keeps only a ~2 KiB TAIL of stdout and parses
     // what survives — a ~200-entry map is ~8 KiB, so for four rounds the
     // stored copy was a mid-line fragment with parsed:null. The LAST line
     // is therefore a compact summary that always fits the tail whole:
     // headline total, counts, the slowest queries (the ones a grader
     // audits), and an explicit pointer to the committed full map.
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
-      .map { case (k, v, _, _, _, _, _) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // n_anomalies in the tail line: the driver's stdout capture keeps
-    // only ~2 KiB, so whether any anomaly stage ledger fired must be
-    // visible without the full artifact
-    val nAnomalies = "\\{\"rep\":".r.findAllIn(anomalies).size
-    val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","cold_sum":${r3(coldSum)},"n_queries":${results.size},"n_anomalies":${math.max(nAnomalies, 0)},$sentinels,"errors":$errors,"slowest":$slowest,"queries_detail":"$out","sf":"$sfDir"}"""
-    println(compact)
-    // Persist the full line so every per-query timing stays diffable
-    // across rounds (committed per round; the stdout tail is the backup).
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write detail file: ${e.getMessage}")
+    println(Mains.json(summary))
+  }
+
+  /** Anomalous-rep stage ledgers: each [[anomalous]] rep gets its stage
+    * breakdown serialized — top stages by wall inside the rep's window,
+    * plus the wall NOT covered by any stage (= driver-side
+    * analysis/codegen/AQE time). This is the q146 cold-rep bisect running
+    * passively in whatever session the storm actually strikes. */
+  private def anomaliesOf(q: QueryRun, allStages: Seq[StageRec],
+      allJobs: Seq[(Long, Long)]): Seq[Anomaly] = {
+    import Mains.r3
+    def mb(b: Long): Long = b >> 20
+    q.reps.zipWithIndex.collect {
+      case (r, i) if anomalous(r.sec, q.best) =>
+        val inWin = allStages
+          .filter(s => s.doneMs >= r.w0 && s.subMs <= r.w1 && s.subMs >= 0)
+        // each interval CLIPPED to the rep window before the union: a
+        // stage spanning in from a prior rep must not inflate
+        // stage_covered_s past the rep wall (it can otherwise mask
+        // the uncovered_s driver-stall signal this bisect exists for)
+        val covered = coveredSec(inWin.map(s =>
+          (math.max(s.subMs, r.w0), math.min(s.doneMs, r.w1))))
+        // uncovered_s decomposition: Catalyst phase durations from the
+        // rep's QueryPlanningTracker (analysis / optimization / planning
+        // — pre-execution driver work) plus job_gap_s (wall inside the
+        // window covered by NO job — AQE re-planning and scheduling
+        // between jobs). The remainder is codegen + result handling.
+        val jobCovered = coveredSec(allJobs
+          .filter(j => j._2 >= r.w0 && j._1 <= r.w1 && j._1 >= 0)
+          .map(j => (math.max(j._1, r.w0), math.min(j._2, r.w1))))
+        // off_s = stage submission offset from rep start: AQE-
+        // materialized stages carry framework-thread callsites (no
+        // graft frame to name), so the TIMELINE plus the data-volume
+        // columns carry the bisect for them
+        val top = inWin.sortBy(s => -(s.doneMs - s.subMs)).take(8).map(s =>
+          AnomalyStage(r3(math.max(0L, s.subMs - r.w0) / 1e3),
+            r3((s.doneMs - s.subMs) / 1e3), r3(s.runMs / 1e3),
+            r3(s.gcMs / 1e3), s.tasks, mb(s.inB), mb(s.srB), mb(s.swB),
+            mb(s.spillB), mb(s.peakB), s.name.take(100)))
+        Anomaly(i + 1, r3(r.sec), inWin.size, r3(covered),
+          r3(math.max(0.0, r.sec - covered)),
+          ListMap.from(r.phasesMs.toSeq.sortBy(_._1)
+            .map { case (n, ms) => n -> r3(ms / 1e3) }),
+          r3(math.max(0.0, r.sec - jobCovered)), top)
     }
+  }
+
+  /** The ledger's two records: the full detail and the stdout summary. */
+  private[graft] def records(results: Seq[QueryRun],
+      anomalies: ListMap[String, Seq[Anomaly]], sentinelStart: Double,
+      sentinelEnd: Double, sfDir: String, out: String): (Detail, Summary) = {
+    import Mains.r3
+    def byName[V](f: QueryRun => V) = ListMap.from(results.map(q => q.name -> f(q)))
+    val errors = results.filter(_.best < 0).map(_.name)
+    // cold_sum = sum of FIRST reps: the cache-honest companion to the
+    // best-of-N headline — one-time builds (session caches, codegen,
+    // scan warmup) land in rep 1 and are excluded from `value`, so the
+    // pair brackets the engine between cold and warm steady-state.
+    val coldSum = r3(results.flatMap(_.reps.headOption.map(_.sec)).sum)
+    val cacheTags = SparkEntry.registry.flatMap(q => q.cacheTag.map(q.name -> _)).toMap
+    val total = results.map(_.best).filter(_ >= 0).sum
+    val detail = Detail("total", total, "sec", coldSum, r3(sentinelStart),
+      r3(sentinelEnd), byName(_.best), byName(q => r3(q.spread)),
+      byName(_.telemetry), byName(_.reps.map(_.row)),
+      ListMap.from(results.flatMap(q => cacheTags.get(q.name).map(q.name -> _))),
+      anomalies, errors, sfDir)
+    val slowest = ListMap.from(results.filter(_.best >= 0).sortBy(-_.best)
+      .take(15).map(q => q.name -> r3(q.best)))
+    // n_anomalies in the summary: whether any anomaly stage ledger fired
+    // must be visible without the full artifact
+    val summary = Summary("total", r3(total), "sec", coldSum, results.size,
+      anomalies.values.map(_.size).sum, r3(sentinelStart), r3(sentinelEnd),
+      errors, slowest, out, sfDir)
+    (detail, summary)
   }
 }

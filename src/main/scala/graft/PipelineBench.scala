@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 
 import graft.corpus.CurationPipeline
@@ -20,10 +22,15 @@ import graft.corpus.CurationPipeline
   * residual.
   */
 object PipelineBench {
+
+  final case class Record(metric: String, value: Double, unit: String,
+      stagesSum: Double, stages: ListMap[String, CurationPipeline.StageTime],
+      sf: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_PIPE_OUT", "PIPELINE_BENCH.json")
-    val spark = Bench.buildSession()
+    val spark = Mains.session()
     // 100 DISTINCT registrable domains (siteN.com — each its own PSL
     // registrant; a shared-suffix shape like siteN.example.com would
     // canonicalize every doc to ONE registered domain and the cap would
@@ -37,31 +44,17 @@ object PipelineBench {
       editDistanceMax = Some(80),
       lineDedupMaxCount = Some(2),
       assignSplit = true)
-    CurationPipeline.timeStages = true
     val t0 = System.nanoTime()
-    val (curated, audit) = CurationPipeline.run(docs, cfg)
+    val (_, audit, ledger) = CurationPipeline.runWithLedger(docs, cfg)
     audit.collect() // audit rows were already forced by the stage counts
     val total = (System.nanoTime() - t0) / 1e9
-    CurationPipeline.timeStages = false
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-    val stages = CurationPipeline.lastStageTimes
-      .map { case (name, sec, n) =>
-        s"\"" + name + s"\":{\"sec\":${r3(sec)},\"docs_after\":$n}" }
-      .mkString("{", ",", "}")
     // stages_sum < value: the remainder is lazy-construction and
     // driver overhead between stage actions (plan building, broadcast
-    // builds, the audit's cheap re-counts) — published so the
-    // unattributed share is visible, not hidden
-    val stagesSum = r3(CurationPipeline.lastStageTimes.map(_._2).sum)
-    val line =
-      s"""{"metric":"pipeline_total","value":${r3(total)},"unit":"sec","stages_sum":$stagesSum,"stages":$stages,"sf":"$sfDir"}"""
-    println(line)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[pipeline-bench] could not write: ${e.getMessage}")
-    }
-    curated.unpersist()
+    // builds) — published so the unattributed share is visible, not hidden
+    Mains.emit(Record("pipeline_total", Mains.r3(total), "sec",
+      Mains.r3(ledger.values.map(_.sec).sum),
+      ledger.map { case (stage, t) => stage -> t.copy(sec = Mains.r3(t.sec)) },
+      sfDir), out)
     spark.stop()
   }
 }

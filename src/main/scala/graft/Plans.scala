@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for every SPARK_GRAFT_ONLY-selected
   * SparkEntry query (all when unset), in one of two modes:
   *  - `Plans [sfDir] [out]`: one file (default PLANS.md), a `## <query>`
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.session()
     val only = QueryFilter.fromEnv()
     val sections = SparkEntry.queries.toSeq.sortBy(_._1).filter(t => only(t._1))
       .map { case (name, fn) =>

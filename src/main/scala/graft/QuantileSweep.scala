@@ -17,32 +17,27 @@ import org.apache.spark.sql.functions._
   * (default QUANTILE_SWEEP.json); run at sf1 for the committed ledger.
   */
 object QuantileSweep {
+
+  /** One k's realized rank error (ppm of n) and serve wall seconds. */
+  final case class KRow(k: Int, maxRankErrPm: Long, meanRankErrPm: Double,
+      cells: Long, serveSec: Double)
+  final case class Sweep(metric: String, ks: Seq[KRow], sf: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_QSWEEP_OUT", "QUANTILE_SWEEP.json")
-    val spark = Bench.buildSession()
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-    val ks = Seq(64, 256, 1024)
-    val rows = ks.map { k =>
+    val spark = Mains.session()
+    val ks = Seq(64, 256, 1024).map { k =>
       val t0 = System.nanoTime()
       val served = QueriesSketch.quantileServe(spark, sfDir, k)
         .agg(max(col("rank_err_pm")).as("max_err"),
           avg(col("rank_err_pm")).as("mean_err"),
           count(lit(1)).as("cells"))
         .collect()(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (k, served.getLong(0), served.getDouble(1), served.getLong(2), sec)
+      KRow(k, served.getLong(0), Mains.r3(served.getDouble(1)),
+        served.getLong(2), Mains.r3((System.nanoTime() - t0) / 1e9))
     }
-    val cells = rows.map { case (k, mx, mean, n, sec) =>
-      s"""{"k":$k,"max_rank_err_pm":$mx,"mean_rank_err_pm":${r3(mean)},""" +
-        s""""cells":$n,"serve_sec":${r3(sec)}}"""
-    }.mkString("[", ",", "]")
-    val line = s"""{"metric":"quantile_k_sweep","ks":$cells,"sf":"$sfDir"}"""
-    println(line)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[qsweep] could not write: ${e.getMessage}") }
+    Mains.emit(Sweep("quantile_k_sweep", ks, sfDir), out)
     spark.stop()
   }
 }

@@ -839,28 +839,6 @@ object QueriesDedup {
   }
 
   private val q146: Q = (s, dir) => {
-    // Stage-bisect knob (SPARK_GRAFT_ER_STAGES=1): materialize each ER
-    // stage eagerly and print its wall time + row count to stderr — the
-    // diagnostic the recurring driver-session GC anomaly needs (block
-    // build vs levenshtein pair filter vs Components fixpoint vs final
-    // broadcast probe run in isolation). Off by default; the unknobbed
-    // plan is exactly the r12 one.
-    val stageKnob = sys.env.get("SPARK_GRAFT_ER_STAGES").contains("1")
-    // knob mode caches each stage to time it in isolation; EVERY stage
-    // stays cached until the harness's inter-query release (never
-    // unpersisted here) — an eager release of the "consumed" previous
-    // stage assumed each stage feeds exactly one downstream build, and
-    // any stage re-read by the final action (or a future two-consumer
-    // stage) would silently recompute, skewing the isolation timings
-    // the knob exists to produce. The frames are vocabulary-sized
-    // (names / blocks / pairs / components), diagnostic-mode only.
-    def stage(label: String, df: DataFrame): DataFrame =
-      if (!stageKnob) df else {
-        val c = df.cache(); val t0 = System.nanoTime(); val n = c.count()
-        System.err.println(f"[q146] $label%-11s " +
-          f"${(System.nanoTime() - t0) / 1e9}%8.3f s  ($n rows)")
-        c
-      }
     val parts = Tables.part(s, dir).select(col("p_partkey"), col("p_name"))
     // Driver-side fast path (r16): the match+cluster stages run on the
     // DISTINCT-name table, vocabulary-sized at every corpus scale (see
@@ -876,48 +854,47 @@ object QueriesDedup {
     // the local label map, and the final aggregate. The kernel replays
     // the distributed semantics exactly (erLocalLabels/editLe scaladoc;
     // EntityResolutionSpec pins local == distributed on a planted
-    // fixture). Past either bound — or under the stage-bisect knob —
-    // the distributed pipeline below runs unchanged.
-    val localOut: Option[DataFrame] = if (stageKnob) None else {
-      val up = parts.select(col("p_name").as("name")).distinct()
-        .limit(ErLocalNameMax + 1).collect()
+    // fixture). Past either bound the distributed pipeline below runs
+    // unchanged.
+    val up = parts.select(col("p_name").as("name")).distinct()
+      .limit(ErLocalNameMax + 1).collect()
+    val localLabels =
       if (up.length > ErLocalNameMax) None
-      else erLocalLabels(up.map(_.getString(0))).map { labelRows =>
-        val spark = s
-        import spark.implicits._
-        val labels = labelRows.toSeq.toDF("name", "entity")
-        parts
-          .join(broadcast(labels), col("p_name") === col("name"))
-          .groupBy(col("entity"))
-          .agg(countDistinct(col("p_name")).as("n_names"),
-            count(lit(1)).as("n_parts"),
-            min(col("p_partkey")).as("first_part"))
-          .orderBy(col("entity"))
-      }
+      else erLocalLabels(up.map(_.getString(0)))
+    localLabels.fold(erDistributed(s, parts)) { labelRows =>
+      val spark = s
+      import spark.implicits._
+      val labels = labelRows.toSeq.toDF("name", "entity")
+      parts
+        .join(broadcast(labels), col("p_name") === col("name"))
+        .groupBy(col("entity"))
+        .agg(countDistinct(col("p_name")).as("n_names"),
+          count(lit(1)).as("n_parts"),
+          min(col("p_partkey")).as("first_part"))
+        .orderBy(col("entity"))
     }
-    if (localOut.isDefined) localOut.get else erDistributed(s, parts, stage)
   }
 
   /** The pre-r16 distributed ER pipeline — the fallback past the
-    * bounded-collect limits and the SPARK_GRAFT_ER_STAGES diagnostic
-    * path (unchanged semantics; see q146's comment block). */
-  private[graft] def erDistributed(s: SparkSession, parts: DataFrame,
-      stage: (String, DataFrame) => DataFrame): DataFrame = {
+    * bounded-collect limits (unchanged semantics; see q146's comment
+    * block). */
+  private[graft] def erDistributed(s: SparkSession, parts: DataFrame)
+      : DataFrame = {
     val names = parts.select(col("p_name").as("name")).distinct()
       .cache() // vocabulary-sized; feeds block build + label join
     // multi-pass blocking keys; distinct since a one-token name emits
     // the same key twice
-    val blocked = stage("block", names.select(col("name"), explode(array(
+    val blocked = names.select(col("name"), explode(array(
         element_at(split(col("name"), " "), 1),
         element_at(split(col("name"), " "), -1))).as("blk"))
-      .distinct())
-    val pairs = stage("pairs", blocked.select(col("blk"), col("name").as("na"))
+      .distinct()
+    val pairs = blocked.select(col("blk"), col("name").as("na"))
       .join(blocked.select(col("blk"), col("name").as("nb")), "blk")
       .filter(col("na") < col("nb"))
       .select(col("na"), col("nb"))
       .distinct() // a pair sharing BOTH tokens arrives via both passes
-      .filter(levenshtein(col("na"), col("nb"), ErEditMax) >= 0))
-    val comp = stage("components", Components.minLabel(pairs, "na", "nb"))
+      .filter(levenshtein(col("na"), col("nb"), ErEditMax) >= 0)
+    val comp = Components.minLabel(pairs, "na", "nb")
     val labels = names.select(col("name"))
       .join(broadcast(comp.withColumnRenamed("id", "name")), Seq("name"), "left")
       .withColumn("entity", coalesce(col("component"), col("name")))

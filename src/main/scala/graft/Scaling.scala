@@ -23,7 +23,7 @@ object Scaling {
       else Seq("0.01" -> "/root/testdata/sf0.01",
         "0.1" -> "/root/testdata/sf0.1",
         "1" -> "testdata-sf1")
-    val spark = Bench.buildSession()
+    val spark = Mains.session()
     dirs.foreach { case (tag, dir) =>
       System.err.println(s"[scaling] ledger sf=$tag dir=$dir")
       Bench.runLedger(spark, dir, s"BENCH_SCALING_$tag.json")

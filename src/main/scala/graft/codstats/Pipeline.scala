@@ -2,7 +2,6 @@ package graft.codstats
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import Model._
 
@@ -70,18 +69,15 @@ object Pipeline {
     def store(): Option[DataFrame] =
       if (new java.io.File(factDir).exists()) Some(spark.read.parquet(factDir))
       else None
-    val raw = StreamingIngest.readLanding(spark, landingDir)
-    val valid = StreamingIngest.validGamesStream(raw, modes)
-    val q = valid.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
+    val valid = Normalize.validGames(
+      StreamingIngest.readLanding(spark, landingDir), modes)
+    val q = StreamingIngest.ingestWriter(valid, checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val unique = batch.dropDuplicates("game_id", "player_uno_id")
-        val fresh = (store() match {
+        val fresh = graft.ops.Stages.seal(store() match {
           case Some(existing) => Normalize.newGamesOnly(unique, existing)
           case None           => unique
-        }).localCheckpoint()
+        }, eager = true)
         // a zero-row batch must not create a data-less factDir (parquet
         // schema inference would fail on the next store() read)
         if (!fresh.isEmpty) {
@@ -91,8 +87,9 @@ object Pipeline {
           fresh.withColumn("fact_day", to_date(col("ended_at")))
             .write.mode("append").partitionBy("fact_day").parquet(factDir)
         }
-        fresh.unpersist()
-        ()
+        // Dataset.unpersist is a no-op on a checkpointed frame: drop its
+        // blocks now, not whenever the context cleaner gets to them
+        graft.ops.Stages.release(Seq(fresh))
       }
       .start()
     q.awaitTermination()

@@ -1,6 +1,6 @@
 package graft.codstats
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
@@ -30,10 +30,6 @@ object StreamingIngest {
       .schema(matchSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(landingDir)
-
-  /** Normalized valid-games stream: same rules as the batch pass. */
-  def validGamesStream(raw: DataFrame, modes: Dataset[GameMode]): DataFrame =
-    Normalize.validGames(raw, modes)
 
   /** Drain-all-then-stop ingest run (cron-equivalent). Returns the writer
     * so callers choose sink/location. */

@@ -1,5 +1,7 @@
 package graft.corpus
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -125,28 +127,31 @@ object CurationPipeline {
       // it bit-identically by construction.
       assignSplit: Boolean = false)
 
-  /** Per-stage wall times of the last [[run]] — (stage, seconds,
-    * docs_after), populated only while [[timeStages]] is on (the
-    * [[graft.PipelineBench]] ledger). The audit counts are the
-    * per-stage materialization points (each cached stage's first
-    * action), so timing each count IS the stage's incremental cost on
-    * top of its cached predecessors. Driver-side, single-run use. */
-  private[graft] val lastStageTimes =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-  @volatile private[graft] var timeStages = false
-  private def timedCount(name: String)(f: => Long): Long =
-    if (!timeStages) f
-    else {
-      val t0 = System.nanoTime(); val n = f
-      lastStageTimes += ((name, (System.nanoTime() - t0) / 1e9, n))
-      n
-    }
+  /** A stage's row in a run's ledger: wall seconds of its count — each
+    * stage is cached or sealed and counted in pipeline order, so the
+    * count IS the stage's incremental cost on top of its materialized
+    * predecessors — and the docs surviving it (-1 for a construction
+    * phase or a skipped stage, never a real count). */
+  final case class StageTime(sec: Double, docsAfter: Long)
+
+  private def timed(stage: String)(count: => Long): (String, StageTime) = {
+    val t0 = System.nanoTime(); val n = count
+    stage -> StageTime((System.nanoTime() - t0) / 1e9, n)
+  }
 
   /** @return (curated corpus, audit of (stage, docs_after)) */
   def run(docs: DataFrame, cfg: Config = Config()): (DataFrame, DataFrame) = {
+    val (curated, audit, _) = runWithLedger(docs, cfg)
+    (curated, audit)
+  }
+
+  /** [[run]] plus its stage ledger, in pipeline order: every audit stage
+    * with its seconds, and the near-dup fixpoint's construction row
+    * (`near_dedup_fixpoint`, docs_after = -1) before `near_dedup`. */
+  def runWithLedger(docs: DataFrame, cfg: Config = Config())
+      : (DataFrame, DataFrame, ListMap[String, StageTime]) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    if (timeStages) lastStageTimes.clear()
 
     val (ruled, quality) = qualityStages(docs, cfg)
 
@@ -166,16 +171,15 @@ object CurationPipeline {
     // With cfg.editDistanceMax set, candidates additionally pass the
     // bounded edit-distance confirm (q127's precision stage) before any
     // doc is declared a duplicate.
-    // stage-ledger mode: materialize the upstream stages in PIPELINE
-    // order FIRST — the near-dup fixpoint below runs eager jobs and
-    // would otherwise pay for (and be charged with) stages 1–3
-    if (timeStages) {
-      timedCount("input")(docs.count())
-      timedCount("quality_rules")(ruled.count())
-      timedCount("quality_classifier")(quality.count())
-      timedCount("exact_dedup")(exact.count())
-      timedCount("normalized_dedup")(norm.count())
-    }
+    // Stages 1–3 are counted in PIPELINE order FIRST — the near-dup
+    // fixpoint below runs eager jobs and would otherwise pay for (and be
+    // charged with) them; their counts are the audit's.
+    val upstream = Seq(
+      timed("input")(docs.count()),
+      timed("quality_rules")(ruled.count()),
+      timed("quality_classifier")(quality.count()),
+      timed("exact_dedup")(exact.count()),
+      timed("normalized_dedup")(norm.count()))
 
     val hashed = NearDup.shingleHashed(norm, "doc_id", "text").cache()
     val pairs = confirmPairs(NearDup.pairs(hashed, cfg.jaccardThreshold),
@@ -189,35 +193,32 @@ object CurationPipeline {
     // (truncated lineage) — callers that need recomputability hold the
     // INPUT, not the stage frames.
     // transitiveSurvivors runs the Components fixpoint EAGERLY (driver-
-    // round jobs), pulling the shingle/LSH/confirm chain with it — in
-    // stage-ledger mode that work is attributed to its own row
-    // (docs_after = -1: a construction phase, not a survivor count;
-    // near_dedup's own row then carries just the survivor-set
-    // materialization)
+    // round jobs), pulling the shingle/LSH/confirm chain with it — that
+    // work is attributed to its own ledger row (docs_after = -1: a
+    // construction phase, not a survivor count; near_dedup's own row
+    // then carries just the survivor-set materialization)
     val tFix = System.nanoTime()
     val nearRaw = NearDup.transitiveSurvivors(norm, col("doc_id"), pairs)
-    if (timeStages)
-      lastStageTimes += (("near_dedup_fixpoint",
-        (System.nanoTime() - tFix) / 1e9, -1L))
+    val fixpoint = "near_dedup_fixpoint" ->
+      StageTime((System.nanoTime() - tFix) / 1e9, -1L)
     val near = graft.ops.Stages.seal(nearRaw)
 
-    if (timeStages) timedCount("near_dedup")(near.count())
+    val nearRow = timed("near_dedup")(near.count())
     val (curated, tail, releaseCaches) = releaseStages(near, docs.columns, cfg)
 
-    // audit counts drive one materialization of each cached stage; the
+    // each stage's count drove its one materialization; the
     // intermediates are then released — only `curated` stays
     // materialized for the caller (it is a SEALED frame: release it via
     // Stages.release when done; Dataset.unpersist is a no-op on it)
-    val audit = (Seq(
-      ("input", docs.count()), ("quality_rules", ruled.count()),
-      ("quality_classifier", quality.count()), ("exact_dedup", exact.count()),
-      ("normalized_dedup", norm.count()), ("near_dedup", near.count())) ++ tail)
+    val ledger = ListMap.from(upstream ++ Seq(fixpoint, nearRow) ++ tail)
+    val audit = (upstream ++ Seq(nearRow) ++ tail)
+      .map { case (stage, t) => (stage, t.docsAfter) }
       .toDF("stage", "docs_after")
     val toRelease = Seq(ruled, quality, exact, norm, hashed, near) ++
       releaseCaches
     toRelease.foreach(_.unpersist()) // the .cache()'d stages
     graft.ops.Stages.release(toRelease) // the sealed stages, synchronously
-    (curated, audit)
+    (curated, audit, ledger)
   }
 
   /** Stages 1a+1b — per-row work, safe to run on a DELTA in isolation
@@ -271,10 +272,10 @@ object CurationPipeline {
     * scrub counts grams across the whole survivor set, mixture rates
     * are corpus totals), shared verbatim by the batch run and the
     * incremental loop's release
-    * ([[StreamingCuration.release]]). Returns (curated, audit tail,
+    * ([[StreamingCuration.release]]). Returns (curated, ledger tail,
     * caches for the caller to unpersist after counting). */
   private[corpus] def releaseStages(near: DataFrame, outCols: Seq[String],
-      cfg: Config): (DataFrame, Seq[(String, Long)], Seq[DataFrame]) = {
+      cfg: Config): (DataFrame, Seq[(String, StageTime)], Seq[DataFrame]) = {
     // The release stages' token COUNT is a whitespace-class word count,
     // not the space-only split: after the line-dedup stage reassembles a
     // multi-line doc, every kept line boundary is a '\n' between words —
@@ -314,8 +315,7 @@ object CurationPipeline {
           .drop("_domain", "_h", "_rk")
         // stage-boundary truncation (see the near-dup checkpoint note)
         val capped = graft.ops.Stages.seal(ranked.unionByName(exempt))
-        (capped, Seq(("domain_cap", timedCount("domain_cap")(capped.count()))),
-          Seq(capped))
+        (capped, Seq(timed("domain_cap")(capped.count())), Seq(capped))
       // domainCap configured but the corpus has no `urlCol` column (absent
       // or misspelled): a silently-skipped stage would ship a release the
       // operator believes is capped, uncapped, with no signal. The audit
@@ -324,8 +324,8 @@ object CurationPipeline {
       case Some(_) =>
         System.err.println(s"[curation] domainCap is set but column " +
           s"'${cfg.urlCol}' is absent — domain-cap stage SKIPPED")
-        (near, Seq(("domain_cap", -1L)), Seq.empty[DataFrame])
-      case None => (near, Seq.empty[(String, Long)], Seq.empty[DataFrame])
+        (near, Seq("domain_cap" -> StageTime(0.0, -1L)), Seq.empty[DataFrame])
+      case None => (near, Seq.empty[(String, StageTime)], Seq.empty[DataFrame])
     }
     // 5a. corpus-wide line-grain dedup (q202's pass): a line recurring
     // beyond cfg.lineDedupMaxCount keeps only its globally-first
@@ -341,9 +341,8 @@ object CurationPipeline {
           .dedupLines(afterCap, "doc_id", "text", k, cfg.lineDedupSep)
           .filter(col("text") =!= "" && expr(nToks) >= cfg.minToks)
           .drop("n_lines", "n_kept_lines"))
-        (deduped, Seq(("line_dedup", timedCount("line_dedup")(deduped.count()))),
-          Seq(deduped))
-      case None => (afterCap, Seq.empty[(String, Long)], Seq.empty[DataFrame])
+        (deduped, Seq(timed("line_dedup")(deduped.count())), Seq(deduped))
+      case None => (afterCap, Seq.empty[(String, StageTime)], Seq.empty[DataFrame])
     }
     // 5. exact-substring scrub over the dedup survivors: residual
     // corpus-duplicated 8-gram runs are cross-doc boilerplate — drop the
@@ -430,15 +429,15 @@ object CurationPipeline {
     // split_assign's row is then the cache-hit ~0 (documented in
     // PIPELINE_BENCH.json's consumers).
     val preSplitTail = capTail ++ lineTail ++ Seq(
-      ("substring_scrub", timedCount("substring_scrub")(scrub.count())),
-      ("pii_redact", timedCount("pii_redact")(redacted.count())),
-      ("mixture_sample", timedCount("mixture_sample")(curated.count())))
+      timed("substring_scrub")(scrub.count()),
+      timed("pii_redact")(redacted.count()),
+      timed("mixture_sample")(curated.count()))
     val splitTail =
       if (cfg.assignSplit) {
         val stage = if (mixed.columns.contains(cfg.urlCol)) "split_assign"
           else "split_assign_dockeyed" // visible misconfiguration marker
-        Seq((stage, timedCount(stage)(curated.count())))
-      } else Seq.empty[(String, Long)]
+        Seq(timed(stage)(curated.count()))
+      } else Seq.empty[(String, StageTime)]
     val tail = preSplitTail ++ splitTail
     (curated, tail,
       capCaches ++ lineCaches ++ Seq(gramHashed, scrub, redacted))

@@ -115,7 +115,8 @@ object StreamingCuration {
       ("quality_classifier", sums.getOrElse("quality_classifier", 0L)),
       ("exact_dedup", sums.getOrElse("exact_dedup", 0L)),
       ("normalized_dedup", normDocs.count()),
-      ("near_dedup", near.count())) ++ tail)
+      ("near_dedup", near.count())) ++
+      tail.map { case (stage, t) => (stage, t.docsAfter) })
       .toDF("stage", "docs_after")
     (near +: caches).foreach(_.unpersist()) // the .cache()'d stages
     graft.ops.Stages.release(caches) // the sealed stages, synchronously

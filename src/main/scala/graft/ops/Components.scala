@@ -63,12 +63,9 @@ object Components {
 
   /** Edge-count bound for the driver-side path. ~100k symmetric edges
     * ≈ a few MB collected — inside the library's dimension-sized-collect
-    * discipline (same bound as the co-purchase cut). Overridable for
-    * experiments via SPARK_GRAFT_CC_LOCAL_EDGES; 0 disables the local
-    * path entirely. */
-  private[graft] val LocalEdgeMax: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES").flatMap(_.toLongOption)
-      .getOrElse(100000L)
+    * discipline (same bound as the co-purchase cut). `minLabel`'s
+    * `localEdgeMax = 0` forces the distributed loop. */
+  private[graft] val LocalEdgeMax: Long = 100000L
 
   /** (id, component) for every node in `pairs`, where component = the
     * minimum id reachable via any chain of pairs. */

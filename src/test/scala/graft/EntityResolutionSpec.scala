@@ -48,7 +48,7 @@ class EntityResolutionSpec extends SparkSpec {
     val parts = Tables.part(spark, d)
       .select(org.apache.spark.sql.functions.col("p_partkey"),
         org.apache.spark.sql.functions.col("p_name"))
-    val dist = QueriesDedup.erDistributed(spark, parts, (_, df) => df)
+    val dist = QueriesDedup.erDistributed(spark, parts)
       .as[(String, Long, Long, Long)].collect().toSeq
     assert(fast == dist)
     assert(fast.nonEmpty && fast.map(_._1) == fast.map(_._1).sorted)

@@ -30,7 +30,7 @@ class StreamingIngestSpec extends SparkSpec {
 
     def runOnce(): Unit = {
       val raw = StreamingIngest.readLanding(spark, landing.toString)
-      val valid = StreamingIngest.validGamesStream(raw, Model.seedGameModes.toDS())
+      val valid = Normalize.validGames(raw, Model.seedGameModes.toDS())
       val q = StreamingIngest.ingestWriter(valid, ckpt.toString)
         .format("parquet").option("path", out.toString).start()
       q.awaitTermination()

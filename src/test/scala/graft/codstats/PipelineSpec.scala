@@ -323,6 +323,20 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/time_series").exists())
   }
 
+  test("continuousRun releases each micro-batch's checkpoint on return") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tick")
+    val landing = java.nio.file.Files.createDirectory(tmp.resolve("landing"))
+    Seq(doc("m1", "uno-alice", t0), doc("m1", "uno-bob", t0))
+      .zipWithIndex.foreach { case (d, i) =>
+        java.nio.file.Files.writeString(landing.resolve(s"match_$i.json"), d)
+      }
+    val store = s"$tmp/store"
+    assert(leftPersisted(Pipeline.continuousRun(spark, landing.toString,
+      s"$tmp/ckpt", store, s"$tmp/reports",
+      ctx.players, ctx.modes, ctx.seasons)).isEmpty)
+    assert(spark.read.parquet(store).count() == 2L) // the tick appended
+  }
+
   test("player stats doc: one row per player, season-ordered metrics+placements") {
     val doc = Reports.playerStatsDoc(ctx.stats, ctx.seasons, ctx.modes,
         Seq("wz_trios", "wz_quads"))

@@ -290,4 +290,34 @@ class CurationPipelineSpec extends SparkSpec {
     assert(!off.columns.contains("split"))
     assert(!auditOff.as[(String, Long)].collect().toMap.contains("split_assign"))
   }
+
+  test("the returned stage ledger names the stages in pipeline order and " +
+    "matches the audit; runs share no state") {
+    def corpus(n: Int) = (1 to n).map(i =>
+      (i.toLong, (1 to 12).map(j => s"w${i}_$j").mkString(" "), "en", "s0", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val cfg = CurationPipeline.Config(minToks = 1, maxDupTokFrac = 1.0,
+      minScore = 0.0, budgetToksPerSource = 1000000L)
+    val (c1, a1, l1) = CurationPipeline.runWithLedger(corpus(6),
+      cfg.copy(lineDedupMaxCount = Some(2L)))
+    assert(l1.keys.toSeq == Seq("input", "quality_rules",
+      "quality_classifier", "exact_dedup", "normalized_dedup",
+      "near_dedup_fixpoint", "near_dedup", "line_dedup", "substring_scrub",
+      "pii_redact", "mixture_sample"))
+    // every counted stage is an audit row, in the same order, same count
+    assert(a1.as[(String, Long)].collect().toSeq ==
+      l1.toSeq.collect { case (s, t) if s != "near_dedup_fixpoint" =>
+        (s, t.docsAfter) })
+    assert(l1("near_dedup_fixpoint").docsAfter == -1L)
+    assert(l1("input").docsAfter == 6L)
+    assert(l1.values.forall(_.sec >= 0.0))
+    // a second run in the same session gets its own ledger: no stage of
+    // the first run's config, its own counts
+    val (c2, a2, l2) = CurationPipeline.runWithLedger(corpus(4), cfg)
+    assert(!l2.contains("line_dedup") && l2("input").docsAfter == 4L)
+    assert(a2.as[(String, Long)].collect().toMap ==
+      l2.removed("near_dedup_fixpoint").map { case (s, t) => s -> t.docsAfter })
+    assert(l1("input").docsAfter == 6L)
+    graft.ops.Stages.release(Seq(c1, c2))
+  }
 }
