@@ -37,7 +37,6 @@ object QueriesCorpus {
   // occurrence in the corpus twice; per-doc work is linear either way,
   // so the same plan holds when documents are millions of tokens.
   private val q59: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr("graft_rep_stats(text)").as("rs"))
       .select(col("doc_id"),
@@ -107,7 +106,6 @@ object QueriesCorpus {
     // email-replaced text — the same redact-chain semantics as the four
     // separate regexp_count/regexp_replace walks it replaces, with the
     // clean-text length and hash folded into the same eval
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("pii_text", expr(pii))
       .withColumn("ps", expr("graft_pii_stats(pii_text)"))
@@ -333,7 +331,6 @@ object QueriesCorpus {
   private val SemCells = 8
   private val SemTau   = 0.3
   private val q64: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val cents = QueriesSimilarity.trainedCents(s, dir, SemCells)
     val em = Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(VectorOps.toDoubleExpr("embedding")).as("v"))
@@ -679,7 +676,6 @@ object QueriesCorpus {
     val corpus = quantized.filter(col("vec_id") >= QNQueries)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("score"), col("vec_id"))
-    graft.functions.GraftFunctions.register(s)
     corpus.join(broadcast(qs))
       // native integer fold — bit-identical to the interpreted
       // aggregate/zip_with lambda (integer sums are order-independent)
@@ -748,7 +744,6 @@ object QueriesCorpus {
       .withColumn("scale", expr("CASE WHEN mx = 0.0D THEN 1.0D ELSE 127.0D / mx END"))
       .withColumn("q", expr("transform(v, x -> CAST(floor(x * scale + 0.5D) AS BIGINT))"))
       .select(col("vec_id"), col("q"))
-    graft.functions.GraftFunctions.register(s)
     val qv = quantized.filter(col("vec_id") === 0L)
       .select(col("q").as("qq"))
     // native integer fold — bit-identical to the interpreted lambda
@@ -1019,7 +1014,6 @@ object QueriesCorpus {
   private val DecontK = 8
   private val DecontMod = 97
   private val q201: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val g = Tables.documents(s, dir)
       .select(col("doc_id"),
         expr(s"array_distinct(graft_pos_grams$DecontK(text))").as("ghs"))
@@ -1153,8 +1147,6 @@ object QueriesCorpus {
   // demonstrably learns, not just terminates.
   private val q204: Q = (s, dir) => {
     val LT = graft.ops.LinearTrain
-    graft.functions.TextFunctions.register(s)
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
     // one native counts pass feeds training (counts-array kernels) AND
     // the margin expression — no exploded feature rows at all

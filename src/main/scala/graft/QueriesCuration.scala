@@ -45,7 +45,6 @@ object QueriesCuration {
   private val q73: Q = (s, dir) => {
     val fixture =
       s"CASE WHEN doc_id % 9 = 0 THEN concat(text, ' ', '$Boiler') ELSE text END"
-    graft.functions.TextFunctions.register(s)
     val mat = Tables.documents(s, dir)
       .select(col("doc_id"), expr(fixture).as("ftext"))
       .repartition(Tables.shufflePartitions(s))
@@ -119,7 +118,6 @@ object QueriesCuration {
   // shuffle is the window over norm_h — exactly the exact-dedup shuffle.
   private val DecomposedCafe = "Café" // e + combining acute
   private val q74: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val fixture =
       s"""CASE WHEN doc_id % 17 = 0
          |       THEN concat('LEGAL   Disclaimer   rev ', CAST(doc_id % 3 AS STRING))
@@ -209,7 +207,6 @@ object QueriesCuration {
     // c_label)) — a combinable hash aggregate instead of a row_number
     // window over the corpus×L scored rows (double negation is exact,
     // and the denominator's greatest(..., 1.0) floor rules out NaN)
-    graft.functions.GraftFunctions.register(s)
     mat
       .withColumn("n2v", expr("graft_int_dot(q, q)"))
       .crossJoin(broadcast(cents))
@@ -502,7 +499,6 @@ object QueriesCuration {
   // call); the per-doc sum reuses the doc_id grouping. Never O(n²), no
   // window over the gram stream.
   private val q102: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val mat = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"),
         expr(TextOps.tokensExpr("text")).as("toks"))

@@ -134,7 +134,6 @@ object QueriesDedup {
   private val nBits = 60
   /** (doc_id, simhash) — shared by q28 (signatures) and q54 (pairing). */
   private def simhashDf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, dir)
       // repartition BEFORE the signature eval: the parquet scan's input
       // split count caps parallelism for the md5-heavy per-row loop
@@ -233,7 +232,6 @@ object QueriesDedup {
   // rarest-first ordering (order shingles by corpus frequency instead of
   // hash value) to shrink prefixes of common shingles.
   private val q29: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val d = Tables.documents(s, dir).filter(length(col("text")) >= 13)
     // cached: prefix explode AND both verify sides read it (else 3× shingle
     // hashing); repartition first — single-file scan serializes the hashing.
@@ -326,7 +324,6 @@ object QueriesDedup {
   private val NPlanesND = 8
   private val DimND     = 64
   private val q52: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val prep = graft.ops.VectorNearDup
       .prepared(Tables.embeddings(s, dir), "vec_id", "embedding", NPlanesND, DimND)
       .cache()
@@ -371,7 +368,6 @@ object QueriesDedup {
   // published in the output as the visible proof that the knob moved
   // (8 at sf0.01/sf0.1, 9 at sf1).
   private val q199: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val (prep0, np) = graft.ops.VectorNearDup.preparedAdaptive(
       Tables.embeddings(s, dir), "vec_id", "embedding", DimND)
     val prep = prep0.cache()
@@ -636,7 +632,6 @@ object QueriesDedup {
   // The DuckDB twin computes the same minima relationally (unnest ×
   // perm VALUES table) — same constants, hash-identical sketches.
   private val q119: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     // one-pass native signature (graft_minhash_sig) instead of NumPerm
     // transform+array_min passes each materializing a permuted copy;
     // null sig == empty shingle set (the old size(hs) >= 1 filter)
@@ -1009,7 +1004,6 @@ object QueriesDedup {
   // Scale: both signals are equi-joins (band keys / norm-hash groups);
   // the election window partitions by cluster — never global.
   private val q180: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .repartition(Tables.shufflePartitions(s))
       .select(col("doc_id"), col("text"), col("n_chars"))
@@ -1087,7 +1081,6 @@ object QueriesDedup {
   // each dup reports its canonical target (min matching partner).
   private val IngestMod = 13L
   private val q186: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val d = Tables.documents(s, dir).repartition(Tables.shufflePartitions(s))
     val hashed = NearDup.shingleHashed(d, "doc_id", "text").localCheckpoint()
     val sig = NearDup.bandSignatures(hashed)
@@ -1179,7 +1172,6 @@ object QueriesDedup {
         .mkString("concat_ws(':', ", ", ", ")"))
   }
   private val q188: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val d = Tables.documents(s, dir).repartition(Tables.shufflePartitions(s))
     // one native pass (graft_minhash_sig) computes all NumPerm minima;
     // the m$i columns are element_at projections of it -- bit-identical
@@ -1287,7 +1279,6 @@ object QueriesDedup {
   private val q213: Q = (s, dir) => {
     val spark = s
     import spark.implicits._
-    graft.functions.TextFunctions.register(s)
     val filtered = Tables.documents(s, dir)
       .filter(length(col("text")) >= 13)
     val nDocs = filtered.count()

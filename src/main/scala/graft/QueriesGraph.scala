@@ -178,7 +178,6 @@ object QueriesGraph {
     val spark = s
     import spark.implicits._
     cutMemo(s, dir, s"cut|edges=$TriEdges")({
-      graft.functions.GraftFunctions.register(s)
       val cap = 50 // q118's basket guard: one 10⁶-item basket ≠ 5·10¹¹ pairs
       Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))

@@ -535,7 +535,6 @@ object QueriesSearch {
   // co-location any pairwise text comparison needs; histogram is an
   // 11×2-row aggregate.
   private val q205: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val base = Tables.documents(s, dir)
       .select(expr("doc_id DIV 2").as("pid"), expr("doc_id % 2").as("side"),
         expr("graft_pos_grams1(text)").as("g1"),

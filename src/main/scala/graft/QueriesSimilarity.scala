@@ -52,7 +52,6 @@ object QueriesSimilarity {
 
   // --- q31: brute-force cosine top-k per query (exact ANN baseline) ----------
   private val q31: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val em = Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(VectorOps.toDoubleExpr("embedding")).as("v"))
       .withColumn("nrm", expr(VectorOps.normExpr("v")))
@@ -89,7 +88,6 @@ object QueriesSimilarity {
 
   // --- q32: LSH-bucketed ANN — search only the query's sign-bit bucket -------
   private val q32: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val bucket = VectorOps.hyperplaneBucketExpr("v", NPlanes, Dim)
     val em = Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(VectorOps.toDoubleExpr("embedding")).as("v"))
@@ -139,7 +137,6 @@ object QueriesSimilarity {
   // key, so probing prunes the scan to ~2/NCells of the corpus.
   private val NCells = 8
   private val q41: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val cents = trainedCents(s, dir, NCells)
     val em = Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(VectorOps.toDoubleExpr("embedding")).as("v"))
@@ -376,7 +373,6 @@ object QueriesSimilarity {
     // aggregate/zip_with lambda dominated the encode pass (corpus ×
     // 32 codewords × 8 subspaces evaluations); integer sums are
     // order-independent so the tight loop is bit-identical
-    graft.functions.GraftFunctions.register(s)
     def sqd(a: String, b: String) = s"graft_sqdist($a, $b)"
     val corpus = qz.filter(col("vec_id") >= NQueries)
     // argmin codeword as min(struct(d, crank)) — a COMBINABLE hash

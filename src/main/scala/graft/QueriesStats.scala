@@ -870,7 +870,6 @@ object QueriesStats {
       .cache() // df pass + pair pass both read it; Bench clears per-query
     val df_ = baskets.select(explode(col("ps")).as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("df"))
-    graft.functions.GraftFunctions.register(s)
     baskets
       .filter(size(col("ps")) >= 2)
       // native pair generation — see q118

@@ -125,7 +125,6 @@ object QueriesText {
   private def langCnts(s: SparkSession, dir: String): DataFrame = {
     val B = graft.ops.LinearTrain.B
     require(B == 64, "graft_trigram_buckets64 is registered for B = 64")
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         expr(s"graft_trigram_buckets$B(text)").as("cnts"))
@@ -287,7 +286,6 @@ object QueriesText {
   private val WideClsSql = "lang || '_' || CAST(doc_id % 4 AS VARCHAR)"
 
   private def wideCnts(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr(WideClsExpr).as("cls"),
         expr(s"graft_trigram_buckets$WideLangB(text)").as("cnts"))
@@ -470,7 +468,6 @@ object QueriesText {
   // the distinct minima (standard winnowing: guarantees any >= 10-char
   // shared substring yields a shared fingerprint).
   private val q36: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val d = Tables.documents(s, dir).filter(length(col("text")) >= 13)
     // graft_winnow_7_4: one native pass (hash + window minima + distinct);
     // TextOpsSpec asserts set equality with the composed HOF form. The
@@ -509,7 +506,6 @@ object QueriesText {
   private val DecontamDfCap     = 10 // fp in > 10 docs carries no signal
   private val DecontamMinShared = 3  // >= 3 rare shared fps ⇒ contaminated
   private val q53: Q = (s, dir) => {
-    graft.functions.TextFunctions.register(s)
     val d = Tables.documents(s, dir).filter(length(col("text")) >= 13)
     val mat = d.repartition(Tables.shufflePartitions(s))
       .select(col("doc_id"), expr("graft_winnow_7_4(text)").as("fps"))

@@ -35,16 +35,9 @@ object Reports {
   private def corePlayers(stats: DataFrame): DataFrame =
     stats.filter(col("is_core"))
 
-  /** Top-k leaderboard per metric over core players' games
-    * (generate_lookup_data.sh:101-315 — 12 metrics × LIMIT 10). */
-  def leaderboard(stats: DataFrame, metric: String, k: Int = 10): DataFrame =
-    TopK.global(
-      corePlayers(stats).select(col("player_id"), col("game_id"),
-        col("ended_at"), col(metric)),
-      k, desc(metric), col("player_id"), col("game_id"))
-
-  /** All standard leaderboards as one melted pass: metric → rows ranked
-    * <= k. One shuffle total instead of 12 scans. */
+  /** All standard leaderboards over core players' games as one melted
+    * pass (generate_lookup_data.sh:101-315 — 12 metrics × LIMIT 10):
+    * metric → rows ranked <= k. One shuffle total instead of 12 scans. */
   val leaderboardMetrics: Seq[String] = Seq(
     "kills", "deaths", "kd_ratio", "damage_done", "damage_taken", "score",
     "distance_traveled", "headshots", "caches_opened", "revives", "downs",

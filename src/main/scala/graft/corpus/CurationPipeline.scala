@@ -161,7 +161,6 @@ object CurationPipeline {
     val exact = quality.join(firstPerText, Seq("doc_id"), "left_semi").cache()
 
     // 3. normalization-aware dedup: case/spacing/accent variants collapse
-    graft.functions.TextFunctions.register(spark)
     val norm = CurationDedup.normalizedSurvivors(exact, "doc_id", "text")
       .cache()
 

@@ -177,10 +177,6 @@ object StreamingCuration {
     import spark.implicits._
     import graft.ops.{NearDup, TextOps}
     if (fresh.isEmpty) return
-    // register on the frame's OWN session: inside foreachBatch that is the
-    // micro-batch clone, whose function registry was snapshotted at stream
-    // start — registering on the outer session would not resolve here
-    graft.functions.TextFunctions.register(fresh.sparkSession)
 
     val nIn = fresh.count()
     val (ruled, quality) = CurationPipeline.qualityStages(fresh, cfg)

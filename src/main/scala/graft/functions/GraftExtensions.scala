@@ -4,82 +4,89 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Standard deployment path for graft's native expressions:
+/** The one way graft's native expressions reach a session:
   *
   * {{{
   *   spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * registers every function at session build time — no imperative
-  * `register(spark)` call needed. The imperative registrars
-  * ([[GraftFunctions]]/[[TextFunctions]]) remain for sessions the library
-  * doesn't construct (tests, notebooks).
+  * injects every function of [[GraftExtensions.catalog]] and the
+  * [[graft.plans.PushFilterIntoExplode]] optimizer rule at session build
+  * time. Every session the repo builds (the mains, the benchmark harness,
+  * the test session) sets it; a session built elsewhere (a notebook,
+  * `spark-submit`) must set the same conf. Nothing registers functions
+  * imperatively.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.catalog.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), GraftExtensions.info(f), f.builder))
+    }
+    // Optimizer rule: push element-only filter predicates under explode()
+    // (runs in the operator-optimization batch; see the rule's scaladoc).
+    ext.injectOptimizerRule(_ => graft.plans.PushFilterIntoExplode)
+  }
+}
+
+object GraftExtensions {
+
+  /** One native function: its SQL name, the usage string `DESCRIBE
+    * FUNCTION` prints, and its arity-checked builder. */
+  final case class Native(name: String, usage: String, builder: Seq[Expression] => Expression)
+
+  private def native(name: String, arity: Int, usage: String)(
+      f: Seq[Expression] => Expression): Native =
+    Native(name, usage, Arity(arity, name)(f))
 
   // ExpressionInfo's 5-arg constructor slots are (className, db, name,
   // usage, extended) — passing name second would shift it into the db
   // field and print the usage sentence as the function's NAME under
-  // DESCRIBE FUNCTION (verified against spark-catalyst 4.1.2)
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, "", name, usage, "")
+  // DESCRIBE FUNCTION. db is null, as for Spark's built-ins: an empty
+  // db prints the name as `spark_catalog..graft_dot` (spark-catalyst 4.1.2)
+  private def info(f: Native) =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, "")
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "sequential-fold dot product of two ARRAY<DOUBLE>"),
-      Arity(2, "graft_dot")(c => DotProduct(c(0), c(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect"),
-      info("graft_sorted_intersect", "intersection size of two sorted distinct ARRAY<BIGINT>"),
-      Arity(2, "graft_sorted_intersect")(c => SortedIntersectCount(c(0), c(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_bands"),
-      info("graft_minhash_bands", "MinHash LSH band keys of a distinct-hash array"),
-      Arity(1, "graft_minhash_bands")(c => MinhashBandKeys(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "one-pass MinHash signature (all permutation minima)"),
-      Arity(1, "graft_minhash_sig")(c => MinhashSignature(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes3"),
-      info("graft_shingle_hashes3", "sorted distinct 60-bit hashes of word 3-shingles"),
-      Arity(1, "graft_shingle_hashes3")(c => ShingleHashes(c(0), 3))))
-    ext.injectFunction((FunctionIdentifier("graft_winnow_7_4"),
-      info("graft_winnow_7_4", "winnowing fingerprints (7-gram hashes, window-4 minima)"),
-      Arity(1, "graft_winnow_7_4")(c => WinnowFingerprints(c(0), 7, 4))))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      info("graft_nfc", "Unicode NFC normalization of a STRING"),
-      Arity(1, "graft_nfc")(c => NfcNormalize(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_array_min_agg"),
-      info("graft_array_min_agg", "elementwise min aggregate over ARRAY<BIGINT> rows"),
-      Arity(1, "graft_array_min_agg")(c => ArrayMinAgg(c(0)))))
-    Seq(1, 2, 8).foreach { k =>
-      ext.injectFunction((FunctionIdentifier(s"graft_pos_grams$k"),
-        info(s"graft_pos_grams$k", s"positional 60-bit hashes of word $k-grams"),
-        Arity(1, s"graft_pos_grams$k")(c => PosGramHashes(c(0), k))))
-    }
-    ext.injectFunction((FunctionIdentifier("graft_token_buckets64"),
-      info("graft_token_buckets64", "word-token feature-bucket counts + bias"),
-      Arity(1, "graft_token_buckets64")(c => TokenBucketCounts(c(0), 64))))
-    ext.injectFunction((FunctionIdentifier("graft_rep_stats"),
-      info("graft_rep_stats", "per-doc [n_toks, n_distinct, top_bigram_n]"),
-      Arity(1, "graft_rep_stats")(c => RepetitionStats(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_pii_stats"),
-      info("graft_pii_stats", "fused PII redaction stats [n_emails, n_ips, clean_len, clean_h]"),
-      Arity(1, "graft_pii_stats")(c => PiiStats(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash60"),
-      info("graft_simhash60", "60-bit SimHash signature of a text column"),
-      Arity(1, "graft_simhash60")(c => SimhashSig(c(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_clip_count"),
-      info("graft_clip_count", "multiset intersection size of two ARRAY<BIGINT>"),
-      Arity(2, "graft_clip_count")(c => ClipOverlapCount(c(0), c(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_int_dot"),
-      info("graft_int_dot", "integer dot product of two ARRAY<BIGINT>"),
-      Arity(2, "graft_int_dot")(c => IntDotProduct(c(0), c(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_sqdist"),
-      info("graft_sqdist", "integer squared L2 distance of two ARRAY<BIGINT>"),
-      Arity(2, "graft_sqdist")(c => IntSqDist(c(0), c(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_pairs"),
-      info("graft_pairs", "all i<j pairs of an ARRAY<BIGINT> as structs"),
-      Arity(1, "graft_pairs")(c => SortedPairs(c(0)))))
-    // Optimizer rule: push element-only filter predicates under explode()
-    // (runs in the operator-optimization batch; see the rule's scaladoc).
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterIntoExplode)
+  /** Every native function, the one list. */
+  val catalog: Seq[Native] = Seq(
+    native("graft_dot", 2, "sequential-fold dot product of two ARRAY<DOUBLE>")(
+      c => DotProduct(c(0), c(1))),
+    native("graft_sorted_intersect", 2, "intersection size of two sorted distinct ARRAY<BIGINT>")(
+      c => SortedIntersectCount(c(0), c(1))),
+    native("graft_minhash_bands", 1, "MinHash LSH band keys of a distinct-hash array")(
+      c => MinhashBandKeys(c(0))),
+    native("graft_minhash_sig", 1, "one-pass MinHash signature (all permutation minima)")(
+      c => MinhashSignature(c(0))),
+    native("graft_shingle_hashes3", 1, "sorted distinct 60-bit hashes of word 3-shingles")(
+      c => ShingleHashes(c(0), 3)),
+    native("graft_winnow_7_4", 1, "winnowing fingerprints (7-gram hashes, window-4 minima)")(
+      c => WinnowFingerprints(c(0), 7, 4)),
+    native("graft_nfc", 1, "Unicode NFC normalization of a STRING")(c => NfcNormalize(c(0))),
+    native("graft_array_min_agg", 1, "elementwise min aggregate over ARRAY<BIGINT> rows")(
+      c => ArrayMinAgg(c(0))),
+    native("graft_token_buckets64", 1, "word-token feature-bucket counts + bias")(
+      c => TokenBucketCounts(c(0), 64)),
+    native("graft_rep_stats", 1, "per-doc [n_toks, n_distinct, top_bigram_n]")(
+      c => RepetitionStats(c(0))),
+    native("graft_pii_stats", 1, "fused PII redaction stats [n_emails, n_ips, clean_len, clean_h]")(
+      c => PiiStats(c(0))),
+    native("graft_simhash60", 1, "60-bit SimHash signature of a text column")(
+      c => SimhashSig(c(0))),
+    native("graft_clip_count", 2, "multiset intersection size of two ARRAY<BIGINT>")(
+      c => ClipOverlapCount(c(0), c(1))),
+    native("graft_int_dot", 2, "integer dot product of two ARRAY<BIGINT>")(
+      c => IntDotProduct(c(0), c(1))),
+    native("graft_sqdist", 2, "integer squared L2 distance of two ARRAY<BIGINT>")(
+      c => IntSqDist(c(0), c(1))),
+    native("graft_pairs", 1, "all i<j pairs of an ARRAY<BIGINT> as structs")(
+      c => SortedPairs(c(0))),
+  ) ++ Seq(1, 2, 8).map { k =>
+    native(s"graft_pos_grams$k", 1, s"positional 60-bit hashes of word $k-grams")(
+      c => PosGramHashes(c(0), k))
+  } ++ Seq(64, 256).map { b =>
+    // 64 = the q211/q212 oracle config; 256 = the wide lang-id config
+    // (q215/q216 — breadth measurement at 20 classes)
+    native(s"graft_trigram_buckets$b", 1, s"char-trigram feature-bucket counts ($b buckets) + bias")(
+      c => TrigramBucketCounts(c(0), b))
   }
 }

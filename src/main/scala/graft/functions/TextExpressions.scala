@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
@@ -302,49 +301,6 @@ object NfcNormalize {
     val str = s.toString
     if (Normalizer.isNormalized(str, Normalizer.Form.NFC)) s
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
-  }
-}
-
-object TextFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_sorted_intersect",
-      Arity(2, "graft_sorted_intersect")(c => SortedIntersectCount(c(0), c(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_bands",
-      Arity(1, "graft_minhash_bands")(c => MinhashBandKeys(c(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      Arity(1, "graft_minhash_sig")(c => MinhashSignature(c(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes3",
-      Arity(1, "graft_shingle_hashes3")(c => ShingleHashes(c(0), 3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow_7_4",
-      Arity(1, "graft_winnow_7_4")(c => WinnowFingerprints(c(0), 7, 4)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      Arity(1, "graft_nfc")(c => NfcNormalize(c(0))), "built-in")
-    // 64 = the q211/q212 oracle config; 256 = the wide lang-id config
-    // (q215/q216 — breadth measurement at 20 classes)
-    Seq(64, 256).foreach { b =>
-      reg.createOrReplaceTempFunction(s"graft_trigram_buckets$b",
-        Arity(1, s"graft_trigram_buckets$b")(c => TrigramBucketCounts(c(0), b)),
-        "built-in")
-    }
-    reg.createOrReplaceTempFunction("graft_token_buckets64",
-      Arity(1, "graft_token_buckets64")(c => TokenBucketCounts(c(0), 64)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_rep_stats",
-      Arity(1, "graft_rep_stats")(c => RepetitionStats(c(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_pii_stats",
-      Arity(1, "graft_pii_stats")(c => PiiStats(c(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash60",
-      Arity(1, "graft_simhash60")(c => SimhashSig(c(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_array_min_agg",
-      Arity(1, "graft_array_min_agg")(c => ArrayMinAgg(c(0))), "built-in")
-    Seq(1, 2, 8).foreach { k =>
-      reg.createOrReplaceTempFunction(s"graft_pos_grams$k",
-        Arity(1, s"graft_pos_grams$k")(c => PosGramHashes(c(0), k)), "built-in")
-    }
-    reg.createOrReplaceTempFunction("graft_clip_count",
-      Arity(2, "graft_clip_count")(c => ClipOverlapCount(c(0), c(1))), "built-in")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
@@ -244,30 +243,4 @@ case class SortedPairs(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): SortedPairs =
     copy(child = newChild)
-}
-
-/** Session-level registration of graft's native expressions, so query code
-  * can use them in SQL-string form (`expr("graft_dot(a, b)")`) uniformly
-  * with the built-ins. Idempotent.
-  */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot",
-      Arity(2, "graft_dot")(c => DotProduct(c(0), c(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_int_dot",
-      Arity(2, "graft_int_dot")(c => IntDotProduct(c(0), c(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sqdist",
-      Arity(2, "graft_sqdist")(c => IntSqDist(c(0), c(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_pairs",
-      Arity(1, "graft_pairs")(c => SortedPairs(c(0))),
-      "built-in")
-  }
 }

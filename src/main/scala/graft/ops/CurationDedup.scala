@@ -30,7 +30,6 @@ object CurationDedup {
     * interpreted with an md5 expression chain per gram) and falls back
     * to the composed form at unregistered sizes. */
   def gramHashed(docs: DataFrame, textCol: String, k: Int = 8): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val ghs =
       if (Set(1, 2, 8).contains(k)) s"graft_pos_grams$k($textCol)"
       else TextOps.posGramHashesExpr("_toks", k)
@@ -76,7 +75,7 @@ object CurationDedup {
   /** Normalization-aware dedup: one survivor (min id) per
     * NFC+casefold+whitespace-normalized text — catches case / spacing /
     * composed-vs-decomposed-accent duplicates that raw-hash dedup
-    * misses. Register [[graft.functions.TextFunctions]] first. */
+    * misses. */
   def normalizedSurvivors(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
     val first = docs

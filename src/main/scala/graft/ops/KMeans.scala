@@ -65,8 +65,7 @@ object KMeans {
 
   /** Per-cell assignment scores over literal-embedded centroids:
     * argmax(score) == argmin Euclidean distance. `cd` must be
-    * ARRAY<DOUBLE> (codes cast — `graft_dot` does no coercion; register
-    * [[graft.functions.GraftFunctions]] first). */
+    * ARRAY<DOUBLE> (codes cast — `graft_dot` does no coercion). */
   def scoreExprs(cd: String, cents: IndexedSeq[Centroid]): Seq[String] =
     cents.map { c =>
       val m = c.means
@@ -81,7 +80,6 @@ object KMeans {
   def train(em: DataFrame, idCol: String, codesCol: String,
             k: Int, iters: Int): IndexedSeq[Centroid] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k, $iters")
-    graft.functions.GraftFunctions.register(em.sparkSession)
     val seed = em.orderBy(col(idCol)).limit(k)
       .select(col(codesCol)).collect()
     // a corpus smaller than k pads the unseeded cells with zero

@@ -133,7 +133,6 @@ object LinearTrain {
     * [[trainOnRows]] path (same feature space, same integer algebra —
     * the determinism and scorer-parity specs pin it). */
   def train(docs: DataFrame): State = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val cnts = docs.select(
         expr(s"CASE WHEN ($LabelExpr) = 1 THEN 'pos' ELSE 'neg' END").as("cls"),
         expr(s"graft_token_buckets$B(text)").as("cnts"))
@@ -146,8 +145,7 @@ object LinearTrain {
     * a plain SQL expression — `graft_int_dot` against the folded
     * coefficient literal + the additive constant. Same integers as
     * [[marginsFromRows]] (loud-exact long arithmetic in place of the
-    * decimal sum); requires [[graft.functions.GraftFunctions]]
-    * registered. */
+    * decimal sum). */
   def marginExprFromCounts(cntsCol: String, st: State): String = {
     val (a, consts) = foldedCoeffs(st)
     val arr = a.map(v => s"${v}L").mkString("array(", ", ", ")")

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
 
 /** MinHash + LSH near-duplicate detection as a reusable library operator —
   * the scale path for corpus dedup (candidate generation is an equi-join
@@ -25,7 +24,6 @@ object NearDup {
   /** (id, hs) — sorted distinct shingle hashes per doc. Caller should
     * repartition a single-file scan first and cache the result. */
   def shingleHashed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    TextFunctions.register(docs.sparkSession)
     docs.filter(length(col(textCol)) >= 13)
       .select(col(idCol).as("doc_id"),
               expr(s"graft_shingle_hashes3($textCol)").as("hs"))
@@ -41,7 +39,6 @@ object NearDup {
     * self-join, the dedup-at-ingest split (q186), and any future probe
     * pattern share; one source for the banding convention. */
   def bandSignatures(hashed: DataFrame): DataFrame = {
-    TextFunctions.register(hashed.sparkSession)
     hashed.select(col("doc_id"),
       posexplode(expr("graft_minhash_bands(hs)")).as(Seq("band", "key")))
   }
@@ -61,7 +58,6 @@ object NearDup {
     * join their own candidate sets through this). */
   def jaccardScored(cand: DataFrame, hashed: DataFrame,
                     aCol: String, bCol: String): DataFrame = {
-    TextFunctions.register(hashed.sparkSession)
     val a = hashed.select(col("doc_id").as(aCol), col("hs").as("hs_a"))
     val b = hashed.select(col("doc_id").as(bCol), col("hs").as("hs_b"))
     cand.join(a, aCol).join(b, bCol)
@@ -88,7 +84,6 @@ object NearDup {
     * as [[pairs]]: banded candidate generation, never all-pairs; the
     * scoring join touches candidates only. */
   def containmentPairs(hashed: DataFrame, minPct: Long): DataFrame = {
-    TextFunctions.register(hashed.sparkSession)
     val cand = candidatePairs(hashed)
     val a = hashed.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
     val b = hashed.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))

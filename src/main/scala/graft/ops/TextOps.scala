@@ -94,8 +94,7 @@ object TextOps {
   }
 
   /** Normalized text for normalization-aware dedup (q74 and the curation
-    * pipeline): Unicode NFC (native `graft_nfc` — register
-    * [[graft.functions.TextFunctions]] first) + casefold + whitespace
+    * pipeline): Unicode NFC (native `graft_nfc`) + casefold + whitespace
     * collapse. Twin: [[sql.normalize]]. */
   def normalizeExpr(text: String): String =
     s"trim(regexp_replace(lower(graft_nfc($text)), ' +', ' '))"

@@ -1,44 +1,23 @@
 package graft.ops
 
-/** URL canonicalization for domain-level curation — the stage every
+/** URL host extraction for domain-level curation — the stage every
   * public pretraining pipeline (CCNet, RefinedWeb, Dolma) runs before
-  * text-level dedup: group documents by REGISTERED domain (eTLD+1) so
+  * text-level dedup groups documents by REGISTERED domain (eTLD+1), so
   * per-domain quality decisions and caps apply to `cdn.assets.example.com`
   * and `www.example.com` as one publisher, not two.
   *
-  * Cross-engine exactness: both engines run the same lowercase → strip
-  * scheme/userinfo/port/path → strip one leading `www.` → take the last
-  * two labels (three when the last two are a known multi-part public
-  * suffix) pipeline, built from regexp/split/CASE primitives that exist
-  * in Spark SQL and DuckDB with identical semantics (the extraction
-  * regex avoids constructs where Java regex and RE2 differ).
+  * This object extracts the host: lowercase → strip scheme / userinfo /
+  * port / path / trailing dot. [[Psl]] derives the registered domain
+  * from that host with the full public-suffix list.
   *
-  * The multi-part suffix set is a deliberately SMALL built-in subset of
-  * the public-suffix list — the operator's contract is the grouping
-  * rule, not PSL completeness; swap in the full list as a broadcast
-  * lookup at production scale.
+  * Cross-engine exactness: both engines run the same pipeline, built
+  * from regexp primitives that exist in Spark SQL and DuckDB with
+  * identical semantics (the extraction regex avoids constructs where
+  * Java regex and RE2 differ).
   *
-  * Scale: pure per-row expressions (no UDF, no shuffle) — the domain
-  * column this derives becomes a groupBy/Window partition key, and a
-  * per-domain cap is one hash-rank window over it.
+  * Scale: pure per-row expressions (no UDF, no shuffle).
   */
 object UrlOps {
-
-  /** Multi-part public suffixes the registered-domain rule recognizes
-    * (subset of the public-suffix list — public knowledge). */
-  val multiPartSuffixes: Seq[String] = Seq(
-    "co.uk", "ac.uk", "gov.uk", "org.uk", "me.uk",
-    "co.jp", "ac.jp", "ne.jp", "or.jp",
-    "com.au", "net.au", "org.au", "gov.au", "edu.au",
-    "co.nz", "org.nz", "net.nz",
-    "com.br", "org.br", "gov.br",
-    "co.in", "ac.in", "gov.in",
-    "com.cn", "org.cn", "net.cn",
-    "com.mx", "com.ar", "com.tr", "co.kr", "or.kr",
-    "com.sg", "com.hk", "com.tw")
-
-  private def suffixInList: String =
-    multiPartSuffixes.map(s => s"'$s'").mkString("(", ", ", ")")
 
   /** Host extraction regex: optional scheme, optional userinfo, then
     * either a bracketed IPv6 literal (colons inside the brackets must
@@ -53,13 +32,6 @@ object UrlOps {
     * embedded verbatim for DuckDB. */
   private def sparkLit(regex: String): String = regex.replace("\\", "\\\\")
 
-  /** Spark SQL: canonical host of a URL column — lowercased, scheme /
-    * userinfo / port / path stripped (IPv6 brackets preserved),
-    * trailing dot and one leading `www.` removed. '' when nothing
-    * parses. */
-  def hostExpr(url: String): String =
-    s"regexp_replace(${rawHostExpr(url)}, '^www\\\\.', '')"
-
   /** Spark SQL: the host EXACTLY as the URL names it (lowercased,
     * scheme/userinfo/port/path/trailing-dot stripped) — NO `www.`
     * strip. The published PSL algorithm is defined over this host:
@@ -72,47 +44,12 @@ object UrlOps {
     s"regexp_replace(regexp_extract(lower($url), " +
       s"'${sparkLit(hostRegex)}', 1), '\\\\.$$', '')"
 
-  /** Spark SQL: registered domain (eTLD+1) of a URL column. IP-literal
-    * hosts (dotted-quad IPv4, bracketed IPv6) have no registrable
-    * label structure — they canonicalize to themselves, never to their
-    * "last two octets". */
-  def registeredDomainExpr(url: String): String = {
-    val h = hostExpr(url)
-    // labels via literal-dot split; element_at is 1-based, negatives
-    // count from the end in both engines' equivalents
-    val labels = s"split($h, '\\\\.')"
-    val last2 =
-      s"concat(element_at($labels, -2), '.', element_at($labels, -1))"
-    val last3 =
-      s"concat(element_at($labels, -3), '.', $last2)"
-    s"""CASE WHEN $h RLIKE '^[0-9.]+$$' OR substring($h, 1, 1) = '['
-       |    THEN $h
-       |  WHEN size($labels) <= 2 THEN $h
-       |  WHEN $last2 IN $suffixInList THEN $last3
-       |  ELSE $last2 END""".stripMargin
-  }
-
   /** DuckDB twins — same pipeline, DuckDB primitives. */
   object sql {
 
-    def host(url: String): String =
-      s"regexp_replace(${rawHost(url)}, '^www\\.', '')"
-
-    /** DuckDB twin of [[UrlOps.rawHostExpr]] — no `www.` strip. */
+    /** DuckDB twin of [[UrlOps.rawHostExpr]]. */
     def rawHost(url: String): String =
       s"regexp_replace(regexp_extract(lower($url), " +
         s"'${UrlOps.hostRegex}', 1), '\\.$$', '')"
-
-    def registeredDomain(url: String): String = {
-      val h = host(url)
-      val labels = s"string_split($h, '.')"
-      val last2 = s"concat(($labels)[-2], '.', ($labels)[-1])"
-      val last3 = s"concat(($labels)[-3], '.', $last2)"
-      s"""CASE WHEN regexp_matches($h, '^[0-9.]+$$')
-         |    OR substring($h, 1, 1) = '[' THEN $h
-         |  WHEN len($labels) <= 2 THEN $h
-         |  WHEN $last2 IN ${UrlOps.suffixInList} THEN $last3
-         |  ELSE $last2 END""".stripMargin
-    }
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 
 /** Embedding-space near-duplicate detection as a reusable operator — the
   * vector twin of [[NearDup]]: sign-bit LSH buckets generate candidates,
@@ -57,7 +56,6 @@ object VectorNearDup {
   /** (id, v, nrm, bucket) — preprocessed vectors. Caller caches. */
   def prepared(vectors: DataFrame, idCol: String, embeddingCol: String,
                nPlanes: Int, dim: Int): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
     vectors
       .select(col(idCol).as("vec_id"),
               expr(VectorOps.toDoubleExpr(embeddingCol)).as("v"))

@@ -30,8 +30,8 @@ object VectorOps {
     s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
   /** Spark: same fold as [[dotExpr]] as a native codegen expression
-    * ([[graft.functions.DotProduct]]); requires
-    * `GraftFunctions.register(spark)`. */
+    * ([[graft.functions.DotProduct]]), in every session that sets
+    * `spark.sql.extensions=graft.functions.GraftExtensions`. */
   def fastDot(a: String, b: String): String = s"graft_dot($a, $b)"
 
   def normExpr(a: String): String = s"sqrt(${fastDot(a, a)})"

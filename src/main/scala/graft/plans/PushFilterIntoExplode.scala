@@ -46,10 +46,9 @@ import org.apache.spark.sql.types.ArrayType
   * element-level stats).
   *
   * Injected via [[graft.functions.GraftExtensions]] (the
-  * `spark.sql.extensions` deployment path) into the operator-optimization
-  * batch; `spark.experimental.extraOptimizations` is the imperative twin
-  * for sessions the library didn't build. Fixed-point safe: each
-  * application strictly removes pushable conjuncts from the Filter.
+  * `spark.sql.extensions` conf every session the repo builds sets) into
+  * the operator-optimization batch. Fixed-point safe: each application
+  * strictly removes pushable conjuncts from the Filter.
   */
 object PushFilterIntoExplode extends Rule[LogicalPlan] with PredicateHelper {
 

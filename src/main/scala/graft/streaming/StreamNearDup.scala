@@ -126,8 +126,6 @@ object StreamNearDup {
                  ttl: TTLConfig = TTLConfig.NONE,
                  maxAnchors: Int = 4): Dataset[Candidate] = {
     require(maxAnchors >= 1, s"maxAnchors must be >= 1, got $maxAnchors")
-    val spark = docs.sparkSession
-    graft.functions.TextFunctions.register(spark)
     implicit val be = Encoders.product[BandDoc]
     implicit val ce = Encoders.product[Candidate]
     implicit val le = Encoders.scalaLong

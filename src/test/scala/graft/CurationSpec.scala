@@ -163,7 +163,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("graft_nfc: composes decomposed forms, preserves normalized input") {
-    graft.functions.TextFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_nfc('Café') = 'Café', graft_nfc('plain'), graft_nfc(CAST(NULL AS STRING))")
       .as[(Boolean, String, Option[String])].head()

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session startup dominates suite runtime otherwise). */
+  * session startup dominates suite runtime otherwise). It carries
+  * [[functions.GraftExtensions]] like every session the mains build, so
+  * specs resolve the native functions and run the optimizer rule that
+  * Bench and Verify run. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +15,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -10,10 +10,7 @@ import graft.SparkSpec
 class ArrayMinAggSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered() = TextFunctions.register(spark)
-
   test("elementwise min across rows; empty and null rows are ignored") {
-    registered()
     val df = Seq(
       ("g1", Seq(5L, 1L, 9L)),
       ("g1", Seq(2L, 7L, 9L)),
@@ -28,7 +25,6 @@ class ArrayMinAggSpec extends SparkSpec {
   }
 
   test("a group with no contributing rows evaluates to null") {
-    registered()
     val got = Seq(("g", Seq.empty[Long])).toDF("g", "a")
       .groupBy(col("g")).agg(expr("graft_array_min_agg(a)").as("m"))
       .select(col("m").isNull).as[Boolean].collect().toSeq
@@ -36,7 +32,6 @@ class ArrayMinAggSpec extends SparkSpec {
   }
 
   test("mismatched lengths fail fast instead of zipping silently") {
-    registered()
     val ex = intercept[Exception] {
       Seq(("g", Seq(1L, 2L)), ("g", Seq(1L, 2L, 3L))).toDF("g", "a")
         .groupBy(col("g")).agg(expr("graft_array_min_agg(a)").as("m"))
@@ -46,7 +41,6 @@ class ArrayMinAggSpec extends SparkSpec {
   }
 
   test("equivalent to the composed posexplode + per-component min") {
-    registered()
     val df = (1L to 50L).map(i =>
       (s"g${i % 3}", Seq(i * 7 % 13, i * 5 % 11, i * 3 % 7)))
       .toDF("g", "a")

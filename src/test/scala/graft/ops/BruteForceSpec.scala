@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 
 /** BruteForce.allPairsCosine: the flat-array kernel must be BIT-identical
   * to the expression form it replaces (toDoubleExpr → graft_dot → / norms)
@@ -26,7 +25,6 @@ class BruteForceSpec extends SparkSpec {
   }
 
   private def expressionForm(threshold: Double) = {
-    GraftFunctions.register(spark)
     val em = vecs
       .select(col("vec_id"), expr(VectorOps.toDoubleExpr("embedding")).as("v"))
       .withColumn("nrm", expr(VectorOps.normExpr("v")))
@@ -80,7 +78,6 @@ class BruteForceSpec extends SparkSpec {
         col("v").as("va"), col("nrm").as("na"))
       val b = withN.select(col("cell"), col("vec_id").as("id_b"),
         col("v").as("vb"), col("nrm").as("nb"))
-      graft.functions.GraftFunctions.register(spark)
       a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
         .filter(expr(VectorOps.fastDot("va", "vb")) / (col("na") * col("nb")) >= tau)
         .select(col("cell"), col("id_b")).distinct()

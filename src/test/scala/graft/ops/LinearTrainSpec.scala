@@ -146,7 +146,6 @@ class LinearTrainSpec extends SparkSpec {
     // ...and the counts-ARRAY kernels (the q211/q212 path: one
     // mapPartitions pass per round, 128-bit gradient accumulators)
     // train the SAME states and predict the same argmax
-    graft.functions.TextFunctions.register(spark)
     val cntsDf = docs.withColumn("cnts",
       expr(s"graft_trigram_buckets${LinearTrain.B}(text)"))
     val fromCounts = LinearTrain
@@ -184,7 +183,6 @@ class LinearTrainSpec extends SparkSpec {
 
   test("native trigram-bucket counts equal the composed lambda form on " +
       "ascii, multibyte, short, and empty strings") {
-    graft.functions.TextFunctions.register(spark)
     val B = LinearTrain.B
     val samples = Seq("the quick brown fox", "ab", "", "aaa",
       "tüv äöü ß中文本 €uro", "中中中中", "a中b", "x")
@@ -206,7 +204,6 @@ class LinearTrainSpec extends SparkSpec {
   }
 
   test("native token-bucket counts equal the exploded featureRows aggregation") {
-    graft.functions.TextFunctions.register(spark)
     val docs = corpus(30).toDF("doc_id", "text", "n_chars")
     val exploded = LinearTrain.featureRows(docs)
       .select(col("doc_id"), col("b"), col("cnt"))
@@ -225,7 +222,6 @@ class LinearTrainSpec extends SparkSpec {
     }
     // and the margin EXPRESSION serves the same integers as the
     // relational margin path
-    graft.functions.GraftFunctions.register(spark)
     val st = LinearTrain.train(docs)
     val viaExpr = docs
       .select(col("doc_id"),

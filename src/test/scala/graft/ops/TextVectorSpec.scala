@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.TextFunctions
 
 /** Specs for the cross-engine text/vector primitives and their native
   * Catalyst twins. The load-bearing assertions: the NATIVE expressions
@@ -34,7 +33,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native minhash band keys == composed array_min/transform form") {
-    TextFunctions.register(spark)
     val df = onDoc("the quick brown fox jumps over the lazy dog again and again")
       .select(expr(TextOps.shingleHashesExpr("text", 3)).as("hs"))
     val native = df.select(expr("graft_minhash_bands(hs)").as("b"))
@@ -46,7 +44,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native minhash signature == composed array_min/transform form") {
-    TextFunctions.register(spark)
     val df = onDoc("the quick brown fox jumps over the lazy dog again and again")
       .select(expr(TextOps.shingleHashesExpr("text", 3)).as("hs"))
     val native = df.select(expr("graft_minhash_sig(hs)").as("m"))
@@ -62,7 +59,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native shingle hashes == composed array_sort/distinct/md5 form") {
-    TextFunctions.register(spark)
     val df = onDoc("the quick brown fox jumps over the quick brown fox again")
     val native = df.select(expr("graft_shingle_hashes3(text)").as("h"))
       .as[Seq[Long]].head()
@@ -72,7 +68,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native winnow fingerprints == composed rolling-hash window minima") {
-    TextFunctions.register(spark)
     val df = onDoc("a quick brown fox jumps over the lazy dog")
     val native = df.select(expr("graft_winnow_7_4(text)").as("f"))
       .as[Seq[Long]].head().toSet
@@ -87,7 +82,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("native winnow matches the composed form on ASTRAL text: grams " +
       "are code-point grams, never split surrogate pairs") {
-    TextFunctions.register(spark)
     // two different astral chars (surrogate pairs in UTF-16): a code-UNIT
     // walk would miscount the grams AND alias both chars to '?' when a
     // lone surrogate half UTF-8-encodes — Spark's substring/length (and
@@ -106,7 +100,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("sorted intersect count == size(array_intersect) on sorted inputs") {
-    TextFunctions.register(spark)
     val df = Seq((Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 9L, 11L))).toDF("a", "b")
     val native = df.select(expr("graft_sorted_intersect(a, b)")).as[Long].head()
     val builtin = df.select(size(array_intersect($"a", $"b")).cast("long")).as[Long].head()
@@ -114,7 +107,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native positional gram hashes == composed transform/md5 form") {
-    TextFunctions.register(spark)
     // duplicates preserved, order preserved, short-doc empty array;
     // astral tokens are safe — the split character (space) is a BMP
     // code unit, so surrogate pairs never split and token bytes match
@@ -132,7 +124,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("clip count is the multiset intersection (Σ min of per-value counts)") {
-    TextFunctions.register(spark)
     val df = Seq(
       // (a, b, want): 1 appears 3× and 2×, 2 appears 1× and 2×, 9 only left
       (Seq(1L, 1L, 1L, 2L, 9L), Seq(2L, 1L, 2L, 1L), 3L),
@@ -143,7 +134,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("native simhash signature == composed explode + 60-vote aggregate") {
-    TextFunctions.register(spark)
     val samples = Seq("the quick brown fox", "the the the quick",
       "a", "", "x y z w v u t s r q p")
     val df = samples.toDF("text")
@@ -163,7 +153,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("fused PII stats equal the composed count/redact/length/hash chain") {
-    TextFunctions.register(spark)
     val samples = Seq(
       "reach me at bob.smith+x@example.co.uk or 10.0.0.1 ok",
       "two mails a@b.io c@d.org and ips 1.2.3.4 5.6.7.8",
@@ -181,13 +170,7 @@ class TextOpsSpec extends SparkSpec {
     assert(bad == 0L)
   }
 
-  test("GraftExtensions registers all native functions via the extensions API") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext) // must not throw
-  }
-
   test("empty-overlap and identical arrays") {
-    TextFunctions.register(spark)
     val df = Seq(
       (Seq(1L, 2L), Seq(3L, 4L), 0L),
       (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L), 3L),
@@ -202,7 +185,6 @@ class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_pairs equals the composed nested-transform pair generator") {
-    graft.functions.GraftFunctions.register(spark)
     val guarded = Seq(Seq(3L, 7L, 9L, 11L), Seq(1L, 2L)).toDF("ps")
     val native = guarded.select(expr("graft_pairs(ps)").as("p"))
       .as[Seq[(Long, Long)]].collect().toSeq
@@ -222,7 +204,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("graft_dot is bit-identical to the interpreted sequential fold") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 50).map(_ => (
       Seq.fill(64)(rnd.nextFloat().toDouble),
@@ -235,7 +216,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("hyperplane buckets are stable and in range") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val df = (1 to 20).map(_ => Tuple1(Seq.fill(64)(rnd.nextFloat().toDouble))).toDF("v")
     val buckets = df.select(expr(VectorOps.hyperplaneBucketExpr("v", 8, 64)).as("b"))

@@ -1,47 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
-/** Registered-domain canonicalization (UrlOps / q200): every rule the
-  * expression claims — scheme/userinfo/port/path stripping, case
-  * folding, trailing-dot and single-www removal, multi-part public
-  * suffixes — pinned against hand-computed expectations. The q200
-  * oracle pins Spark↔DuckDB agreement; this pins Spark↔truth. */
+/** Registered-domain canonicalization (UrlOps host extraction + Psl,
+  * q200): scheme/userinfo/port/path stripping, case folding, trailing-dot
+  * and single-www removal, and the public-suffix rules — pinned against
+  * hand-computed expectations. The q200 oracle pins Spark↔DuckDB
+  * agreement; this pins Spark↔truth. */
 class UrlOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def domains(urls: Seq[String]): Seq[String] = {
-    urls.toDF("url")
-      .withColumn("d", expr(UrlOps.registeredDomainExpr("url")))
-      .select("d").as[String].collect().toSeq
-  }
-
-  test("registered domain: scheme, userinfo, port, path, case, www, " +
-      "trailing dot all strip; multi-part suffixes keep three labels") {
-    val cases = Seq(
-      "https://cdn.assets.example.com/a/b?q=1#f" -> "example.com",
-      "http://www.example.com" -> "example.com",
-      "https://Media.Example.COM/x" -> "example.com",
-      "https://example.com:8443/d" -> "example.com",
-      "https://user:pw@example.io/p/1" -> "example.io",
-      "ftp://files.example.org" -> "example.org",
-      "https://wiki.knowledge.org./page" -> "knowledge.org",
-      "https://news.example.co.uk/s" -> "example.co.uk",
-      "https://api.service.gov.uk" -> "service.gov.uk",
-      "https://shop.example.com.au/k" -> "example.com.au",
-      "example.com/pathonly" -> "example.com",
-      "https://localhost:9000/x" -> "localhost",
-      "https://deep.sub.tree.example.com" -> "example.com",
-      // IP literals have no registrable labels — never "last two octets"
-      "https://93.184.216.34:8080/x" -> "93.184.216.34",
-      "http://[2001:db8::1]/p" -> "[2001:db8::1]")
-    val got = domains(cases.map(_._1))
-    cases.zip(got).foreach { case ((url, want), d) =>
-      assert(d == want, s"$url -> $d, wanted $want")
-    }
-  }
 
   private def pslDomains(urls: Seq[String]): Seq[String] = {
     Psl.withRegisteredDomain(urls.toDF("url"), "url", "d")
@@ -78,16 +45,20 @@ class UrlOpsSpec extends SparkSpec {
       "https://x.city.kawasaki.jp" -> "city.kawasaki.jp",
       // prefecture plain rule
       "https://metro.tokyo.jp/x" -> "metro.tokyo.jp",
-      // ICANN multi-part rules agree with the UrlOps fallback subset
+      // ICANN multi-part rules keep three labels
       "https://news.example.co.uk/s" -> "example.co.uk",
-      // full-list divergence from the fallback subset: the private
-      // section lists service.gov.uk itself (UK government PaaS), so
-      // each service is its own publisher under the published list
+      // the private section lists service.gov.uk itself (UK government
+      // PaaS), so each service is its own publisher
       "https://api.service.gov.uk" -> "api.service.gov.uk",
       "https://shop.example.com.au/k" -> "example.com.au",
       "https://cdn.assets.example.com/a" -> "example.com",
       "http://www.example.com" -> "example.com",
       "https://wiki.knowledge.org./page" -> "knowledge.org",
+      // userinfo, non-http scheme, mixed case, no scheme at all
+      "https://user:pw@example.io/p/1" -> "example.io",
+      "ftp://files.example.org" -> "example.org",
+      "https://Media.Example.COM/x" -> "example.com",
+      "example.com/pathonly" -> "example.com",
       // a host that IS a public suffix canonicalizes to itself
       "https://github.io" -> "github.io",
       "https://co.uk/x" -> "co.uk",
@@ -105,12 +76,12 @@ class UrlOpsSpec extends SparkSpec {
 
   test("PSL path: null and unparseable URLs yield '', and caller columns " +
       "pass through untouched") {
-    val df = Seq((1L, Some("https://a.co.uk/x")), (2L, None))
+    val df = Seq((1L, Some("https://a.co.uk/x")), (2L, None), (3L, Some("")))
       .toDF("doc_id", "url")
     val got = Psl.withRegisteredDomain(df, "url", "domain")
       .orderBy("doc_id")
       .select("doc_id", "domain").as[(Long, String)].collect().toSeq
-    assert(got == Seq((1L, "a.co.uk"), (2L, "")))
+    assert(got == Seq((1L, "a.co.uk"), (2L, ""), (3L, "")))
   }
 
   test("PSL rule table is well-formed: lowercase, no stars/bangs, no " +
@@ -242,16 +213,5 @@ class UrlOpsSpec extends SparkSpec {
     cases.zip(got).foreach { case ((url, want), d) =>
       assert(d == want, s"$url -> $d, wanted $want")
     }
-  }
-
-  test("unparseable and null URLs yield empty/null, never a crash") {
-    // '' extracts an empty host -> one empty label -> <= 2 labels ->
-    // the empty host itself; the pipeline's domain-cap stage reads both
-    // '' and null as "no parseable URL" and never caps such docs
-    assert(domains(Seq("")) == Seq(""))
-    val nulls = Seq[Option[String]](None).toDF("url")
-      .withColumn("d", expr(UrlOps.registeredDomainExpr("url")))
-      .select("d").as[Option[String]].collect().toSeq
-    assert(nulls == Seq(None), "null url must canonicalize to null")
   }
 }

@@ -113,7 +113,6 @@ class StreamNearDupSpec extends SparkSpec {
     val batchPairs = graft.SparkEntry.queries("q27_minhash_lsh")(spark, dir)
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     // coverage set from the SAME native band derivation the stream uses
-    graft.functions.TextFunctions.register(spark)
     val bandRows = graft.Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode(expr("graft_minhash_bands(graft_shingle_hashes3(text))"))
