@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Components, NearDup, TextOps, VectorOps}
+import graft.ops.{Components, DriverCollect, NearDup, TextOps, VectorOps}
 
 /** Deduplication operator family — the core large-scale training-data
   * pipeline extension beyond the reference's own surface (SURVEY.md §7.2
@@ -744,13 +744,11 @@ object QueriesDedup {
   // The DuckDB twin walks the same edges with q51's recursive-CTE min
   // reachability — both engines agree at the fixpoint exactly.
   private val ErEditMax = 2
-  /** Bounds for q146's driver-side match+cluster fast path — the same
-    * bounded-collect discipline as [[graft.ops.Components.LocalEdgeMax]]
-    * (≤100k names ≈ a few MB collected) plus a within-block pair budget
-    * so a degenerate blocking key can never turn the driver kernel
-    * quadratic (2M bounded-levenshtein probes ≈ tens of ms). Past either
-    * bound the distributed pipeline below runs unchanged. */
-  private val ErLocalNameMax = 100000
+  /** Within-block pair budget for q146's driver-side match+cluster fast
+    * path, so a degenerate blocking key can never turn the driver kernel
+    * quadratic (2M bounded-levenshtein probes ≈ tens of ms). The name
+    * list itself comes through [[DriverCollect.upTo]]; past either bound
+    * the distributed pipeline below runs unchanged. */
   private val ErLocalPairMax = 2000000L
 
   /** dist(a, b) ≤ k, exact — the driver twin of Spark's bounded 3-arg
@@ -841,34 +839,33 @@ object QueriesDedup {
     // tasks of fixed allocation — the same storm class Components'
     // union-find path closed, and the driver's r15 ledger still charged
     // q146 6.7 s with a 9.3 GB / 53 s AQE broadcast-build stage over 5 MB
-    // of input. When the vocabulary fits the library's bounded-collect
-    // discipline (≤ ErLocalNameMax names AND ≤ ErLocalPairMax within-
-    // block pairs), blocking + bounded edit-distance match + union-find
-    // run as driver work on ONE collected name list, and the only
-    // distributed stages left are the parts scan, a broadcast join of
-    // the local label map, and the final aggregate. The kernel replays
+    // of input. When the name list fits [[DriverCollect.upTo]] and its
+    // blocks fit ErLocalPairMax, blocking + bounded edit-distance match +
+    // union-find run as driver work on ONE collected name list, and the
+    // only distributed stages left are the parts scan, a broadcast join
+    // of the local label map, and the final aggregate. The kernel replays
     // the distributed semantics exactly (erLocalLabels/editLe scaladoc;
     // EntityResolutionSpec pins local == distributed on a planted
     // fixture). Past either bound the distributed pipeline below runs
     // unchanged.
-    val up = parts.select(col("p_name").as("name")).distinct()
-      .limit(ErLocalNameMax + 1).collect()
-    val localLabels =
-      if (up.length > ErLocalNameMax) None
-      else erLocalLabels(up.map(_.getString(0)))
-    localLabels.fold(erDistributed(s, parts)) { labelRows =>
-      val spark = s
-      import spark.implicits._
-      val labels = labelRows.toSeq.toDF("name", "entity")
-      parts
-        .join(broadcast(labels), col("p_name") === col("name"))
-        .groupBy(col("entity"))
-        .agg(countDistinct(col("p_name")).as("n_names"),
-          count(lit(1)).as("n_parts"),
-          min(col("p_partkey")).as("first_part"))
-        .orderBy(col("entity"))
-    }
+    DriverCollect.upTo(parts.select(col("p_name").as("name")).distinct())
+      .flatMap(names => erLocalLabels(names.map(_.getString(0))))
+      .fold(erDistributed(s, parts)) { labelRows =>
+        val spark = s
+        import spark.implicits._
+        erAudit(parts, labelRows.toSeq.toDF("name", "entity"))
+      }
   }
+
+  /** q146's per-entity audit over a (name, entity) label map — the tail
+    * both the driver-side and the distributed path feed. */
+  private def erAudit(parts: DataFrame, labels: DataFrame): DataFrame =
+    parts.join(broadcast(labels), col("p_name") === col("name"))
+      .groupBy(col("entity"))
+      .agg(countDistinct(col("p_name")).as("n_names"),
+        count(lit(1)).as("n_parts"),
+        min(col("p_partkey")).as("first_part"))
+      .orderBy(col("entity"))
 
   /** The pre-r16 distributed ER pipeline — the fallback past the
     * bounded-collect limits (unchanged semantics; see q146's comment
@@ -894,12 +891,7 @@ object QueriesDedup {
       .join(broadcast(comp.withColumnRenamed("id", "name")), Seq("name"), "left")
       .withColumn("entity", coalesce(col("component"), col("name")))
       .select(col("name"), col("entity"))
-    val out = parts.join(broadcast(labels), col("p_name") === col("name"))
-      .groupBy(col("entity"))
-      .agg(countDistinct(col("p_name")).as("n_names"),
-        count(lit(1)).as("n_parts"),
-        min(col("p_partkey")).as("first_part"))
-      .orderBy(col("entity"))
+    val out = erAudit(parts, labels)
     names.unpersist()
     out
   }

@@ -155,8 +155,9 @@ object QueriesGraph {
     * corpus-sized build per (session, dir) instead of five — at sf1
     * that is four redundant full pair-explode + support aggregations
     * per ledger session removed. The rows are held DRIVER-side
-    * (≤ M × 3 longs ≈ 2.4 MB — inside the documented dimension-sized
-    * collect discipline, bounded by M at any corpus size) and
+    * (≤ M × 3 longs ≈ 2.4 MB; M is [[graft.ops.DriverCollect.Max]]'s
+    * value, and the `limit(TriEdges)` cut bounds the rows by construction,
+    * so there is no distributed fallback and no `DriverCollect.upTo`) and
     * re-parallelized per consumer: a cached/checkpointed FRAME would
     * not survive Bench's deterministic inter-query persistent-RDD
     * release (lineage is truncated — an unpersisted localCheckpoint

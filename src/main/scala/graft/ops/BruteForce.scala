@@ -24,12 +24,13 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB): this is deliberately NOT a corpus-scale
   * operator — it is the exact baseline that measures the recall of the
   * bucketed paths ([[VectorNearDup.pairsMultiprobe]], q52; IVF, q41).
-  * The `maxRows` guard fails loudly (naming the scale path) instead of
-  * letting an all-pairs broadcast OOM an executor; run it on a bounded
-  * sample (q213's deterministic-sample discipline) when the corpus is
-  * large. Work distribution: row i costs n-i-1 partners, so tasks take
-  * interleaved stripes (i ≡ t mod tasks) — each stripe sums to within
-  * one row of n²/2T pairs, no skew.
+  * The `maxRows` guard ([[DriverCollect.upTo]]: never more than
+  * `maxRows + 1` rows collected) fails loudly, naming the scale path,
+  * instead of letting an all-pairs broadcast OOM an executor; run it on
+  * a bounded sample (q213's deterministic-sample discipline) when the
+  * corpus is large. Work distribution: row i costs n-i-1 partners, so
+  * tasks take interleaved stripes (i ≡ t mod tasks) — each stripe sums
+  * to within one row of n²/2T pairs, no skew.
   */
 object BruteForce {
 
@@ -40,16 +41,16 @@ object BruteForce {
     val spark = vectors.sparkSession
     import spark.implicits._
 
-    // Bounded verifier collect: a column-pruned (id, vec) scan, guarded.
-    val rows = vectors
-      .select(col(idCol).cast("long"), col(embeddingCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-    require(rows.length <= maxRows,
-      s"BruteForce.allPairsCosine is the exact all-pairs VERIFIER, bounded " +
-        s"at $maxRows rows (got ${rows.length}); at corpus scale use the " +
-        "bucketed path (VectorNearDup.pairsMultiprobe / IVF) and verify " +
-        "recall on a deterministic sample")
+    // Bounded verifier collect: a column-pruned (id, vec) scan; an
+    // oversized input fails after at most maxRows + 1 rows reach the driver
+    val rows = DriverCollect.upTo(vectors
+        .select(col(idCol).cast("long"), col(embeddingCol).cast("array<double>"))
+        .as[(Long, Array[Double])], maxRows)
+      .getOrElse(throw new IllegalArgumentException(
+        s"BruteForce.allPairsCosine is the exact all-pairs VERIFIER, bounded " +
+          s"at $maxRows rows (got at least ${maxRows + 1}); at corpus scale " +
+          "use the bucketed path (VectorNearDup.pairsMultiprobe / IVF) and " +
+          "verify recall on a deterministic sample"))
     java.util.Arrays.sort(rows, Ordering.by[(Long, Array[Double]), Long](_._1))
 
     val n = rows.length

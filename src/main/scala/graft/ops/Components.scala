@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,16 +10,14 @@ import org.apache.spark.sql.types._
   * would keep both ends). Output: (id, component) for every node, where
   * component = min(id) reachable via any chain of pairs.
   *
-  * Two execution paths, chosen by the MATERIALIZED edge count — the
-  * allocation-proportionality discipline the rest of the library applies
-  * to dimension-sized data (collect + broadcast) applied to loop
-  * execution:
+  * Two execution paths, chosen by [[DriverCollect.upTo]] on the
+  * materialized edge list (its scaladoc states the bound and the rule):
   *
-  *  - **Small graphs** (≤ [[LocalEdgeMax]] edges, the common case for
-  *    dup-cluster and entity-resolution graphs whose pair lists are
-  *    vocabulary-sized at any corpus scale): one collect + driver-side
-  *    union-find. The distributed fixpoint's cost on these graphs is
-  *    pure fixed overhead — ~2 jobs × shuffle-partition tasks × rounds,
+  *  - **Small graphs** (the common case for dup-cluster and
+  *    entity-resolution graphs, whose pair lists are vocabulary-sized at
+  *    any corpus scale): driver-side union-find over the collected edges.
+  *    The distributed fixpoint's cost on these graphs is pure fixed
+  *    overhead — ~2 jobs × shuffle-partition tasks × rounds,
   *    each task paying codegen/hashmap/sorter-page setup REGARDLESS of
   *    data size, multiplied by executor thread count. Measured: a
   *    24-pair ER graph allocated 0.5 GB at 4 threads and 4.3 GB at 32
@@ -55,39 +53,32 @@ import org.apache.spark.sql.types._
   * production would use reliable `checkpoint` to survive executor loss,
   * and the alternating large-star/small-star variant (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14 — public) to
-  * collapse high-diameter graphs in O(log²) rounds. The small-graph
-  * threshold rides along unchanged: a real cluster's namenode-sized
-  * collect bound is the same ~100k rows.
+  * collapse high-diameter graphs in O(log²) rounds. Every checkpoint is
+  * a [[Stages.seal]] and is dropped with [[Stages.release]] as soon as
+  * nothing reads it (`Dataset.unpersist` is a no-op on a checkpoint).
   */
 object Components {
 
-  /** Edge-count bound for the driver-side path. ~100k symmetric edges
-    * ≈ a few MB collected — inside the library's dimension-sized-collect
-    * discipline (same bound as the co-purchase cut). `minLabel`'s
-    * `localEdgeMax = 0` forces the distributed loop. */
-  private[graft] val LocalEdgeMax: Long = 100000L
-
   /** (id, component) for every node in `pairs`, where component = the
-    * minimum id reachable via any chain of pairs. */
+    * minimum id reachable via any chain of pairs. At most `localEdgeMax`
+    * symmetric edges take the driver-side path; `localEdgeMax = 0` forces
+    * the distributed loop. */
   def minLabel(pairs: DataFrame, aCol: String, bCol: String,
                maxIter: Int = 50,
-               localEdgeMax: Long = LocalEdgeMax): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint() // computed once (upstream pair gen paid HERE),
-                         // scanned by the count probe + whichever path
+               localEdgeMax: Int = DriverCollect.Max): DataFrame = {
+    // computed once (upstream pair gen paid HERE), read by the bounded
+    // collect and, past the bound, by every round of the loop
+    val edges = Stages.seal(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+        .distinct(),
+      eager = true)
     val idType = edges.schema("src").dataType
-    // one scan-only count of the checkpointed edges decides the path —
-    // trivial next to the loop it can skip (or next to one round of the
-    // loop it cannot)
-    val nEdges = edges.count()
-    val localOrd = localOrdering(idType)
-    val out =
-      if (nEdges <= localEdgeMax && localOrd.isDefined)
-        localMinLabel(edges, idType, localOrd.get)
-      else distributedMinLabel(edges, idType, maxIter)
-    edges.unpersist()
+    val out = localOrdering(idType)
+      .flatMap(ord => DriverCollect.upTo(edges, localEdgeMax)
+        .map(rows => localMinLabel(rows, edges.sparkSession, idType, ord)))
+      .getOrElse(distributedMinLabel(edges, idType, maxIter))
+    Stages.release(Seq(edges))
     out
   }
 
@@ -99,22 +90,9 @@ object Components {
       // Spark's StringType min is UTF8String order = unsigned byte-wise
       // UTF-8 comparison (NOT java.lang.String's UTF-16 compareTo —
       // they diverge past the BMP)
-      Some(new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = {
-          val x = a.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0
-          val n = math.min(x.length, y.length)
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          x.length - y.length
-        }
-      })
+      Some((a: Any, b: Any) => java.util.Arrays.compareUnsigned(
+        a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     case LongType    => Some(Ordering.by(_.asInstanceOf[Long]))
     case IntegerType => Some(Ordering.by(_.asInstanceOf[Int]))
     case ShortType   => Some(Ordering.by(_.asInstanceOf[Short]))
@@ -182,18 +160,17 @@ object Components {
     })
   }
 
-  /** Collect + [[unionFindMin]], published as the (id, component)
-    * DataFrame the distributed path emits. */
-  private def localMinLabel(edges: DataFrame, idType: DataType,
-                            ord: Ordering[Any]): DataFrame = {
-    val rows = edges.collect()
+  /** [[unionFindMin]] over the collected edges, published as the
+    * (id, component) DataFrame the distributed path emits. */
+  private def localMinLabel(rows: Array[Row], spark: SparkSession,
+                            idType: DataType, ord: Ordering[Any]): DataFrame = {
     val (nodes, compOf) = unionFindMin(
       rows.iterator.map(r => (r.get(0), r.get(1))), ord)
     val outRows = new java.util.ArrayList[Row](nodes.length)
     nodes.foreach { v => outRows.add(Row(v, compOf(v))) }
     val schema = StructType(Seq(StructField("id", idType),
       StructField("component", idType)))
-    edges.sparkSession.createDataFrame(outRows, schema)
+    spark.createDataFrame(outRows, schema)
   }
 
   /** The distributed fixpoint — see object scaladoc for the per-round
@@ -202,9 +179,8 @@ object Components {
                                   maxIter: Int): DataFrame = {
     // both endpoints appear as src (edges are symmetric) → src covers
     // all nodes
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
+    var labels = Stages.seal(edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")), eager = true)
     var pinned: DataFrame = labels // the checkpoint backing `labels`
     var changed = 1L
     var iter = 0
@@ -215,13 +191,12 @@ object Components {
       // each id has exactly one labels row, so min(prev) over the union
       // IS the previous label — the round's min-label AND its
       // convergence evidence materialize in ONE aggregate
-      val hop = labels
+      val hop = Stages.seal(labels
         .select(col("id"), col("component"), col("component").as("prev"))
         .union(msgs)
         .groupBy(col("id"))
         .agg(min(col("component")).as("component"),
-          min(col("prev")).as("prev"))
-        .localCheckpoint()
+          min(col("prev")).as("prev")), eager = true)
       // scan-only count on the checkpoint (no join, no shuffle): did
       // the one-hop step lower any label? One-hop stability == global
       // fixpoint, so testing BEFORE the jump is exact
@@ -239,7 +214,7 @@ object Components {
       // release the superseded round's checkpoint NOW — `next` reads
       // hop, not the old pin; otherwise up to maxIter label-table
       // copies stay pinned until nondeterministic ContextCleaner GC
-      pinned.unpersist()
+      Stages.release(Seq(pinned))
       pinned = hop
       labels = next
       iter += 1
@@ -247,8 +222,8 @@ object Components {
     require(changed == 0, s"components did not converge in $maxIter rounds")
     // pin the final labels once (consumers read the result repeatedly;
     // the backing hop checkpoint is released here, not leaked)
-    val out = labels.localCheckpoint()
-    pinned.unpersist()
+    val out = Stages.seal(labels, eager = true)
+    Stages.release(Seq(pinned))
     out
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Sketch-family structural guarantees, pinned on planted fixtures:
-  * q131 KMV error envelope, q138 CMS one-sided overcount, q139 bloom
+  * q40 engine-native HLL error bound, q131 KMV error envelope, q138 CMS one-sided overcount, q139 bloom
   * zero-false-negative, q140 priority sampling vs an independent Scala
   * md5 reimplementation, q141 change-point on a planted step, q137
   * containment asymmetry on a planted quote-in-doc pair. Every fixture
@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
 class SketchSpec extends SparkSpec {
   import spark.implicits._
 
-  private def eventsDir(users: Map[String, Int]): String = {
+  /** `users(type)` distinct users per event type, each with `copies`
+    * events. */
+  private def eventsDir(users: Map[String, Int], copies: Int = 1): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_kmv").toString
     users.toSeq
-      .flatMap { case (et, n) => (1 to n).map(u => (et, u.toLong)) }
+      .flatMap { case (et, n) =>
+        (1 to n).flatMap(u => Seq.fill(copies)((et, u.toLong))) }
       .toDF("event_type", "user_id")
       .withColumn("event_id", col("user_id"))
       .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
@@ -28,6 +31,20 @@ class SketchSpec extends SparkSpec {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
+  }
+
+  test("q40: HLL++ error stays within 3x the requested 2% rsd; exact column is exact") {
+    // q40 has no oracle twin (Spark's HLL++ registers are engine-private);
+    // HLL++ hashing is deterministic, so this bound is a hard check
+    val users = Map("tiny" -> 7, "mid" -> 900, "big" -> 20000)
+    val d = eventsDir(users, copies = 2)
+    val got = SparkEntry.queries("q40_approx_distinct")(spark, d)
+      .as[(String, Long, Long, Double)].collect()
+    assert(got.map(_._1).toSeq == users.keys.toSeq.sorted)
+    got.foreach { case (et, exact, approx, errPct) =>
+      assert(exact == users(et).toLong, s"$et: n_exact $exact")
+      assert(errPct <= 6.0, s"$et: n_approx $approx vs $exact, err_pct $errPct")
+    }
   }
 
   test("q131: sparse branch is exact, sketch branch is within 3 sigma") {

@@ -147,7 +147,7 @@ class PropertySpec extends SparkSpec {
     // 299 edges would otherwise take the union-find fast path)
     val edges = (0L until 299L).map(i => (i, i + 1))
     val got = Components.minLabel(edges.toDF("doc_a", "doc_b"),
-        "doc_a", "doc_b", localEdgeMax = 0L)
+        "doc_a", "doc_b", localEdgeMax = 0)
       .select("id", "component").as[(Long, Long)].collect().toMap
     assert(got.size == 300 && got.values.forall(_ == 0L))
   }
@@ -160,7 +160,7 @@ class PropertySpec extends SparkSpec {
       val df = edges.toDF("doc_a", "doc_b")
       val local = Components.minLabel(df, "doc_a", "doc_b")
         .select("id", "component").as[(Long, Long)].collect().toMap
-      val dist = Components.minLabel(df, "doc_a", "doc_b", localEdgeMax = 0L)
+      val dist = Components.minLabel(df, "doc_a", "doc_b", localEdgeMax = 0)
         .select("id", "component").as[(Long, Long)].collect().toMap
       assert(local == dist)
     }
@@ -178,7 +178,7 @@ class PropertySpec extends SparkSpec {
     val df = edges.toDF("na", "nb")
     val local = Components.minLabel(df, "na", "nb")
       .select("id", "component").as[(String, String)].collect().toMap
-    val dist = Components.minLabel(df, "na", "nb", localEdgeMax = 0L)
+    val dist = Components.minLabel(df, "na", "nb", localEdgeMax = 0)
       .select("id", "component").as[(String, String)].collect().toMap
     assert(local == dist && local.nonEmpty)
   }
@@ -190,8 +190,44 @@ class PropertySpec extends SparkSpec {
     // propagation-only loop would need 1999 rounds and must fail here
     val edges = (0L until 1999L).map(i => (i, i + 1))
     val got = Components.minLabel(edges.toDF("doc_a", "doc_b"),
-        "doc_a", "doc_b", maxIter = 16, localEdgeMax = 0L)
+        "doc_a", "doc_b", maxIter = 16, localEdgeMax = 0)
       .select("id", "component").as[(Long, Long)].collect().toMap
     assert(got.size == 2000 && got.values.forall(_ == 0L))
+  }
+
+  test("minLabel: local path at localEdgeMax = n, distributed at n - 1, same labels") {
+    // 24 undirected pairs → n = 48 symmetric edges, the count the bound
+    // is checked against; a driver-built result is a local relation, the
+    // loop's is a checkpoint
+    val pairs = (0L until 24L).map(i => (i % 7, 100L + i)).toDF("doc_a", "doc_b")
+    val n = 48
+    def run(bound: Int) = {
+      val out = Components.minLabel(pairs, "doc_a", "doc_b", localEdgeMax = bound)
+      val sealedOut = out.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+      (out.select("id", "component").as[(Long, Long)].collect().toMap, sealedOut)
+    }
+    val (local, localSealed) = run(n)
+    val (dist, distSealed) = run(n - 1)
+    assert(!localSealed && distSealed)
+    assert(local == dist && local.size == 31)
+  }
+
+  test("minLabel releases its checkpoints: only the result's own stays persisted") {
+    val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    Seq(DriverCollect.Max, 0).foreach { bound =>
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = Components.minLabel(pairs, "doc_a", "doc_b", localEdgeMax = bound)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      val own = out.queryExecution.logical match {
+        case l: org.apache.spark.sql.execution.LogicalRDD => Set(l.rdd.id)
+        case _ => Set.empty[Int]
+      }
+      assert(left == own, s"localEdgeMax = $bound: left $left, result's own $own")
+      assert(own.nonEmpty == (bound == 0))
+      assert(out.count() == 41)
+      Stages.release(Seq(out))
+    }
   }
 }
