@@ -321,9 +321,7 @@ object Bench {
       // query starts from the same drained-heap state; the GC runs
       // between queries, never inside a timed rep, so the headline sum
       // is untouched (only untimed wall-clock pays).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.ops.Stages.releaseAll(spark)
       System.gc()
       // published spread = steady-state repeatability: when the third
       // rep ran, rep 1 (the escalation trigger — usually this query's

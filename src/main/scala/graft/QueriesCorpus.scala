@@ -1109,8 +1109,8 @@ object QueriesCorpus {
   // and the final fixed-point weight — every truncation point of the
   // loop is pinned, so a hash match proves BOTH engines learned
   // bit-identical weights (which is what lets q69/q204 serve them).
-  // Scale: see LinearTrain's scaladoc — per round two sparse equi-joins
-  // against a broadcast 65-row dim + two partial-agg trees, driver state
+  // Scale: see LinearTrain's scaladoc — per round one narrow scan of the
+  // per-doc count arrays + a partitions×65 driver collect, driver state
   // 65 longs; the q83/q108 loop shape.
   private val q203: Q = (s, dir) => {
     val spark = s
@@ -1157,8 +1157,7 @@ object QueriesCorpus {
         expr(s"graft_token_buckets${LT.B}(text)").as("cnts"))
       .cache()
     val st = LT.cachedStates(s, s"quality:$dir", dir)(
-      LT.trainMultiFromCounts(cnts, "cls", "cnts", Seq("pos"),
-        docs.count()))("pos")
+      LT.trainMultiFromCounts(cnts, "cls", "cnts", Seq("pos")))("pos")
     val m = cnts
       .select(col("y").cast("long").as("y"),
         when(expr(LT.marginExprFromCounts("cnts", st)) > 0, 1L)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Multimodal, TextOps}
+import graft.ops.{LinearTrain, Multimodal, TextOps}
 
 
 /** Text-analysis + multimodal + remaining relational operators:
@@ -86,155 +86,171 @@ object QueriesText {
        |FROM scored ORDER BY doc_id""".stripMargin
   }
 
-  // --- q211/q212: multi-class lang-id TRAINED IN-ENGINE ----------------------
+  // --- q211/q212, q215/q216: multi-class lang-id TRAINED IN-ENGINE -----------
   // The production replacement for q33's stopword heuristic: a
   // one-vs-rest linear classifier over hashed CHARACTER-TRIGRAM counts
   // (the published CCNet/fastText-class signal), trained by
   // ops/LinearTrain's exact-integer standardized LS-GD — one weight
-  // vector per language, every truncation point pinned, so the DuckDB
-  // twin replays all five trainings bit-for-bit (the q203 convention,
-  // ×|classes|). Architecture scales to the ~100-language production
-  // case by extending LangClasses: the feature pass is shared across
-  // classes (built ONCE, cached), and each class adds only the
-  // dimension-sized GD loop (4 rounds × one sparse aggregate) — at
-  // 100 TB the corpus-side work stays one explode + one groupBy
-  // regardless of class count.
-  // q211 publishes the trained state (per class per bucket); q212 serves
-  // the model: per-doc argmax-margin prediction (ties break to the
-  // lexicographically smallest class, the same rule both engines
-  // generate), published as the confusion matrix against the labeled
-  // lang, with q33's heuristic kept as the audit column (n_heur_agree).
-  // Training runs through LinearTrain.trainMultiFromCounts — all
-  // classes per round in ONE mapPartitions pass over per-doc count
-  // ARRAYS (bit-identical to both the per-class loop and the exploded
-  // trainMulti, spec-pinned): no explode, no per-round shuffle, the
-  // round count sets the job count (exploded trainMulti measured 55 s
-  // combined for the pair at sf1 vs 6.5 s through this shape).
-  private val LangClasses = Seq("de", "en", "es", "fr", "zh")
+  // vector per class, every truncation point pinned, so the DuckDB twin
+  // replays every class's training bit-for-bit (the q203 convention,
+  // ×|classes|). Training and serving run through LinearTrain's
+  // counts-array kernels: one native feature eval per doc, then all
+  // classes per GD round in ONE mapPartitions pass with (B+1)·k dense
+  // accumulators and a k×(B+1) driver collect — no explode, no per-round
+  // shuffle; the class count never touches the scan/shuffle structure.
+  // The train query publishes the trained state (per class per bucket);
+  // the eval query serves it: per-doc argmax margin, ties to the
+  // lexicographically smallest class (the same rule both engines
+  // generate), published as a confusion matrix.
+  //
+  // Two configs share one builder. q211/q212: the 5 corpus languages at
+  // B = 64, with q33's heuristic as q212's audit column (n_heur_agree).
+  // q215/q216, the breadth proof: 20 classes at B = 256 — synthetic
+  // sub-languages cls = lang || '_' || (doc_id % 4), each a disjoint
+  // training subset that KEEPS its parent language's trigram signal,
+  // the hard case for one-vs-rest (the 4 sub-classes of one language are
+  // near-indistinguishable, so margin mass must spread across them).
+  // Measured (local[32], best-of-2 via Bench, 2026-08-16): sf0.1 —
+  // q211+q212 1.01+1.28 = 2.30 s; q215+q216 1.18+1.30 = 2.47 s → 1.08×
+  // for a 16× larger (k·B) model. sf1 (50k docs) — 2.09+4.25 = 6.33 s vs
+  // 4.18+5.56 = 9.74 s → 1.54×: at 10× the corpus the in-scan
+  // accumulator arithmetic (k·(B+1) adds per doc per round) begins to
+  // show, still ~10× cheaper than proportional scaling.
 
-  /** Shared one-vs-rest feature base: one row per doc with the FULL
-    * (B+1)-long hashed char-trigram count ARRAY (bias 1 at index B) from
-    * the native [[graft.functions.TrigramBucketCounts]] — one compiled
-    * per-row loop, zero shuffle, NO explode: training and prediction
-    * both run through [[graft.ops.LinearTrain]]'s counts-array kernels,
-    * so the corpus-side work per GD round is one narrow mapPartitions
-    * scan of these rows (the exploded (doc, b, cnt) + broadcast-join
-    * shape this replaces measured 55 s combined for q211/q212 at sf1).
-    * The composed lambda+explode+groupBy feature pass had already
-    * measured 83 s at sf1 against ~2 s for the native expression. */
-  private def langCnts(s: SparkSession, dir: String): DataFrame = {
-    val B = graft.ops.LinearTrain.B
-    require(B == 64, "graft_trigram_buckets64 is registered for B = 64")
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"),
-        expr(s"graft_trigram_buckets$B(text)").as("cnts"))
-  }
+  /** One lang-id config: `prefix` names its DuckDB CTEs, `memoKey` its
+    * trained-state memo slot, `classes` (sorted: the tie-break order)
+    * its labels; a doc's class is `clsExpr` in Spark and `clsSql` in
+    * DuckDB, its features the hashed char-trigram counts at `buckets`
+    * width. */
+  private final case class LangId(prefix: String, memoKey: String,
+                                  classes: Seq[String], buckets: Int,
+                                  clsExpr: String, clsSql: String) {
 
-  private val q211: Q = (s, dir) => {
-    val spark = s
-    import spark.implicits._
-    val LT = graft.ops.LinearTrain
-    val n = Tables.documents(s, dir).count()
-    val base = langCnts(s, dir).cache()
-    try {
-      val states = LT.cachedStates(s, s"langid64:$dir", dir)(
-        LT.trainMultiFromCounts(base, "lang", "cnts", LangClasses, n))
-      LangClasses.flatMap { c =>
-        val st = states(c)
-        (0 until LT.B).map(b =>
-          (c, b.toLong, st.sx(b), st.sxx(b), st.d(b), st.w(b))) :+
-          ((c, LT.B.toLong, 0L, 0L, 0L, st.w(LT.B)))
+    /** One row per doc: (doc_id, cls, cnts), `cnts` the (B+1)-long
+      * hashed char-trigram count ARRAY (bias 1 at index B) from the
+      * native [[graft.functions.TrigramBucketCounts]] — one compiled
+      * per-row loop, zero shuffle (the composed lambda+explode+groupBy
+      * feature pass measured 83 s at sf1 against ~2 s for it). */
+    def cnts(s: SparkSession, dir: String): DataFrame =
+      Tables.documents(s, dir).select(col("doc_id"), expr(clsExpr).as("cls"),
+        expr(s"graft_trigram_buckets$buckets(text)").as("cnts"))
+
+    /** Trained states from the session memo; a miss trains over `base`,
+      * cached for the kernel's stats pass and its GD round passes. */
+    def states(s: SparkSession, dir: String,
+               base: DataFrame): Map[String, LinearTrain.State] =
+      LinearTrain.cachedStates(s, s"$memoKey:$dir", dir) {
+        base.cache()
+        try LinearTrain.trainMultiFromCounts(base, "cls", "cnts", classes,
+          buckets)
+        finally { base.unpersist(); () }
+      }
+
+    /** Per-doc (doc_id, cls, predicted_cls). */
+    def predict(s: SparkSession, dir: String): DataFrame = {
+      val base = cnts(s, dir)
+      val st = states(s, dir, base)
+      LinearTrain.predictFromCounts(base, "doc_id", "cls", "cnts",
+        classes.map(c => c -> st(c)))
+    }
+
+    /** The train query: (cls, b, sx, sxx, d, w), bias at b = buckets. */
+    val train: Q = (s, dir) => {
+      val spark = s
+      import spark.implicits._
+      val st = states(s, dir, cnts(s, dir))
+      classes.flatMap { c =>
+        (0 until buckets).map(b =>
+          (c, b.toLong, st(c).sx(b), st(c).sxx(b), st(c).d(b), st(c).w(b))) :+
+          ((c, buckets.toLong, 0L, 0L, 0L, st(c).w(buckets)))
       }.toDF("cls", "b", "sx", "sxx", "d", "w")
         .orderBy(col("cls"), col("b"))
-    } finally { base.unpersist(); () }
+    }
+
+    /** DuckDB: the trigram-feature base + one
+      * [[LinearTrain.sql.chainCtes]] per class (prefix `<prefix><cls>_`). */
+    def chainsSql: String = {
+      val chains = classes.map { c =>
+        LinearTrain.sql.chainCtes(s"$prefix${c}_",
+          s"""SELECT doc_id, CASE WHEN cls = '$c' THEN 1 ELSE -1 END AS y,
+             |    b, cnt FROM ${prefix}_base""".stripMargin,
+          "SELECT COUNT(*) FROM documents", buckets)
+      }.mkString(",\n")
+      s"""${prefix}_cs AS (
+         |  SELECT doc_id, $clsSql AS cls, string_split(text, '') AS cs
+         |  FROM documents
+         |), ${prefix}_tok AS (
+         |  SELECT doc_id, cls,
+         |    unnest(${TextOps.sql.charTrigramBuckets("cs", buckets)}) AS b
+         |  FROM ${prefix}_cs
+         |), ${prefix}_base AS MATERIALIZED (
+         |  SELECT doc_id, cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
+         |  FROM ${prefix}_tok GROUP BY 1, 2, 3
+         |),
+         |$chains""".stripMargin
+    }
+
+    val trainSql: String = {
+      val perClass = classes.map { c =>
+        s"""SELECT '$c' AS cls, s.b, s.sx, s.sxx, CAST(s.d AS BIGINT) AS d,
+           |  CAST(w.w AS BIGINT) AS w
+           |FROM $prefix${c}_stats s JOIN $prefix${c}_wf w USING (b)
+           |UNION ALL
+           |SELECT '$c', CAST($buckets AS BIGINT), CAST(0 AS BIGINT),
+           |  CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+           |  CAST((SELECT w FROM $prefix${c}_wf WHERE b = $buckets) AS BIGINT)"""
+          .stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH $chainsSql
+         |$perClass
+         |ORDER BY cls, b""".stripMargin
+    }
+
+    /** DuckDB `pred(doc_id, predicted_lang)` CTE: the class chains'
+      * margins side by side, argmax with ties to the smallest class. */
+    def predSql: String = {
+      val joins = classes.zipWithIndex.map { case (c, i) =>
+        if (i == 0) s"$prefix${c}_mf m_$c"
+        else s"JOIN $prefix${c}_mf m_$c USING (doc_id)"
+      }.mkString("\n    ")
+      val predicted = classes.init.map { c =>
+        val geAll = classes.filter(_ != c)
+          .map(o => s"m_$c.m >= m_$o.m").mkString(" AND ")
+        s"WHEN $geAll THEN '$c'"
+      }.mkString("CASE ", " ", s" ELSE '${classes.last}' END")
+      s"""pred AS (
+         |  SELECT m_${classes.head}.doc_id,
+         |    $predicted AS predicted_lang
+         |  FROM $joins
+         |)""".stripMargin
+    }
   }
 
-  /** Shared SQL: trigram-feature base + one [[LinearTrain.sql.chainCtes]]
-    * per class (prefix `lg<cls>_`). */
-  private def langChainsSql: String = {
-    val B = graft.ops.LinearTrain.B
-    val chains = LangClasses.map { c =>
-      graft.ops.LinearTrain.sql.chainCtes(s"lg${c}_",
-        s"""SELECT doc_id, CASE WHEN lang = '$c' THEN 1 ELSE -1 END AS y,
-           |    b, cnt FROM lg_base""".stripMargin,
-        "SELECT COUNT(*) FROM documents")
-    }.mkString(",\n")
-    s"""lg_cs AS (
-       |  SELECT doc_id, lang, string_split(text, '') AS cs FROM documents
-       |), lg_tok AS (
-       |  SELECT doc_id, lang,
-       |    unnest(${TextOps.sql.charTrigramBuckets("cs", B)}) AS b
-       |  FROM lg_cs
-       |), lg_base AS MATERIALIZED (
-       |  SELECT doc_id, lang, b, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM lg_tok GROUP BY 1, 2, 3
-       |),
-       |$chains""".stripMargin
-  }
-
-  private val q211Sql = {
-    val B = graft.ops.LinearTrain.B
-    val perClass = LangClasses.map { c =>
-      s"""SELECT '$c' AS cls, s.b, s.sx, s.sxx, CAST(s.d AS BIGINT) AS d,
-         |  CAST(w.w AS BIGINT) AS w
-         |FROM lg${c}_stats s JOIN lg${c}_wf w USING (b)
-         |UNION ALL
-         |SELECT '$c', CAST($B AS BIGINT), CAST(0 AS BIGINT),
-         |  CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-         |  CAST((SELECT w FROM lg${c}_wf WHERE b = $B) AS BIGINT)"""
-        .stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $langChainsSql
-       |$perClass
-       |ORDER BY cls, b""".stripMargin
-  }
+  private val LangId64 = LangId("lg", "langid64",
+    Seq("de", "en", "es", "fr", "zh"), LinearTrain.B, "lang", "lang")
+  private val LangId256 = LangId("lw", "langid256",
+    for { l <- LangId64.classes; i <- 0 to 3 } yield s"${l}_$i", 256,
+    "concat(lang, '_', CAST(pmod(doc_id, 4) AS STRING))",
+    "lang || '_' || CAST(doc_id % 4 AS VARCHAR)")
 
   private val q212: Q = (s, dir) => {
-    val LT = graft.ops.LinearTrain
-    val docs = Tables.documents(s, dir)
-    val n = docs.count()
-    val base = langCnts(s, dir).cache()
-    try {
-      val states = LT.cachedStates(s, s"langid64:$dir", dir)(
-        LT.trainMultiFromCounts(base, "lang", "cnts", LangClasses, n))
-      // per-doc argmax margin with ties to the smallest class name,
-      // computed in the same counts-array pass — no margin join/window
-      val pred = LT
-        .predictFromCounts(base, "doc_id", "lang", "cnts",
-          LangClasses.map(c => c -> states(c)))
-        .select(col("doc_id"), col("lang").as("labeled_lang"),
-          col("predicted_cls").as("predicted_lang"))
-      val heur = heurScored(docs)
-        .select(col("doc_id"), expr(heurPredictedCase).as("heur_lang"))
-      pred
-        .join(heur, Seq("doc_id"))
-        .groupBy(col("labeled_lang"), col("predicted_lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("heur_lang") === col("predicted_lang"), 1L)
-            .otherwise(0L)).as("n_heur_agree"),
-          sum(col("doc_id")).as("doc_sig"))
-        .orderBy(col("labeled_lang"), col("predicted_lang"))
-    } finally { base.unpersist(); () }
+    val heur = heurScored(Tables.documents(s, dir))
+      .select(col("doc_id"), expr(heurPredictedCase).as("heur_lang"))
+    LangId64.predict(s, dir)
+      .select(col("doc_id"), col("cls").as("labeled_lang"),
+        col("predicted_cls").as("predicted_lang"))
+      .join(heur, Seq("doc_id"))
+      .groupBy(col("labeled_lang"), col("predicted_lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("heur_lang") === col("predicted_lang"), 1L)
+          .otherwise(0L)).as("n_heur_agree"),
+        sum(col("doc_id")).as("doc_sig"))
+      .orderBy(col("labeled_lang"), col("predicted_lang"))
   }
 
-  private val q212Sql = {
-    // per-doc margins of the 5 chains side by side, argmax by the same
-    // lexicographic-tie CASE the Spark window encodes
-    val joins = LangClasses.zipWithIndex.map { case (c, i) =>
-      if (i == 0) s"lg${c}_mf m_$c"
-      else s"JOIN lg${c}_mf m_$c USING (doc_id)"
-    }.mkString("\n    ")
-    val predicted = LangClasses.init.map { c =>
-      val geAll = LangClasses.filter(_ != c)
-        .map(o => s"m_$c.m >= m_$o.m").mkString(" AND ")
-      s"WHEN $geAll THEN '$c'"
-    }.mkString("CASE ", " ", s" ELSE '${LangClasses.last}' END")
-    s"""WITH $langChainsSql,
-       |pred AS (
-       |  SELECT m_${LangClasses.head}.doc_id,
-       |    $predicted AS predicted_lang
-       |  FROM $joins
-       |),
+  private val q212Sql =
+    s"""WITH ${LangId64.chainsSql},
+       |${LangId64.predSql},
        |heur AS (
        |  SELECT doc_id, $heurPredictedCase AS heur_lang FROM (
        |    SELECT doc_id,
@@ -251,147 +267,24 @@ object QueriesText {
        |JOIN pred p USING (doc_id)
        |JOIN heur h USING (doc_id)
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 
-  // --- q215/q216: lang-id BREADTH — 20 classes × B = 256 ---------------------
-  // The measured proof for q211/q212's production-knob claim ("the
-  // corpus-side work per GD round is one narrow scan regardless of class
-  // count", q211 scaladoc): the SAME architecture at 4× the classes and
-  // 4× the bucket space. The corpus carries 5 real languages, so the 20
-  // classes are synthetic sub-languages cls = lang || '_' || (doc_id % 4)
-  // — each a genuine disjoint training subset that KEEPS its parent
-  // language's trigram signal, which is the hard case for one-vs-rest
-  // (the 4 sub-classes of one language are near-indistinguishable, so
-  // margin mass must spread across them); the integer algebra still
-  // replays bit-for-bit in the 20-chain DuckDB twin.
-  // Scale shape is q211's exactly: ONE native feature eval per doc
-  // (TrigramBucketCounts at 256), Iters mapPartitions round passes with
-  // (B+1)·k dense accumulators, a 20×257 driver collect per round — the
-  // class count never touches the shuffle/scan structure, only the
-  // in-scan accumulator arithmetic.
-  // Measured (local[32], best-of-2 via Bench, 2026-08-16): sf0.1 —
-  // q211+q212 (5 classes, B=64) 1.01+1.28 = 2.30 s; q215+q216
-  // (20 classes, B=256) 1.18+1.30 = 2.47 s → 1.08× for a 16× larger
-  // (k·B) model, ≈ 0.011 s marginal per extra class. sf1 (50k docs) —
-  // 2.09+4.25 = 6.33 s vs 4.18+5.56 = 9.74 s → 1.54×: at 10× the
-  // corpus the in-scan accumulator arithmetic (k·(B+1) adds per doc
-  // per round) begins to show — still ~10× cheaper than proportional
-  // scaling, and the shuffle/scan structure (one narrow pass per
-  // round, one 20×257 collect) is class-count-independent as
-  // documented at q211.
-  private[graft] val WideLangClasses: Seq[String] =
-    for { l <- LangClasses; i <- 0 to 3 } yield s"${l}_$i"
-  private[graft] val WideLangB = 256
-  private val WideClsExpr = "concat(lang, '_', CAST(pmod(doc_id, 4) AS STRING))"
-  private val WideClsSql = "lang || '_' || CAST(doc_id % 4 AS VARCHAR)"
+  private val q216: Q = (s, dir) =>
+    LangId256.predict(s, dir)
+      .groupBy(col("cls").as("labeled_cls"),
+        col("predicted_cls").as("predicted_lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("doc_id")).as("doc_sig"))
+      .orderBy(col("labeled_cls"), col("predicted_lang"))
 
-  private def wideCnts(s: SparkSession, dir: String): DataFrame = {
-    Tables.documents(s, dir)
-      .select(col("doc_id"), expr(WideClsExpr).as("cls"),
-        expr(s"graft_trigram_buckets$WideLangB(text)").as("cnts"))
-  }
-
-  private val q215: Q = (s, dir) => {
-    val spark = s
-    import spark.implicits._
-    val LT = graft.ops.LinearTrain
-    val n = Tables.documents(s, dir).count()
-    val base = wideCnts(s, dir).cache()
-    try {
-      val states = LT.cachedStates(s, s"langid256:$dir", dir)(
-        LT.trainMultiFromCounts(base, "cls", "cnts",
-          WideLangClasses, n, WideLangB))
-      WideLangClasses.flatMap { c =>
-        val st = states(c)
-        (0 until WideLangB).map(b =>
-          (c, b.toLong, st.sx(b), st.sxx(b), st.d(b), st.w(b))) :+
-          ((c, WideLangB.toLong, 0L, 0L, 0L, st.w(WideLangB)))
-      }.toDF("cls", "b", "sx", "sxx", "d", "w")
-        .orderBy(col("cls"), col("b"))
-    } finally { base.unpersist(); () }
-  }
-
-  /** [[langChainsSql]] generalized to the wide config: shared feature
-    * base at `bN` buckets over an arbitrary class-label SQL expression +
-    * one [[graft.ops.LinearTrain.sql.chainCtes]] per class. */
-  private def wideChainsSql: String = {
-    val chains = WideLangClasses.map { c =>
-      graft.ops.LinearTrain.sql.chainCtes(s"lw${c}_",
-        s"""SELECT doc_id, CASE WHEN cls = '$c' THEN 1 ELSE -1 END AS y,
-           |    b, cnt FROM lw_base""".stripMargin,
-        "SELECT COUNT(*) FROM documents", WideLangB)
-    }.mkString(",\n")
-    s"""lw_cs AS (
-       |  SELECT doc_id, $WideClsSql AS cls, string_split(text, '') AS cs
-       |  FROM documents
-       |), lw_tok AS (
-       |  SELECT doc_id, cls,
-       |    unnest(${TextOps.sql.charTrigramBuckets("cs", WideLangB)}) AS b
-       |  FROM lw_cs
-       |), lw_base AS MATERIALIZED (
-       |  SELECT doc_id, cls, b, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM lw_tok GROUP BY 1, 2, 3
-       |),
-       |$chains""".stripMargin
-  }
-
-  private val q215Sql = {
-    val perClass = WideLangClasses.map { c =>
-      s"""SELECT '$c' AS cls, s.b, s.sx, s.sxx, CAST(s.d AS BIGINT) AS d,
-         |  CAST(w.w AS BIGINT) AS w
-         |FROM lw${c}_stats s JOIN lw${c}_wf w USING (b)
-         |UNION ALL
-         |SELECT '$c', CAST($WideLangB AS BIGINT), CAST(0 AS BIGINT),
-         |  CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-         |  CAST((SELECT w FROM lw${c}_wf WHERE b = $WideLangB) AS BIGINT)"""
-        .stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH $wideChainsSql
-       |$perClass
-       |ORDER BY cls, b""".stripMargin
-  }
-
-  private val q216: Q = (s, dir) => {
-    val LT = graft.ops.LinearTrain
-    val n = Tables.documents(s, dir).count()
-    val base = wideCnts(s, dir).cache()
-    try {
-      val states = LT.cachedStates(s, s"langid256:$dir", dir)(
-        LT.trainMultiFromCounts(base, "cls", "cnts",
-          WideLangClasses, n, WideLangB))
-      LT.predictFromCounts(base, "doc_id", "cls", "cnts",
-          WideLangClasses.map(c => c -> states(c)))
-        .groupBy(col("cls").as("labeled_cls"),
-          col("predicted_cls").as("predicted_lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("doc_sig"))
-        .orderBy(col("labeled_cls"), col("predicted_lang"))
-    } finally { base.unpersist(); () }
-  }
-
-  private val q216Sql = {
-    val joins = WideLangClasses.zipWithIndex.map { case (c, i) =>
-      if (i == 0) s"lw${c}_mf m_$c"
-      else s"JOIN lw${c}_mf m_$c USING (doc_id)"
-    }.mkString("\n    ")
-    val predicted = WideLangClasses.init.map { c =>
-      val geAll = WideLangClasses.filter(_ != c)
-        .map(o => s"m_$c.m >= m_$o.m").mkString(" AND ")
-      s"WHEN $geAll THEN '$c'"
-    }.mkString("CASE ", " ", s" ELSE '${WideLangClasses.last}' END")
-    s"""WITH $wideChainsSql,
-       |pred AS (
-       |  SELECT m_${WideLangClasses.head}.doc_id,
-       |    $predicted AS predicted_lang
-       |  FROM $joins
-       |)
-       |SELECT $WideClsSql AS labeled_cls, p.predicted_lang,
+  private val q216Sql =
+    s"""WITH ${LangId256.chainsSql},
+       |${LangId256.predSql}
+       |SELECT ${LangId256.clsSql} AS labeled_cls, p.predicted_lang,
        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
        |  CAST(SUM(d.doc_id) AS BIGINT) AS doc_sig
        |FROM documents d
        |JOIN pred p USING (doc_id)
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 
   // --- q34: quality scoring (length / stopword / uniqueness ratios) ----------
   private val q34: Q = (s, dir) => {
@@ -1348,9 +1241,11 @@ object QueriesText {
     Query("q40_approx_distinct", q40, None),
     Query("q131_kmv_distinct", q131, Some(q131Sql)),
     Query("q33_lang_id", q33, Some(q33Sql)),
-    Query("q211_langid_train", q211, Some(q211Sql), Some("state")),
+    Query("q211_langid_train", LangId64.train, Some(LangId64.trainSql),
+      Some("state")),
     Query("q212_langid_eval", q212, Some(q212Sql), Some("state")),
-    Query("q215_langid_wide_train", q215, Some(q215Sql), Some("state")),
+    Query("q215_langid_wide_train", LangId256.train,
+      Some(LangId256.trainSql), Some("state")),
     Query("q216_langid_wide_eval", q216, Some(q216Sql), Some("state")),
     Query("q34_quality_score", q34, Some(q34Sql)),
     Query("q35_token_stats", q35, Some(q35Sql)),

@@ -20,9 +20,7 @@ object Verify {
       // release SQL caches AND localCheckpoint blocks between queries —
       // same hygiene as Bench: 200 queries' worth of fence RDDs would
       // otherwise accumulate in storage memory for the whole dump
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.ops.Stages.releaseAll(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       Mains.json(SparkEntry.oracleSql))

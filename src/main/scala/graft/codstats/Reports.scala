@@ -225,9 +225,10 @@ object Reports {
         sum(when(col("kills") >= settings.monsterKills, 1L).otherwise(0L)).as("monsters"),
         sum(when(col("kills") === 0.0, 1L).otherwise(0L)).as("gooseeggs"))
 
-  /** Team identity + per-team rollup (full teams only, > 1 shared game —
-    * parse_matches.sh:389-470). Deterministic roster key: sorted distinct
-    * player ids. */
+  /** Team identity + per-team rollup (parse_matches.sh:389-470): one
+    * roster per game, kept when it shares > 1 game. Rosters of any size
+    * count — the full-team rule is [[fullTeamStats]]'s. Deterministic
+    * roster key: sorted distinct player ids. */
   def teamStats(stats: DataFrame): DataFrame = {
     val perGame = stats.groupBy(col("game_id"))
       .agg(

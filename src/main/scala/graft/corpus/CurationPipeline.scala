@@ -213,10 +213,8 @@ object CurationPipeline {
     val audit = (upstream ++ Seq(nearRow) ++ tail)
       .map { case (stage, t) => (stage, t.docsAfter) }
       .toDF("stage", "docs_after")
-    val toRelease = Seq(ruled, quality, exact, norm, hashed, near) ++
-      releaseCaches
-    toRelease.foreach(_.unpersist()) // the .cache()'d stages
-    graft.ops.Stages.release(toRelease) // the sealed stages, synchronously
+    graft.ops.Stages.release(Seq(ruled, quality, exact, norm, hashed, near) ++
+      releaseCaches)
     (curated, audit, ledger)
   }
 

@@ -118,8 +118,7 @@ object StreamingCuration {
       ("near_dedup", near.count())) ++
       tail.map { case (stage, t) => (stage, t.docsAfter) })
       .toDF("stage", "docs_after")
-    (near +: caches).foreach(_.unpersist()) // the .cache()'d stages
-    graft.ops.Stages.release(caches) // the sealed stages, synchronously
+    graft.ops.Stages.release(near +: caches)
     (curated, audit)
   }
 
@@ -259,10 +258,10 @@ object StreamingCuration {
       .map { case (st, n) => (tick, st, n) }
       .toDF("tick", "stage", "n")
       .write.mode("append").parquet(s"$stateDir/tickaudit")
-    Seq(ruled, quality).foreach(_.unpersist())
-    // the tick's sealed frames are all fully written to state by now —
-    // release their blocks instead of leaving them to ContextCleaner
-    // (ticks in one session otherwise accumulate checkpoint blocks)
-    graft.ops.Stages.release(Seq(hashes, normDocs, hashed, newBands))
+    // the tick's frames are all fully written to state by now — release
+    // their blocks instead of leaving them to ContextCleaner (ticks in
+    // one session otherwise accumulate checkpoint blocks)
+    graft.ops.Stages.release(Seq(ruled, quality, hashes, normDocs, hashed,
+      newBands))
   }
 }

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** In-engine linear-classifier TRAINING over hashed bag-of-words
   * features — the missing half of the quality-classifier stage
@@ -37,11 +36,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * runs driver-side in BigInt (B+1 values) — at 10¹²-doc scale only the
   * driver math widens, the distributed plan is unchanged.
   *
-  * Scale shape (100 TB): the feature pass is one explode + groupBy
-  * (content-hash bucket keys, skew-free); each round is two sparse
-  * equi-joins against a BROADCAST (B+1)-row dim + two partial-agg trees;
-  * the driver state is B+1 longs — the same loop shape as
-  * [[KMeans.train]] and q108's power iteration.
+  * One Spark trainer: [[trainMultiFromCounts]] trains every classifier
+  * query (q203/q204/q69 and the lang-id q211/q212/q215/q216) over
+  * per-doc count arrays, and [[predictFromCounts]] serves the
+  * multi-class ones. [[trainOnRows]] over exploded [[featureRows]] is
+  * the per-class reference the specs pin the kernel against; the DuckDB
+  * twin [[sql.chainCtes]] mirrors that chain.
+  *
+  * Scale shape (100 TB): the feature pass is one native per-doc eval
+  * (no explode, no shuffle); each round is one narrow mapPartitions scan
+  * plus a partitions×k×(B+1) driver collect; the driver state is k×(B+1)
+  * longs — the same loop shape as [[KMeans.train]] and q108's power
+  * iteration.
   */
 object LinearTrain {
 
@@ -75,7 +81,7 @@ object LinearTrain {
     * invalidation/replacement/concurrency semantics are
     * [[FingerprintedMemo]]'s (replace-on-change, build-once). */
   private val stateMemo = new FingerprintedMemo[Map[String, State]]
-  def cachedStates(s: org.apache.spark.sql.SparkSession, key: String,
+  def cachedStates(s: SparkSession, key: String,
                    dir: String)(
       build: => Map[String, State]): Map[String, State] =
     stateMemo(s, dir, key)(build)
@@ -108,19 +114,12 @@ object LinearTrain {
     * explicit feature makes the per-round gradient ONE combinable
     * aggregate (Σᵢrᵢ arrives as bucket B's sum) instead of two. */
   def featureRows(docs: DataFrame): DataFrame =
-    featureRowsFor(docs, LabelExpr, TextOps.tokensExpr("text"))
-
-  /** [[featureRows]] over an arbitrary label expression and token-array
-    * expression — the lang-id one-vs-rest queries train through this
-    * (labels per class, char trigrams as tokens). */
-  def featureRowsFor(docs: DataFrame, labelExpr: String,
-                     tokArrayExpr: String): DataFrame =
-    docs.select(col("doc_id"), expr(labelExpr).as("y"),
-        explode(expr(tokArrayExpr)).as("tok"))
+    docs.select(col("doc_id"), expr(LabelExpr).as("y"),
+        explode(expr(TextOps.tokensExpr("text"))).as("tok"))
       .withColumn("b", expr(s"pmod(${TextOps.hash60("tok")}, $B)"))
       .groupBy(col("doc_id"), col("y"), col("b"))
       .agg(count(lit(1)).as("cnt"))
-      .unionByName(docs.select(col("doc_id"), expr(labelExpr).as("y"),
+      .unionByName(docs.select(col("doc_id"), expr(LabelExpr).as("y"),
         lit(B.toLong).as("b"), lit(1L).as("cnt")))
 
   /** Runs the full training loop on a documents table — through the
@@ -137,7 +136,7 @@ object LinearTrain {
         expr(s"CASE WHEN ($LabelExpr) = 1 THEN 'pos' ELSE 'neg' END").as("cls"),
         expr(s"graft_token_buckets$B(text)").as("cnts"))
       .cache() // stats pass + Iters round passes read it
-    try trainMultiFromCounts(cnts, "cls", "cnts", Seq("pos"), docs.count())("pos")
+    try trainMultiFromCounts(cnts, "cls", "cnts", Seq("pos"))("pos")
     finally { cnts.unpersist(); () }
   }
 
@@ -152,10 +151,10 @@ object LinearTrain {
     s"(graft_int_dot(slice($cntsCol, 1, ${st.sx.length}), $arr) + ${consts}L)"
   }
 
-  /** The loop itself over pre-built (cached) [[featureRows]] — callers
-    * that also score relationally ([[marginDf]]) pass the same cached
-    * rows so the explode+hash feature pass runs once, not twice. */
-  def trainOnRows(rows: DataFrame, n: Long): State = {
+  /** The loop itself over pre-built (cached) [[featureRows]] — the
+    * per-class reference [[trainMultiFromCounts]] is pinned against.
+    * The doc count n is bucket B's sum: every doc has one bias row. */
+  def trainOnRows(rows: DataFrame): State = {
     val spark = rows.sparkSession
     import spark.implicits._
 
@@ -164,27 +163,14 @@ object LinearTrain {
         sum(col("cnt") * col("cnt")).as("sxx"))
       .collect().map(r => r.getLong(0).toInt -> (r.getLong(1), r.getLong(2)))
       .toMap
-    val sx = (0 until B).map(b => sraw.get(b).map(_._1).getOrElse(0L))
-    val sxx = (0 until B).map(b => sraw.get(b).map(_._2).getOrElse(0L))
-    val variance = (0 until B).map(b =>
-      BigInt(n) * sxx(b) - BigInt(sx(b)) * sx(b))
-    val d = (0 until B).map(b =>
-      if (variance(b) > 0) isqrt(variance(b)).toLong else 1L)
-    val nb = variance.count(_ > 0)
-    val t0 = BigInt(n) * (nb + 1)
-
-    var w: IndexedSeq[BigInt] = IndexedSeq.fill(B + 1)(BigInt(0))
-    if (n > 0) for (_ <- 1 to Iters) {
-      // fold standardization into sparse per-bucket coefficients; the
-      // bias coefficient rides the dim at index B (its row has cnt = 1)
-      val a = (0 until B).map(b => tdiv(w(b) * n * Q, d(b))) :+ (w(B) * Q)
-      val cTot = (0 until B).map(b => tdiv(w(b) * sx(b) * Q, d(b))).sum
-      val aDf = a.zipWithIndex.map { case (v, b) =>
-        require(v.isValidLong, s"coefficient overflow: $v")
-        (b, v.toLong)
-      }.toDF("b", "a")
-      require(cTot.isValidLong, s"constant overflow: $cTot")
-      val consts = -cTot.toLong // |m| < 2^32 measured at the oracle SFs
+    val gd = new Gd(sraw.get(B).map(_._1).getOrElse(0L),
+      (0 until B).map(b => sraw.get(b).map(_._1).getOrElse(0L)),
+      (0 until B).map(b => sraw.get(b).map(_._2).getOrElse(0L)))
+    gd.train(1) { ws =>
+      val w = ws.head
+      // the bias coefficient rides the dim at index B (its row has cnt = 1)
+      val (a, consts) = gd.coeffs(w) // |m| < 2^32 measured at the oracle SFs
+      val aDf = a.toSeq.zipWithIndex.map { case (v, b) => (b, v) }.toDF("b", "a")
       // DECIMAL(38,0) like the sxr aggregate below: the per-doc dot
       // product Σ cnt·a has no per-term require() protecting it (a_b
       // alone can reach ~2^62), and the HUGEINT twin is exact — an
@@ -205,127 +191,60 @@ object LinearTrain {
         .collect()
         .map(r2 => r2.getLong(0).toInt -> BigInt(r2.getDecimal(1).toBigInteger))
         .toMap
-      val r = sxr.getOrElse(B, BigInt(0))
-      w = (0 until B).map { b =>
-        val num = 2 * (BigInt(n) * sxr.getOrElse(b, BigInt(0)) - BigInt(sx(b)) * r)
+      Seq(gd.step(w, b => sxr.getOrElse(b, BigInt(0))))
+    }.head
+  }
+
+  /** The driver half of both Spark trainers, from the per-bucket moments
+    * n, sx_b, sxx_b: the isqrt scale d_b, the trace step t0 = n·(nb+1),
+    * each round's folded coefficients and the exact weight update. One
+    * instance trains every class of a one-vs-rest run (the moments are
+    * class-independent). */
+  private final class Gd(n: Long, sx: IndexedSeq[Long], sxx: IndexedSeq[Long]) {
+    private val B = sx.length // the moments carry the bucket width
+    private val variance = (0 until B).map(b =>
+      BigInt(n) * sxx(b) - BigInt(sx(b)) * sx(b))
+    private val d = (0 until B).map(b =>
+      if (variance(b) > 0) isqrt(variance(b)).toLong else 1L)
+    private val t0 = BigInt(n) * (variance.count(_ > 0) + 1)
+
+    /** Standardization folded into sparse per-bucket coefficients
+      * a_b = ⌊w_b·n·Q/d_b⌋, the bias coefficient w_B·Q at index B, and
+      * the additive constant −Σ_b ⌊w_b·sx_b·Q/d_b⌋: a doc's residual is
+      * Σ_b a_b·x_b + constant − y·W·Q. */
+    def coeffs(w: IndexedSeq[BigInt]): (Array[Long], Long) = {
+      val a = Array.tabulate(B + 1) { b =>
+        val v = if (b < B) tdiv(w(b) * n * Q, d(b)) else w(B) * Q
+        require(v.isValidLong, s"coefficient overflow: $v")
+        v.toLong
+      }
+      val cTot = (0 until B).map(b => tdiv(w(b) * sx(b) * Q, d(b))).sum
+      require(cTot.isValidLong, s"constant overflow: $cTot")
+      (a, -cTot.toLong)
+    }
+
+    /** One GD step from the gradient sums sxr(b) = Σᵢ x_ib·rᵢ, whose
+      * bias bucket B is Σᵢ rᵢ. */
+    def step(w: IndexedSeq[BigInt], sxr: Int => BigInt): IndexedSeq[BigInt] = {
+      val r = sxr(B)
+      (0 until B).map { b =>
+        val num = 2 * (BigInt(n) * sxr(b) - BigInt(sx(b)) * r)
         w(b) - tdiv(num, BigInt(d(b)) * Q * t0)
       } :+ (w(B) - tdiv(2 * r, BigInt(Q) * t0))
     }
-    State(n, sx, sxx, d, if (t0 > 0) t0 else BigInt(1),
-      w.map { v =>
-        require(v.isValidLong, s"weight overflow: $v")
-        v.toLong
-      })
-  }
 
-  /** ONE-VS-REST training over a shared feature base, all classes per
-    * round in ONE distributed pass — the lang-id path (q211/q212).
-    *
-    * `base` carries (doc_id, `classCol`, b, cnt) INCLUDING the per-doc
-    * bias row (b = [[B]], cnt = 1); each class's label is derived as
-    * ±1 from `classCol` inside the round, so the per-class states are
-    * BIT-IDENTICAL to running [[trainOnRows]] once per class (same
-    * aggregates, same truncation points — the DuckDB twin replays the
-    * per-class chains independently and hash-matches), but the job
-    * count is per-ROUND, not per-round-per-class: the naive loop's
-    * |classes|·Iters sparse aggregates measured 15–19 s at sf0.1; this
-    * shape is Iters collects over a |classes|-fanned broadcast join.
-    * Feature stats are class-independent and computed once.
-    *
-    * Scale: per round one broadcast join against the |classes|·(B+1)
-    * coefficient dim (fan-out |classes| rows per feature row), one
-    * (doc, cls)-keyed partial agg, one join back to the base on doc_id,
-    * one (cls, b)-keyed partial agg, one |classes|·(B+1) driver
-    * collect — the q83/q108 loop shape with a class dimension. */
-  def trainMulti(base: DataFrame, classCol: String,
-                 classes: Seq[String], n: Long): Map[String, State] = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    require(classes.nonEmpty && classes.distinct == classes)
-
-    val sraw = base.filter(col("b") < B).groupBy(col("b"))
-      .agg(sum(col("cnt")).as("sx"),
-        sum(col("cnt") * col("cnt")).as("sxx"))
-      .collect().map(r => r.getLong(0).toInt -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val sx = (0 until B).map(b => sraw.get(b).map(_._1).getOrElse(0L))
-    val sxx = (0 until B).map(b => sraw.get(b).map(_._2).getOrElse(0L))
-    val variance = (0 until B).map(b =>
-      BigInt(n) * sxx(b) - BigInt(sx(b)) * sx(b))
-    val d = (0 until B).map(b =>
-      if (variance(b) > 0) isqrt(variance(b)).toLong else 1L)
-    val nb = variance.count(_ > 0)
-    val t0 = BigInt(n) * (nb + 1)
-
-    // COLUMNAR rounds: one coefficient COLUMN per class on a 65-row
-    // broadcast dim, k margin/gradient aggregate columns per shuffle —
-    // no per-class row fan-out (a cls-keyed row layout shuffles
-    // k·|base| rows per round; this shuffles |base| rows with k narrow
-    // aggregate columns: measured 62 s → the margin pass dominates no
-    // more at sf1). Sums are per (doc, class) either way — the states
-    // stay bit-identical to the per-class loop (spec-pinned).
-    val ki = classes.indices
-    var w: Map[String, IndexedSeq[BigInt]] =
-      classes.map(_ -> IndexedSeq.fill(B + 1)(BigInt(0))).toMap
-    if (n > 0) for (_ <- 1 to Iters) {
-      val aRows = (0 until B).map { b =>
-        Row.fromSeq(b.toLong +: classes.map { c =>
-          val v = tdiv(w(c)(b) * n * Q, d(b))
-          require(v.isValidLong, s"coefficient overflow: $v")
-          v.toLong
-        })
-      } :+ Row.fromSeq(B.toLong +: classes.map { c =>
-        val v = w(c)(B) * Q
-        require(v.isValidLong, s"bias coefficient overflow: $v")
-        v.toLong
-      })
-      val aSchema = StructType(StructField("b", LongType) +:
-        ki.map(i => StructField(s"a_$i", LongType)))
-      val aDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(aRows, 1), aSchema)
-      val consts = classes.map { c =>
-        val cTot = (0 until B).map(b => tdiv(w(c)(b) * sx(b) * Q, d(b))).sum
-        require(cTot.isValidLong, s"constant overflow: $cTot")
-        -cTot.toLong
-      }
-      val axAggs = ki.map(i =>
-        sum(col("cnt").cast("decimal(38,0)") * col(s"a_$i")).as(s"ax_$i"))
-      val margins = base.join(broadcast(aDf), "b")
-        .groupBy(col("doc_id"), col(classCol))
-        .agg(axAggs.head, axAggs.tail: _*)
-        .select(col("doc_id") +: ki.map { i =>
-          (col(s"ax_$i") + lit(consts(i)) -
-            when(col(classCol) === classes(i), 1).otherwise(-1) *
-              lit(W * Q)).as(s"r_$i")
-        }: _*)
-      val sxrAggs = ki.map(i =>
-        sum(col("cnt").cast("decimal(38,0)") * col(s"r_$i")).as(s"sxr_$i"))
-      val sxrRows = base.join(margins, "doc_id")
-        .groupBy(col("b"))
-        .agg(sxrAggs.head, sxrAggs.tail: _*)
-        .collect()
-      val sxr = sxrRows.flatMap { r2 =>
-        val b = r2.getLong(0).toInt
-        ki.map(i => (classes(i), b) ->
-          BigInt(r2.getDecimal(i + 1).toBigInteger))
-      }.toMap
-      w = classes.map { c =>
-        val wc = w(c)
-        val r = sxr.getOrElse((c, B), BigInt(0))
-        c -> ((0 until B).map { b =>
-          val num = 2 * (BigInt(n) * sxr.getOrElse((c, b), BigInt(0)) -
-            BigInt(sx(b)) * r)
-          wc(b) - tdiv(num, BigInt(d(b)) * Q * t0)
-        } :+ (wc(B) - tdiv(2 * r, BigInt(Q) * t0)))
-      }.toMap
-    }
-    classes.map { c =>
-      c -> State(n, sx, sxx, d, if (t0 > 0) t0 else BigInt(1),
-        w(c).map { v =>
+    /** [[Iters]] rounds over `k` weight vectors from zero (none on an
+      * empty corpus); `round` maps each class's weights to its next. */
+    def train(k: Int)(
+        round: Seq[IndexedSeq[BigInt]] => Seq[IndexedSeq[BigInt]]): Seq[State] = {
+      var w = Seq.fill(k)(IndexedSeq.fill(B + 1)(BigInt(0)))
+      if (n > 0) for (_ <- 1 to Iters) w = round(w)
+      w.map(wc => State(n, sx, sxx, d, if (t0 > 0) t0 else BigInt(1),
+        wc.map { v =>
           require(v.isValidLong, s"weight overflow: $v")
           v.toLong
-        })
-    }.toMap
+        }))
+    }
   }
 
   // ----------------------------------------------------- counts-array path
@@ -353,16 +272,19 @@ object LinearTrain {
   private def big128(hi: Long, lo: Long): BigInt =
     (BigInt(hi) << 64) + BigInt(java.lang.Long.toUnsignedString(lo))
 
-  /** [[trainMulti]] over per-doc feature-count ARRAYS — the shape
-    * [[graft.functions.TrigramBucketCounts]] emits: one row per doc,
+  /** One-vs-rest training of every class in `classes` over per-doc
+    * feature-count ARRAYS — the shape [[graft.functions.TrigramBucketCounts]]
+    * and [[graft.functions.TokenBucketCounts]] emit: one row per doc,
     * `cntsCol` = ARRAY<BIGINT> of length B+1 with the bias 1 at index
-    * B. BIT-IDENTICAL states to [[trainMulti]] (same integer algebra,
-    * order-independent sums — spec-pinned), but each GD round is ONE
-    * mapPartitions pass over n doc rows with a (B+1)·|classes|-sized
-    * collect: no posexplode to (doc, b, cnt) rows, no broadcast join,
-    * no per-round shuffle of the exploded base and no margin join back
-    * — the q211/q212 path measured 55 s combined at sf1 through the
-    * exploded shape vs single-digit seconds here. Per-term arithmetic
+    * B; a row's label is +1 for its own class and −1 for every other.
+    * The doc count n is the stats pass's row count. BIT-IDENTICAL
+    * states to [[trainOnRows]] run once per class (same integer
+    * algebra, order-independent sums — spec-pinned), but each GD round
+    * is ONE mapPartitions pass over n doc rows with a (B+1)·|classes|-
+    * sized collect: no explode to (doc, b, cnt) rows, no broadcast join,
+    * no per-round shuffle and no margin join back — the q211/q212 pair
+    * measured 55 s combined at sf1 through an exploded all-classes
+    * shape vs single-digit seconds here. Per-term arithmetic
     * is loud-exact: margins in Math.*Exact longs (the measured oracle-SF
     * bounds hold with a ~2¹⁰ margin; an overflow THROWS rather than
     * training divergent weights — the decimal twin's discipline), and
@@ -373,7 +295,7 @@ object LinearTrain {
     * driver collect — treeAggregate's layout without losing the exact
     * integer discipline. */
   def trainMultiFromCounts(docs: DataFrame, classCol: String, cntsCol: String,
-                           classes: Seq[String], n: Long,
+                           classes: Seq[String],
                            nBuckets: Int = LinearTrain.B): Map[String, State] = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -389,11 +311,11 @@ object LinearTrain {
     val statParts = ds.mapPartitions { it =>
       val sx = new Array[Long](B)
       val sxx = new Array[Long](B)
-      var seen = false
+      var rows = 0L
       it.foreach { case (_, cnts) =>
         require(cnts.length == B + 1,
           s"counts array must have length ${B + 1}, got ${cnts.length}")
-        seen = true
+        rows += 1
         var b = 0
         while (b < B) {
           val c = cnts(b)
@@ -404,37 +326,20 @@ object LinearTrain {
           b += 1
         }
       }
-      if (seen) Iterator.single((sx, sxx)) else Iterator.empty
+      if (rows > 0) Iterator.single((sx, sxx, rows)) else Iterator.empty
     }.collect()
-    val sx = (0 until B).map(b =>
-      statParts.foldLeft(0L)((a, p) => Math.addExact(a, p._1(b))))
-    val sxx = (0 until B).map(b =>
-      statParts.foldLeft(0L)((a, p) => Math.addExact(a, p._2(b))))
-    val variance = (0 until B).map(b =>
-      BigInt(n) * sxx(b) - BigInt(sx(b)) * sx(b))
-    val d = (0 until B).map(b =>
-      if (variance(b) > 0) isqrt(variance(b)).toLong else 1L)
-    val nb = variance.count(_ > 0)
-    val t0 = BigInt(n) * (nb + 1)
+    val gd = new Gd(statParts.foldLeft(0L)(_ + _._3),
+      (0 until B).map(b =>
+        statParts.foldLeft(0L)((a, p) => Math.addExact(a, p._1(b)))),
+      (0 until B).map(b =>
+        statParts.foldLeft(0L)((a, p) => Math.addExact(a, p._2(b)))))
 
     val k = classes.size
     val kcl = classes.toArray
-    var w: Map[String, IndexedSeq[BigInt]] =
-      classes.map(_ -> IndexedSeq.fill(B + 1)(BigInt(0))).toMap
-    if (n > 0) for (_ <- 1 to Iters) {
-      val aByClass: Array[Array[Long]] = kcl.map { c =>
-        val wc = w(c)
-        Array.tabulate(B + 1) { b =>
-          val v = if (b < B) tdiv(wc(b) * n * Q, d(b)) else wc(B) * Q
-          require(v.isValidLong, s"coefficient overflow: $v")
-          v.toLong
-        }
-      }
-      val consts: Array[Long] = kcl.map { c =>
-        val cTot = (0 until B).map(b => tdiv(w(c)(b) * sx(b) * Q, d(b))).sum
-        require(cTot.isValidLong, s"constant overflow: $cTot")
-        -cTot.toLong
-      }
+    val states = gd.train(k) { w =>
+      val folded = w.map(gd.coeffs)
+      val aByClass: Array[Array[Long]] = folded.map(_._1).toArray
+      val consts: Array[Long] = folded.map(_._2).toArray
       val yScale = W * Q
       val parts = ds.mapPartitions { it =>
         val acc = new Acc128(k, B + 1)
@@ -478,37 +383,22 @@ object LinearTrain {
           (ci, b, acc.hi(ci)(b), acc.lo(ci)(b))
         }
       }.collect()
-      val sxr: Map[(String, Int), BigInt] = parts
+      val sxr: Map[(Int, Int), BigInt] = parts
         .groupBy(p => (p._1, p._2))
-        .map { case ((ci, b), ps) =>
-          (kcl(ci), b) -> ps.iterator.map(p => big128(p._3, p._4)).sum
-        }
-      w = classes.map { c =>
-        val wc = w(c)
-        val r = sxr.getOrElse((c, B), BigInt(0))
-        c -> ((0 until B).map { b =>
-          val num = 2 * (BigInt(n) * sxr.getOrElse((c, b), BigInt(0)) -
-            BigInt(sx(b)) * r)
-          wc(b) - tdiv(num, BigInt(d(b)) * Q * t0)
-        } :+ (wc(B) - tdiv(2 * r, BigInt(Q) * t0)))
-      }.toMap
+        .map { case (key, ps) => key -> ps.iterator.map(p => big128(p._3, p._4)).sum }
+      w.indices.map(ci =>
+        gd.step(w(ci), b => sxr.getOrElse((ci, b), BigInt(0))))
     }
-    classes.map { c =>
-      c -> State(n, sx, sxx, d, if (t0 > 0) t0 else BigInt(1),
-        w(c).map { v =>
-          require(v.isValidLong, s"weight overflow: $v")
-          v.toLong
-        })
-    }.toMap
+    classes.zip(states).toMap
   }
 
   /** Per-doc argmax-margin prediction over feature-count arrays — the
     * serving half of [[trainMultiFromCounts]]: margins computed in the
     * same per-row loud-exact long loop (identical integers to
-    * [[marginsMulti]]'s folded-coefficient algebra — spec-pinned), tie
-    * to the lexicographically smallest class (the q212 window's rule:
-    * `states` must arrive sorted by class name). Returns (idCol,
-    * classCol passthrough, predicted_cls) — no margin join, no window. */
+    * [[marginsFromRows]]'s folded-coefficient algebra — spec-pinned),
+    * tie to the lexicographically smallest class (`states` must arrive
+    * sorted by class name). Returns (idCol, classCol passthrough,
+    * predicted_cls) — no margin join, no window. */
   def predictFromCounts(docs: DataFrame, idCol: String, classCol: String,
                         cntsCol: String, states: Seq[(String, State)]): DataFrame = {
     val spark = docs.sparkSession
@@ -553,38 +443,6 @@ object LinearTrain {
         }
       }
       .toDF(idCol, classCol, "predicted_cls")
-  }
-
-  /** Final margins of every doc under every class's trained weights in
-    * ONE pass: (doc_id, cls, m) — the multi-class twin of
-    * [[marginsFromRows]], same folded-coefficient algebra, columnar
-    * like [[trainMulti]]'s rounds (k coefficient columns on the 65-row
-    * broadcast dim, k aggregate columns, per-row stack back to long
-    * form — no per-class row fan-out). */
-  def marginsMulti(base: DataFrame, classCol: String,
-                   states: Seq[(String, State)]): DataFrame = {
-    val spark = base.sparkSession
-    val classes = states.map(_._1)
-    val ki = classes.indices
-    val folded = states.map { case (_, st) => (foldedCoeffs(st), st) }
-    val aRows = (0 until B).map { b =>
-      Row.fromSeq(b.toLong +: folded.map(_._1._1(b)))
-    } :+ Row.fromSeq(B.toLong +: folded.map { case (_, st) => st.w(B) * Q })
-    val aSchema = StructType(StructField("b", LongType) +:
-      ki.map(i => StructField(s"a_$i", LongType)))
-    val aDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(aRows, 1), aSchema)
-    val axAggs = ki.map(i =>
-      sum(col("cnt").cast("decimal(38,0)") * col(s"a_$i")).as(s"ax_$i"))
-    val stacked = ki.map { i =>
-      val (coeffs, st) = folded(i)
-      s"'${classes(i)}', ax_$i + (${coeffs._2 - st.w(B) * Q})"
-    }.mkString(", ")
-    base.join(broadcast(aDf), "b")
-      .groupBy(col("doc_id"), col(classCol))
-      .agg(axAggs.head, axAggs.tail: _*)
-      .select(col("doc_id"), col(classCol),
-        expr(s"stack(${classes.size}, $stacked)").as(Seq("cls", "m")))
   }
 
   /** Standardization folded into sparse scoring constants: per-bucket

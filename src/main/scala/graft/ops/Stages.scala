@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** Stage-boundary lineage truncation for multi-stage pipelines — the
@@ -45,11 +45,25 @@ object Stages {
       case _ => None
     }
 
-  /** Synchronously drop a sealed frame's checkpoint blocks. Safe to call
-    * on never-materialized or already-released frames (unpersist is
-    * idempotent) and a no-op on frames that aren't sealed. The frame
-    * must not be used afterwards — lineage is truncated, there is no
-    * recompute path. */
+  /** Synchronously drop each frame's blocks: a `.cache()`d frame's SQL
+    * cache entry and a sealed frame's checkpoint blocks. Safe to call on
+    * never-materialized or already-released frames (unpersist is
+    * idempotent) and a no-op on frames neither cached nor sealed. A
+    * sealed frame must not be used afterwards — lineage is truncated,
+    * there is no recompute path; a cached one recomputes. */
   def release(dfs: Seq[DataFrame]): Unit =
-    dfs.foreach(df => checkpointRdd(df).foreach(_.unpersist(blocking = true)))
+    dfs.foreach { df =>
+      df.unpersist(blocking = true)
+      checkpointRdd(df).foreach(_.unpersist(blocking = true))
+    }
+
+  /** Synchronously drop EVERY cached frame and persistent RDD of the
+    * session — the between-query drain of Verify and Bench. A sealed
+    * frame's blocks live as a plain persistent RDD, invisible to
+    * `clearCache`, so both are released. */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
 }

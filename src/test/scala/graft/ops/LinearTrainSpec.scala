@@ -114,42 +114,37 @@ class LinearTrainSpec extends SparkSpec {
       classes.map { c =>
         c -> LinearTrain.trainOnRows(rows.select(col("doc_id"),
           when(col("lang") === c, 1).otherwise(-1).as("y"),
-          col("b"), col("cnt")), 90L)
+          col("b"), col("cnt")))
       }
     }
     val sts = states(docs)
-    // argmax margin per doc recovers the planted class
-    val margins = sts.map { case (c, st) =>
+    // n comes from bucket B's sum: one bias row per doc
+    assert(sts.forall(_._2.n == 90L))
+    // argmax margin per doc, ties to the smallest class name, recovers
+    // the planted class
+    val argmax = sts.flatMap { case (c, st) =>
       LinearTrain.marginsFromRows(base(docs).select(col("doc_id"),
           when(col("lang") === c, 1).otherwise(-1).as("y"),
           col("b"), col("cnt")), st)
-        .select(col("doc_id"), lit(c).as("cls"), col("m"))
-    }.reduce(_ unionByName _)
-      .collect().groupBy(_.getLong(0))
-      .map { case (id, rs) =>
-        id -> rs.maxBy(r => (BigDecimal(r.getDecimal(2)), r.getString(1)
-          )._1)(Ordering.by(identity[BigDecimal]))
-      }
+        .select(col("doc_id"), col("m").cast("long"))
+        .as[(Long, Long)].collect().map { case (id, m) => (id, c, m) }
+    }.groupBy(_._1).map { case (id, rs) => id -> rs.minBy(r => (-r._3, r._2))._2 }
     val truth = docs.select("doc_id", "lang").as[(Long, String)]
       .collect().toMap
-    val acc = margins.count { case (id, r) =>
-      r.getString(1) == truth(id) }.toDouble / truth.size
+    val acc = argmax.count { case (id, c) => c == truth(id) }.toDouble /
+      truth.size
     assert(acc >= 0.95, s"planted language signal should be learned, acc=$acc")
     // determinism under reversed single-partition arrival
     val sts2 = states(docs.orderBy(col("doc_id").desc).coalesce(1))
     assert(sts2 == sts)
-    // the vectorized one-pass-per-round path trains BIT-IDENTICAL
+    // the counts-ARRAY kernels (the q211/q212 path: one mapPartitions
+    // pass per round, 128-bit gradient accumulators) train BIT-IDENTICAL
     // states to the per-class loop (the oracle twin replays the
-    // per-class chains)
-    val multi = LinearTrain.trainMulti(base(docs), "lang", classes, 90L)
-    sts.foreach { case (c, st) => assert(multi(c) == st, s"class $c") }
-    // ...and the counts-ARRAY kernels (the q211/q212 path: one
-    // mapPartitions pass per round, 128-bit gradient accumulators)
-    // train the SAME states and predict the same argmax
+    // per-class chains) and predict the same argmax
     val cntsDf = docs.withColumn("cnts",
       expr(s"graft_trigram_buckets${LinearTrain.B}(text)"))
     val fromCounts = LinearTrain
-      .trainMultiFromCounts(cntsDf, "lang", "cnts", classes, 90L)
+      .trainMultiFromCounts(cntsDf, "lang", "cnts", classes)
     sts.foreach { case (c, st) =>
       assert(fromCounts(c) == st, s"counts-array class $c") }
     val predicted = LinearTrain
@@ -157,28 +152,7 @@ class LinearTrainSpec extends SparkSpec {
         classes.map(c => c -> fromCounts(c)))
       .select(col("doc_id"), col("predicted_cls"))
       .as[(Long, String)].collect().toMap
-    val viaWindowArgmax = LinearTrain
-      .marginsMulti(base(docs), "lang", classes.map(c => c -> multi(c)))
-      .select(col("doc_id"), col("cls"), col("m").cast("long"))
-      .as[(Long, String, Long)].collect()
-      .groupBy(_._1).map { case (id, rs) =>
-        // max margin, tie to smallest class — the q212 rule
-        id -> rs.minBy(r => (-r._3, r._2))._2
-      }
-    assert(predicted == viaWindowArgmax)
-    // ...and the one-pass margin path agrees with marginsFromRows
-    val viaMulti = LinearTrain
-      .marginsMulti(base(docs), "lang", classes.map(c => c -> multi(c)))
-      .select(col("doc_id"), col("cls"), col("m").cast("long"))
-      .as[(Long, String, Long)].collect().toSet
-    val viaSingle = classes.flatMap { c =>
-      LinearTrain.marginsFromRows(base(docs).select(col("doc_id"),
-          when(col("lang") === c, 1).otherwise(-1).as("y"),
-          col("b"), col("cnt")), multi(c))
-        .select(col("doc_id"), col("m").cast("long"))
-        .as[(Long, Long)].collect().map { case (id, m) => (id, c, m) }
-    }.toSet
-    assert(viaMulti == viaSingle)
+    assert(predicted == argmax)
   }
 
   test("native trigram-bucket counts equal the composed lambda form on " +

@@ -3,10 +3,10 @@ package graft.ops
 import graft.SparkSpec
 
 /** ops/Stages: seal must truncate lineage (downstream plans see a
-  * LogicalRDD) and release must drop the checkpoint blocks
-  * DETERMINISTICALLY — the contract Dataset.unpersist cannot provide on
-  * a checkpointed frame (CacheManager no-op; ContextCleaner is
-  * GC-driven). */
+  * LogicalRDD) and release must drop cached frames and checkpoint
+  * blocks DETERMINISTICALLY — the contract Dataset.unpersist cannot
+  * provide on a checkpointed frame (CacheManager no-op; ContextCleaner
+  * is GC-driven). */
 class StagesSpec extends SparkSpec {
 
   test("release drops a sealed frame's blocks synchronously") {
@@ -33,6 +33,19 @@ class StagesSpec extends SparkSpec {
     Stages.release(Seq(sealedDf))
     Stages.release(Seq(sealedDf)) // second release: idempotent
     assert(plain.count() == 10) // the INPUT stays recomputable
+  }
+
+  test("release drops a materialized .cache()d frame's cache entry") {
+    val s = spark
+    import s.implicits._
+    val cached = (1 to 100).toDF("x").where($"x" % 7 === 0).cache()
+    assert(cached.count() == 14)
+    def lookup = spark.sharedState.cacheManager
+      .lookupCachedData(cached.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(lookup.nonEmpty)
+    Stages.release(Seq(cached))
+    assert(lookup.isEmpty,
+      "release must unpersist a cached frame")
   }
 
   test("lazy seal materializes on first action and still releases") {
