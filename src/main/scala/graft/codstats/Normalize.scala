@@ -103,10 +103,11 @@ object Normalize {
   }
 
   /** Incremental guard: keep only rows whose (game_id, player_uno_id) is
-    * not already ingested. */
+    * not already ingested — the store anti-join of
+    * [[graft.ops.Landing.appendNew]]. */
   def newGamesOnly(incoming: DataFrame, existingKeys: DataFrame): DataFrame =
-    incoming.join(existingKeys.select("game_id", "player_uno_id"),
-      Seq("game_id", "player_uno_id"), "left_anti")
+    graft.ops.Landing.newKeysOnly(incoming, existingKeys,
+      Seq("game_id", "player_uno_id"))
 
   /** Audit: modes present in data but missing from the dimension
     * (vw_unknown_modes shape, parse_matches.sh:205-221). */

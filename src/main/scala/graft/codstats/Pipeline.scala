@@ -3,6 +3,8 @@ package graft.codstats
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.{Landing, Stages}
+
 import Model._
 
 /** End-to-end pipeline assembly (SURVEY.md §3 E1): landing JSON →
@@ -38,27 +40,16 @@ object Pipeline {
     df.coalesce(1).write.mode("overwrite").json(path)
 
   /** The reference's cron run loop (`run_and_deploy.sh`: fetch → parse →
-    * generate → sync, README.md run-loop docs) as ONE streaming job:
-    * landing stream → normalize → foreachBatch appends NEW fact rows →
-    * one report-tree rebuild per tick over the full store.
-    *
-    * `Trigger.AvailableNow` makes each invocation one cron tick — drain
-    * everything new, refresh reports, stop, resumable from the checkpoint;
-    * swapping in a processing-time trigger turns the same job into a
-    * continuously-refreshing service (move the report rebuild into a
-    * listener or a second cadence). Rebuilding every report per tick is
-    * the reference's own cost model (it regenerates every file each run),
-    * and the rebuild runs even on an empty tick so meta.updatedAt always
-    * reflects the last successful run.
-    *
-    * Idempotency: each batch keeps one row per (game_id, player_uno_id)
-    * and anti-joins the store's existing keys before appending — the
-    * reference's INSERT OR IGNORE (its parser does the same NOT-IN over all
-    * ingested keys, parse_matches.sh:580-596). This guards re-delivered
-    * documents under new filenames, whether they land in a later tick or in
-    * the same one, AND foreachBatch replays after a crash between the
-    * append and the checkpoint commit. At scale the key read is
-    * column-pruned to the two id columns.
+    * generate → sync) as ONE streaming job: each invocation is one
+    * [[Landing.drain]] tick — new landed files → normalize →
+    * [[Landing.appendNew]] on (game_id, player_uno_id), the
+    * reference's INSERT OR IGNORE (parse_matches.sh:580-596), into a store
+    * partitioned by event date (`fact_day`: reports prune to the dates they
+    * touch, compaction works per partition) — then one report-tree rebuild
+    * over the full store. Rebuilding every report per tick is the
+    * reference's own cost model (it regenerates every file each run); the
+    * rebuild runs even on an empty tick so meta.updatedAt always reflects
+    * the last successful run.
     */
   def continuousRun(spark: SparkSession, landingDir: String,
                     checkpointDir: String, factDir: String, reportDir: String,
@@ -66,39 +57,21 @@ object Pipeline {
                     seasons: Dataset[Season],
                     settings: Settings = Settings()): Unit = {
     recoverFactStore(factDir) // heal a crashed compaction swap first
-    def store(): Option[DataFrame] =
-      if (new java.io.File(factDir).exists()) Some(spark.read.parquet(factDir))
-      else None
-    val valid = Normalize.validGames(
-      StreamingIngest.readLanding(spark, landingDir), modes)
-    val q = StreamingIngest.ingestWriter(valid, checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val unique = batch.dropDuplicates("game_id", "player_uno_id")
-        val fresh = graft.ops.Stages.seal(store() match {
-          case Some(existing) => Normalize.newGamesOnly(unique, existing)
-          case None           => unique
-        }, eager = true)
-        // a zero-row batch must not create a data-less factDir (parquet
-        // schema inference would fail on the next store() read)
-        if (!fresh.isEmpty) {
-          // event-date partitioning (Normalize's production contract): the
-          // derived layer prunes to the dates a report touches, and
-          // compaction works per partition
-          fresh.withColumn("fact_day", to_date(col("ended_at")))
-            .write.mode("append").partitionBy("fact_day").parquet(factDir)
-        }
-        // Dataset.unpersist is a no-op on a checkpointed frame: drop its
-        // blocks now, not whenever the context cleaner gets to them
-        graft.ops.Stages.release(Seq(fresh))
-      }
-      .start()
-    q.awaitTermination()
+    // one JSON document per file; the file source's own bound on one batch
+    val landing = spark.readStream.schema(matchSchema)
+      .option("maxFilesPerTrigger", 1000).json(landingDir)
+    val valid = Normalize.validGames(landing, modes)
+    Landing.drain(valid, checkpointDir) { (batch, _) =>
+      Stages.release(Seq(Landing.appendNew(
+        batch.withColumn("fact_day", to_date(col("ended_at"))), factDir,
+        Seq("game_id", "player_uno_id"), "fact_day")))
+    }
     // the report rebuild runs even when no store exists yet (first tick saw
     // nothing): meta/seasons/players need no fact data, and the fact-backed
     // reports come out empty-but-valid over a zero-row frame
-    val fact = store().map(_.drop("fact_day")).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        valid.schema))
+    val fact = Landing.readIfExists(spark, factDir).map(_.drop("fact_day"))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], valid.schema))
     runReports(Context(spark, fact, players, modes, seasons, settings), reportDir)
   }
 

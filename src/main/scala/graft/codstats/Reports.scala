@@ -117,32 +117,16 @@ object Reports {
     TopK.perGroup(sessions(stats, settings), 1,
       Seq(col("player_id")), Seq(desc("session_seq"))).drop("rank")
 
-  /** Recent N matches (generate_lookup_data.sh:514-549) with the J2+P10
-    * display-name join: mode id → display name, falling back to the
-    * reference's literal `Unknown &lt;id&gt;` (HTML-entity escaped at the
-    * source, generate_lookup_data.sh:525 / parse_matches.sh:514). The dim
-    * join runs AFTER the global top-N — n rows join a broadcast dim. */
-  def recentMatches(stats: DataFrame, modes: Dataset[GameMode],
-                    n: Int = 15): DataFrame = {
-    val dim = modes.select(col("id").as("game_mode_sub"),
-                           col("display_name"))
-    TopK.global(stats.select(col("player_id"), col("game_id"), col("ended_at"),
-        col("game_mode_sub"), col("kills"), col("deaths"), col("damage_done"),
-        col("team_placement")), n, desc("ended_at"), col("player_id"), col("game_id"))
-      .join(broadcast(dim), Seq("game_mode_sub"), "left")
-      .withColumn("game_mode_display",
-        coalesce(col("display_name"),
-                 concat(lit("Unknown &lt;"), col("game_mode_sub"), lit("&gt;"))))
-      .drop("display_name")
-  }
-
   /** Recent N games as NESTED documents — the vw_full_game_stats shape the
     * frontend actually loads (parse_matches.sh:481-505: one row per game,
     * comma-joined roster + a per-player stats JSON array;
-    * generate_lookup_data.sh:514-541 adds the display-name join). Roster
-    * and stats arrays are sorted for determinism (SURVEY §7.5.3). The
-    * re-nest groupBy runs BEFORE the top-N cut (the cut needs per-game
-    * rows), then n rows join the broadcast dim. */
+    * generate_lookup_data.sh:514-549 adds the J2+P10 display-name join:
+    * mode id → display name, falling back to the reference's literal
+    * `Unknown &lt;id&gt;`, HTML-entity escaped at the source,
+    * generate_lookup_data.sh:525 / parse_matches.sh:514). Roster and stats
+    * arrays are sorted for determinism (SURVEY §7.5.3). The re-nest
+    * groupBy runs BEFORE the top-N cut (the cut needs per-game rows), then
+    * n rows join the broadcast dim. */
   def recentMatchesDoc(stats: DataFrame, modes: Dataset[GameMode],
                        n: Int = 15): DataFrame = {
     val perGame = stats.groupBy(col("game_id"), col("ended_at"), col("game_mode_sub"))

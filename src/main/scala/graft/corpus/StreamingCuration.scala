@@ -2,26 +2,25 @@ package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StringType, StructField}
 
+import graft.ops.{Landing, NearDup, Stages, TextOps}
 import graft.sources.JsonlDocuments
 
 /** Streaming corpus ingest — the corpus product's cron loop, mirroring
   * `codstats.Pipeline.continuousRun`: a landing directory of JSONL drops
   * drains through the hardened parse into a parquet document store, one
-  * `Trigger.AvailableNow` invocation per tick, resumable from the
-  * checkpoint.
+  * [[graft.ops.Landing.drain]] per tick, resumable from the checkpoint.
   *
   * Production properties carried over from the batch reader and the
   * codstats loop:
   *  - corrupt lines and missing-required-field rows are QUARANTINED to
-  *    their own sink, never dropped and never fatal (a 100 TB drop always
-  *    contains garbage); both sinks are fed from ONE cached batch pass;
-  *  - appends are idempotent: each batch anti-joins the store's existing
-  *    doc_ids before writing, so a re-delivered file (new name, same
-  *    docs) or a foreachBatch crash-replay cannot duplicate documents —
-  *    at scale the key read is column-pruned to the one id column;
+  *    their own sink by the batch reader's split
+  *    ([[graft.sources.JsonlDocuments]]), never dropped and never fatal
+  *    (a 100 TB drop always contains garbage); both sinks are fed from ONE
+  *    sealed batch pass;
+  *  - appends are idempotent ([[graft.ops.Landing.appendNew]] on doc_id):
+  *    a re-delivered file (new name, same docs), in a later tick or the
+  *    same one, or a foreachBatch crash-replay cannot duplicate documents;
   *  - the store is partitioned by source, the partition key every
   *    downstream curation stage (mixture rates, per-source meters) prunes
   *    on.
@@ -31,19 +30,10 @@ object StreamingCuration {
   /** One ingest tick: drain new landing files, quarantine bad lines,
     * append new documents to the store. */
   def ingestTick(spark: SparkSession, landingDir: String, checkpointDir: String,
-                 storeDir: String, quarantineDir: String): Unit = {
-    val q = landingStream(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        graft.ops.Stages.release(Seq(
-          ingestBatch(spark, batch0, storeDir, quarantineDir)))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+                 storeDir: String, quarantineDir: String): Unit =
+    Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, _) =>
+      Stages.release(Seq(ingestBatch(batch, storeDir, quarantineDir)))
+    }
 
   /** One CURATION tick — [[ingestTick]] plus the q107 O(delta) discipline
     * lifted to the product loop: the per-document heavy work (quality
@@ -72,20 +62,12 @@ object StreamingCuration {
   def curationTick(spark: SparkSession, landingDir: String,
                    checkpointDir: String, storeDir: String,
                    quarantineDir: String, stateDir: String,
-                   cfg: CurationPipeline.Config = CurationPipeline.Config()): Unit = {
-    val q = landingStream(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch0: DataFrame, tick: Long) =>
-        val fresh = ingestBatch(spark, batch0, storeDir, quarantineDir)
-        curateDelta(spark, fresh, stateDir, cfg, tick)
-        graft.ops.Stages.release(Seq(fresh)) // tick done; drop its blocks
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+                   cfg: CurationPipeline.Config = CurationPipeline.Config()): Unit =
+    Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, tick) =>
+      val fresh = ingestBatch(batch, storeDir, quarantineDir)
+      curateDelta(spark, fresh, stateDir, cfg, tick)
+      Stages.release(Seq(fresh)) // tick done; drop its blocks
+    }
 
   /** Survivor selection + release stages over the accumulated state:
     * transitive near-dup components over the pair state
@@ -98,10 +80,10 @@ object StreamingCuration {
       : (DataFrame, DataFrame) = {
     import spark.implicits._
     val normDocs = spark.read.parquet(s"$stateDir/normdocs")
-    val pairs = readState(spark, s"$stateDir/pairs")
+    val pairs = Landing.readIfExists(spark, s"$stateDir/pairs")
       .getOrElse(spark.emptyDataset[(Long, Long, Double)]
         .toDF("doc_a", "doc_b", "jaccard"))
-    val near = graft.ops.NearDup
+    val near = NearDup
       .transitiveSurvivors(normDocs, col("doc_id"), pairs).cache()
     val outCols = spark.read.parquet(storeDir).columns.toSeq
     val (curated, tail, caches) =
@@ -118,52 +100,26 @@ object StreamingCuration {
       ("near_dedup", near.count())) ++
       tail.map { case (stage, t) => (stage, t.docsAfter) })
       .toDF("stage", "docs_after")
-    graft.ops.Stages.release(near +: caches)
+    Stages.release(near +: caches)
     (curated, audit)
   }
 
   // ------------------------------------------------------------- internals
 
   private def landingStream(spark: SparkSession, landingDir: String): DataFrame =
-    spark.readStream
-      .schema(JsonlDocuments.schema
-        .add(StructField("_corrupt_record", StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(landingDir)
-
-  private def readState(spark: SparkSession, path: String): Option[DataFrame] =
-    if (new java.io.File(path).exists()) Some(spark.read.parquet(path))
-    else None
+    spark.readStream.schema(JsonlDocuments.parsedSchema)
+      .options(JsonlDocuments.permissive).json(landingDir)
 
   /** Quarantine + idempotent store append for one micro-batch; returns
-    * the FRESH clean docs (materialized — safe to reuse after return). */
-  private def ingestBatch(spark: SparkSession, batch0: DataFrame,
-                          storeDir: String, quarantineDir: String): DataFrame = {
-    val batch = graft.ops.Stages.seal(batch0, eager = true) // one pass feeds both sinks
-    val bad = batch.filter(col("_corrupt_record").isNotNull ||
-        col("doc_id").isNull || col("text").isNull)
-      .select(coalesce(col("_corrupt_record"), to_json(struct(
-        col("doc_id"), col("text"), col("lang"), col("source"), col("url"))))
-        .as("raw_line"))
+    * the FRESH clean docs (sealed — safe to reuse after return). */
+  private def ingestBatch(batch0: DataFrame, storeDir: String,
+                          quarantineDir: String): DataFrame = {
+    val batch = Stages.seal(batch0, eager = true) // one pass feeds both sinks
+    val (clean, bad) = JsonlDocuments.split(batch)
     if (!bad.isEmpty)
       bad.write.mode("append").json(quarantineDir)
-    val clean0 = batch
-      .filter(col("_corrupt_record").isNull && col("doc_id").isNotNull
-        && col("text").isNotNull)
-      .drop("_corrupt_record")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-    val fresh0 = (readState(spark, storeDir) match {
-      case Some(existing) => clean0.join(
-        existing.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      case None => clean0
-    })
-    val fresh = graft.ops.Stages.seal(fresh0, eager = true)
-    if (!fresh.isEmpty)
-      fresh.write.mode("append").partitionBy("source").parquet(storeDir)
-    // deterministic block release (Dataset.unpersist is a no-op on a
-    // sealed frame; this was the one leak per micro-batch)
-    graft.ops.Stages.release(Seq(batch))
+    val fresh = Landing.appendNew(clean, storeDir, Seq("doc_id"), "source")
+    Stages.release(Seq(batch))
     fresh
   }
 
@@ -174,7 +130,6 @@ object StreamingCuration {
   private[corpus] def curateDelta(spark: SparkSession, fresh: DataFrame,
       stateDir: String, cfg: CurationPipeline.Config, tick: Long): Unit = {
     import spark.implicits._
-    import graft.ops.{NearDup, TextOps}
     if (fresh.isEmpty) return
 
     val nIn = fresh.count()
@@ -186,37 +141,32 @@ object StreamingCuration {
     val hashes = quality.select(col("doc_id"),
         md5(col("text")).as("th"),
         expr(TextOps.hash60(TextOps.normalizeExpr("text"))).as("nh"))
-      .transform(graft.ops.Stages.seal(_, eager = true))
-    val prevHashes = readState(spark, s"$stateDir/hashes")
+      .transform(Stages.seal(_, eager = true))
+    val prevHashes = Landing.readIfExists(spark, s"$stateDir/hashes")
+    // the min doc_id per hash `h` among the rows whose `h` no prior tick saw
+    def firstNew(rows: DataFrame, h: String): DataFrame =
+      prevHashes.fold(rows)(Landing.newKeysOnly(rows, _, Seq(h)))
+        .groupBy(col(h)).agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     // exact: drop texts already in the corpus, keep min id per text in-delta
-    val exactIds = prevHashes.fold(hashes)(prev =>
-        hashes.join(prev.select(col("th")).distinct(), Seq("th"), "left_anti"))
-      .groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val exactHashes = hashes.join(exactIds, Seq("doc_id"), "left_semi")
+    val exactHashes = hashes.join(firstNew(hashes, "th"), Seq("doc_id"), "left_semi")
     val nExact = exactHashes.count()
     // normalized: same discipline on the normalization hash. Probing ALL
     // prior quality hashes (not just prior survivors) is sound: an exact
     // duplicate has the identical text, hence the identical nh, so the
     // nh SETS coincide.
-    val normIds = prevHashes.fold(exactHashes)(prev =>
-        exactHashes.join(prev.select(col("nh")).distinct(), Seq("nh"), "left_anti"))
-      .groupBy(col("nh")).agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val normDocs = quality.join(normIds, Seq("doc_id"), "left_semi")
-      .transform(graft.ops.Stages.seal(_, eager = true))
+    val normDocs = quality.join(firstNew(exactHashes, "nh"), Seq("doc_id"), "left_semi")
+      .transform(Stages.seal(_, eager = true))
 
     // near-dup discovery: delta signatures + band keys vs state ∪ delta —
     // every new edge is incident to a new doc, so the accumulated pair
     // table is exactly the batch pair set over the accumulated survivors
     val hashed = NearDup.shingleHashed(normDocs, "doc_id", "text")
-      .transform(graft.ops.Stages.seal(_, eager = true))
-    val newBands = hashed.select(col("doc_id"),
-        posexplode(expr("graft_minhash_bands(hs)")).as(Seq("band", "key")))
-      .transform(graft.ops.Stages.seal(_, eager = true))
-    val allBands = readState(spark, s"$stateDir/bands")
+      .transform(Stages.seal(_, eager = true))
+    val newBands = NearDup.bandSignatures(hashed)
+      .transform(Stages.seal(_, eager = true))
+    val allBands = Landing.readIfExists(spark, s"$stateDir/bands")
       .fold(newBands)(_.unionByName(newBands))
-    val allSigs = readState(spark, s"$stateDir/sigs")
+    val allSigs = Landing.readIfExists(spark, s"$stateDir/sigs")
       .fold(hashed)(_.unionByName(hashed))
     val cand = newBands.as("x").join(allBands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -224,13 +174,7 @@ object StreamingCuration {
       .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
       .distinct()
-    val newPairs0 = cand
-      .join(allSigs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(allSigs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("n_inter", expr("graft_sorted_intersect(hs_a, hs_b)"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("n_inter")).cast("double"))
+    val newPairs0 = NearDup.jaccardScored(cand, allSigs, "doc_a", "doc_b")
       .filter(col("jaccard") >= cfg.jaccardThreshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
     // the q127 confirm (when configured) runs on the SAME pair set the
@@ -242,7 +186,7 @@ object StreamingCuration {
     // was added still resumes — allowMissingColumns admits old parquet
     // with typed nulls; the confirm only reads doc_id/text)
     val newPairs = CurationPipeline.confirmPairs(newPairs0,
-      readState(spark, s"$stateDir/normdocs")
+      Landing.readIfExists(spark, s"$stateDir/normdocs")
         .fold(normDocs)(_.unionByName(normDocs, allowMissingColumns = true)),
       cfg)
 
@@ -261,7 +205,7 @@ object StreamingCuration {
     // the tick's frames are all fully written to state by now — release
     // their blocks instead of leaving them to ContextCleaner (ticks in
     // one session otherwise accumulate checkpoint blocks)
-    graft.ops.Stages.release(Seq(ruled, quality, hashes, normDocs, hashed,
+    Stages.release(Seq(ruled, quality, hashes, normDocs, hashed,
       newBands))
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * Without it, a path-keyed entry silently serves a stale cut/model when
   * the files under `dir` change within a session — exactly what an
   * ingest run appending to the same directory does
-  * (`codstats/Pipeline`, `StreamingIngest`). With it, any file added,
+  * (`codstats/Pipeline`, `corpus/StreamingCuration`). With it, any file added,
   * removed, resized, or rewritten (mtime) produces a new key, and the
   * stale entry is simply never hit again (the weak session map bounds
   * the orphaned entries; they are dimension-sized).

@@ -42,7 +42,7 @@ object JsonlDocuments {
     * JSON — field names preserved and nulls explicit, so a repair pass
     * can always re-parse the quarantine unambiguously (a positional CSV
     * reconstruction could not). */
-  private[sources] def split(parsed: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def split(parsed: DataFrame): (DataFrame, DataFrame) = {
     val clean = parsed
       .filter(col("_corrupt_record").isNull && col("doc_id").isNotNull
         && col("text").isNotNull)
@@ -67,9 +67,11 @@ object JsonlDocuments {
     * long-lived ingest session pinned one full parse per drop forever —
     * caching is the CALLER's choice (and cost), per the scaladoc above. */
   def read(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    split(spark.read
-      .schema(schema.add(StructField("_corrupt_record", StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path))
+    split(spark.read.schema(parsedSchema).options(permissive).json(path))
+
+  /** The parse [[split]] expects, in the batch and the landing reader. */
+  private[graft] val parsedSchema: StructType =
+    schema.add(StructField("_corrupt_record", StringType, nullable = true))
+  private[graft] val permissive: Map[String, String] = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
 }

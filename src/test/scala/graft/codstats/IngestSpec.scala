@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.Salt
+import graft.ops.{Landing, Salt}
 
 /** Streaming file-source ingest (S4 equivalence) and skew-salted
   * aggregation specs. */
@@ -29,11 +29,11 @@ class StreamingIngestSpec extends SparkSpec {
     writeDoc(landing, "match_m1_u2.json", "m1", "u2", 1590000000L)
 
     def runOnce(): Unit = {
-      val raw = StreamingIngest.readLanding(spark, landing.toString)
+      val raw = spark.readStream.schema(Model.matchSchema).json(landing.toString)
       val valid = Normalize.validGames(raw, Model.seedGameModes.toDS())
-      val q = StreamingIngest.ingestWriter(valid, ckpt.toString)
-        .format("parquet").option("path", out.toString).start()
-      q.awaitTermination()
+      Landing.drain(valid, ckpt.toString) { (batch, _) =>
+        batch.write.mode("append").parquet(out.toString)
+      }
     }
     runOnce()
     assert(spark.read.parquet(out.toString).count() == 2L)

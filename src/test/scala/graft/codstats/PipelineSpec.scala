@@ -430,13 +430,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("recent matches resolve display names with the Unknown fallback") {
-    val rm = Reports.recentMatches(ctx.stats, ctx.modes)
+    val rm = Reports.recentMatchesDoc(ctx.stats, ctx.modes)
       .select("game_mode_display").distinct().as[String].collect().toSet
     assert(rm == Set("BR Trios"))
     // unmapped mode → the reference's HTML-escaped fallback literal
     // (generate_lookup_data.sh:525)
     val unmapped = ctx.stats.withColumn("game_mode_sub", lit("br_mystery"))
-    val fb = Reports.recentMatches(unmapped, ctx.modes)
+    val fb = Reports.recentMatchesDoc(unmapped, ctx.modes)
       .select("game_mode_display").distinct().as[String].collect().toSet
     assert(fb == Set("Unknown &lt;br_mystery&gt;"))
   }

@@ -45,6 +45,39 @@ class StreamingCurationSpec extends SparkSpec {
     assert(spark.read.json(quar).count() == 1L)
   }
 
+  test("two copies of one drop landing in the same tick append each doc once") {
+    val landing = Files.createTempDirectory("graft_st_landing")
+    val ckpt = Files.createTempDirectory("graft_st_ckpt")
+    val store = Files.createTempDirectory("graft_st_store").toString + "/docs"
+    val quar = Files.createTempDirectory("graft_st_quar").toString + "/bad"
+    val drop = Seq(
+      """{"doc_id": 1, "text": "hello world", "lang": "en", "source": "s0"}""",
+      """{"doc_id": 2, "text": "two tokens", "lang": "en", "source": "s1"}""")
+      .mkString("\n")
+    // the store does not exist yet, so only the in-batch dedup can drop
+    // the copy
+    Files.writeString(landing.resolve("drop1.jsonl"), drop)
+    Files.writeString(landing.resolve("drop1_copy.jsonl"), drop)
+    StreamingCuration.ingestTick(spark, landing.toString, ckpt.toString, store, quar)
+    val ids = spark.read.parquet(store).select("doc_id").as[Long].collect()
+    assert(ids.sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("a line without text is quarantined with the null field explicit") {
+    val landing = Files.createTempDirectory("graft_sn_landing")
+    val ckpt = Files.createTempDirectory("graft_sn_ckpt")
+    val store = Files.createTempDirectory("graft_sn_store").toString + "/docs"
+    val quar = Files.createTempDirectory("graft_sn_quar").toString + "/bad"
+    Files.writeString(landing.resolve("drop1.jsonl"), Seq(
+      """{"doc_id": 1, "text": "hello world", "lang": "en", "source": "s0"}""",
+      """{"doc_id": 7, "lang": "en", "source": "s0"}""").mkString("\n"))
+    StreamingCuration.ingestTick(spark, landing.toString, ckpt.toString, store, quar)
+    assert(spark.read.parquet(store).count() == 1L)
+    val bad = spark.read.json(quar).select("raw_line").as[String].collect().toSeq
+    assert(bad.size == 1 && bad.head.contains("\"doc_id\":7") &&
+      bad.head.contains("\"text\":null"), s"quarantined: $bad")
+  }
+
   test("incremental curation ticks + release == from-scratch batch run") {
     val landing = Files.createTempDirectory("graft_cc_landing")
     val ckpt = Files.createTempDirectory("graft_cc_ckpt")
