@@ -304,23 +304,37 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("runReports releases the stats view when a report write throws") {
-    // outDir below a regular file: the first write fails, before the view
-    // is materialized (it is registered with the cache all the same)
+    // outDir below a regular file: every write of the wave fails, after
+    // the view is materialized
     val file = java.nio.file.Files.createTempFile("graft_reports", ".txt")
     assert(leftPersisted(intercept[Exception](
       Pipeline.runReports(ctx, s"$file/reports"))).isEmpty)
     assert(ctx.stats.storageLevel == StorageLevel.NONE)
     // a player id too long for a directory name fails the partitioned
-    // sessions write, after the view-backed reports materialized it
+    // writes (sessions and both series); the rest of the wave runs on
     val longId = "p" * 300
     val players = Seq(Player("uno-alice", longId, is_core = true)).toDS()
     val failing = ctx.copy(players = players)
     val out = java.nio.file.Files.createTempDirectory("graft_reports").toString
-    assert(leftPersisted(intercept[Exception](
-      Pipeline.runReports(failing, out))).isEmpty)
+    var thrown: Throwable = null
+    assert(leftPersisted {
+      thrown = intercept[Exception](Pipeline.runReports(failing, out))
+    }.isEmpty)
+    assert(Iterator.iterate(thrown)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(longId)), thrown)
+    // the wave is over on return: no job still running, no pool thread left
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .exists(_.getName.startsWith("report-wave-")))
     assert(failing.stats.storageLevel == StorageLevel.NONE)
     assert(new java.io.File(s"$out/leaderboards").isDirectory)
-    assert(!new java.io.File(s"$out/time_series").exists())
+    assert(spark.read.json(s"$out/leaderboards").count() > 0)
+  }
+
+  test("the report wave writes exactly the inventory, in its order") {
+    assert(Pipeline.reportWrites(ctx, ctx.stats, Nil).map(_._1) ==
+      Pipeline.reportInventory)
   }
 
   test("continuousRun releases each micro-batch's checkpoint on return") {

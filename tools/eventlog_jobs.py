@@ -21,7 +21,10 @@ any execution (file listing, RDD actions), in start order:
   jobs    Spark jobs tagged with its execution id (1 for a lone job)
   tasks   tasks those jobs finished
   id      the execution id, or `job <n>` for a lone job, and its
-          description: the call site, or the lone job's first stage name
+          description: the job description when one is set
+          (`SparkContext.setJobDescription`, e.g. `report <dir>` for each
+          write of the report rebuild); otherwise the execution's call
+          site, or the lone job's first stage name
 A closing line totals them. The lines with the largest gap and run times
 are where a run's per-job floor sits.
 """
@@ -68,10 +71,12 @@ def timeline(path):
         elif kind == SQL_END and e["executionId"] in execs:
             execs[e["executionId"]]["end"] = e["time"]
         elif kind == "SparkListenerJobStart":
-            sql_id = (e.get("Properties") or {}).get("spark.sql.execution.id")
+            props = e.get("Properties") or {}
+            sql_id = props.get("spark.sql.execution.id")
             stages = e.get("Stage Infos") or [{}]
             jobs[e["Job ID"]] = {"exec": int(sql_id) if sql_id is not None else None,
-                                 "desc": stages[0].get("Stage Name", ""),
+                                 "desc": props.get("spark.job.description")
+                                 or stages[0].get("Stage Name", ""),
                                  "start": e["Submission Time"], "end": e["Submission Time"]}
             for s in e.get("Stage IDs", []):
                 stage_job[s] = e["Job ID"]
