@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executor
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructType}
 
 import graft.ops.{Landing, Stages}
 
@@ -57,6 +58,15 @@ object Pipeline {
     * reference's own cost model (it regenerates every file each run); the
     * rebuild runs even on an empty tick so meta.updatedAt always reflects
     * the last successful run.
+    *
+    * The drain and the post-drain store read run inside
+    * [[Landing.listedOnDriver]]: over a local landing directory and store
+    * they list their files on the driver, with no Spark listing job, and
+    * the store is read with its declared [[factSchema]], with no
+    * footer-inference job. Like compaction, a tick owns the store and the
+    * session while it runs: one tick at a time, never concurrently with
+    * compaction or with another tick in the same session (the
+    * listing threshold it sets is session-wide until the read is done).
     */
   def continuousRun(spark: SparkSession, landingDir: String,
                     checkpointDir: String, factDir: String, reportDir: String,
@@ -64,23 +74,31 @@ object Pipeline {
                     seasons: Dataset[Season],
                     settings: Settings = Settings()): Unit = {
     recoverFactStore(factDir) // heal a crashed compaction swap first
-    // one JSON document per file; the file source's own bound on one batch
-    val landing = spark.readStream.schema(matchSchema)
-      .option("maxFilesPerTrigger", 1000).json(landingDir)
-    val valid = Normalize.validGames(landing, modes)
-    Landing.drain(valid, checkpointDir) { (batch, _) =>
-      Stages.release(Seq(Landing.appendNew(
-        batch.withColumn("fact_day", to_date(col("ended_at"))), factDir,
-        Seq("game_id", "player_uno_id"), "fact_day")))
+    val fact = Landing.listedOnDriver(spark, landingDir, factDir) {
+      // one JSON document per file; the file source's own bound on one batch
+      val landing = spark.readStream.schema(matchSchema)
+        .option("maxFilesPerTrigger", 1000).json(landingDir)
+      val valid = Normalize.validGames(landing, modes)
+      Landing.drain(valid, checkpointDir) { (batch, _) =>
+        Stages.release(Seq(Landing.appendNew(
+          batch.withColumn("fact_day", to_date(col("ended_at"))), factDir,
+          Seq("game_id", "player_uno_id"), "fact_day")))
+      }
+      // the report rebuild runs even when no store exists yet (first tick
+      // saw nothing): meta/seasons/players need no fact data, and the
+      // fact-backed reports come out empty-but-valid over a zero-row frame
+      Landing.readIfExists(spark, factDir, Some(factSchema(valid.schema)))
+        .map(_.drop("fact_day"))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], valid.schema))
     }
-    // the report rebuild runs even when no store exists yet (first tick saw
-    // nothing): meta/seasons/players need no fact data, and the fact-backed
-    // reports come out empty-but-valid over a zero-row frame
-    val fact = Landing.readIfExists(spark, factDir).map(_.drop("fact_day"))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], valid.schema))
     runReports(Context(spark, fact, players, modes, seasons, settings), reportDir)
   }
+
+  /** The fact store's schema: the valid rows `continuousRun` appends, plus
+    * their `fact_day` partition column. */
+  private[codstats] def factSchema(valid: StructType): StructType =
+    valid.add("fact_day", DateType)
 
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()

@@ -28,11 +28,15 @@ import graft.sources.JsonlDocuments
 object StreamingCuration {
 
   /** One ingest tick: drain new landing files, quarantine bad lines,
-    * append new documents to the store. */
+    * append new documents to the store. Over a local landing directory
+    * and store it lists its files on the driver
+    * ([[graft.ops.Landing.listedOnDriver]]). */
   def ingestTick(spark: SparkSession, landingDir: String, checkpointDir: String,
                  storeDir: String, quarantineDir: String): Unit =
-    Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, _) =>
-      Stages.release(Seq(ingestBatch(batch, storeDir, quarantineDir)))
+    Landing.listedOnDriver(spark, landingDir, storeDir) {
+      Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, _) =>
+        Stages.release(Seq(ingestBatch(batch, storeDir, quarantineDir)))
+      }
     }
 
   /** One CURATION tick — [[ingestTick]] plus the q107 O(delta) discipline
@@ -58,15 +62,18 @@ object StreamingCuration {
     * (the accumulated post-normalized-dedup docs), `sigs`/`bands`
     * (shingle signatures + LSH band keys of normdocs), `pairs`
     * (near-dup edges with exact Jaccard — grows only by edges incident
-    * to new docs). */
+    * to new docs). Like [[ingestTick]], it lists on the driver when the
+    * landing directory, the store and the state are all local. */
   def curationTick(spark: SparkSession, landingDir: String,
                    checkpointDir: String, storeDir: String,
                    quarantineDir: String, stateDir: String,
                    cfg: CurationPipeline.Config = CurationPipeline.Config()): Unit =
-    Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, tick) =>
-      val fresh = ingestBatch(batch, storeDir, quarantineDir)
-      curateDelta(spark, fresh, stateDir, cfg, tick)
-      Stages.release(Seq(fresh)) // tick done; drop its blocks
+    Landing.listedOnDriver(spark, landingDir, storeDir, stateDir) {
+      Landing.drain(landingStream(spark, landingDir), checkpointDir) { (batch, tick) =>
+        val fresh = ingestBatch(batch, storeDir, quarantineDir)
+        curateDelta(spark, fresh, stateDir, cfg, tick)
+        Stages.release(Seq(fresh)) // tick done; drop its blocks
+      }
     }
 
   /** Survivor selection + release stages over the accumulated state:

@@ -349,6 +349,11 @@ class PipelineSpec extends SparkSpec {
       s"$tmp/ckpt", store, s"$tmp/reports",
       ctx.players, ctx.modes, ctx.seasons)).isEmpty)
     assert(spark.read.parquet(store).count() == 2L) // the tick appended
+    // the post-drain read declares the schema the footers hold
+    val valid = Normalize.validGames(
+      spark.read.schema(Model.matchSchema).json(landing.toString), ctx.modes)
+    assert(graft.ops.LandingSpec.namesAndTypes(spark.read.parquet(store).schema) ==
+      graft.ops.LandingSpec.namesAndTypes(Pipeline.factSchema(valid.schema)))
   }
 
   test("player stats doc: one row per player, season-ordered metrics+placements") {

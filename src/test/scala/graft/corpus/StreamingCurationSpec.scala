@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.ops.LandingSpec
+import graft.sources.JsonlDocuments
 
 /** Streaming corpus ingest e2e: tick drains landing JSONL, quarantines
   * garbage, and re-delivered documents never duplicate in the store. */
@@ -43,6 +45,11 @@ class StreamingCurationSpec extends SparkSpec {
     tick()
     assert(spark.read.parquet(store).count() == 3L)
     assert(spark.read.json(quar).count() == 1L)
+    // appendNew reads the store with the clean rows' schema: the footers'
+    val clean = JsonlDocuments.split(spark.read.schema(JsonlDocuments.parsedSchema)
+      .options(JsonlDocuments.permissive).json(landing.toString))._1
+    assert(LandingSpec.namesAndTypes(spark.read.parquet(store).schema) ==
+      LandingSpec.namesAndTypes(clean.schema))
   }
 
   test("two copies of one drop landing in the same tick append each doc once") {

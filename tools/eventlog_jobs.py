@@ -24,7 +24,8 @@ any execution (file listing, RDD actions), in start order:
           description: the job description when one is set
           (`SparkContext.setJobDescription`, e.g. `report <dir>` for each
           write of the report rebuild); otherwise the execution's call
-          site, or the lone job's first stage name
+          site, or the lone job's first stage name; cut before its first
+          `<br/>`, where Spark's listing jobs append their path list
 A closing line totals them. The lines with the largest gap and run times
 are where a run's per-job floor sits.
 """
@@ -106,7 +107,8 @@ def main():
         gap = 0.0 if last_end is None else max(0, r["start"] - last_end) / 1e3
         total_gap += gap
         last_end = r["end"] if last_end is None else max(last_end, r["end"])
-        desc = " ".join(r["desc"].split())[:80]
+        head, cut, _ = r["desc"].partition("<br/>")
+        desc = " ".join((head.rstrip(":") if cut else head).split())[:80]
         print(f"{gap:7.3f} {(r['end'] - r['start']) / 1e3:7.3f} {r['jobs']:4d} "
               f"{r['tasks']:5d}  {r['id']}  {desc}")
     span = (last_end - rows[0]["start"]) / 1e3 if rows else 0.0
