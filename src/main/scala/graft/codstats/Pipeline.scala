@@ -2,8 +2,8 @@ package graft.codstats
 
 import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
 
-import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructType}
 
@@ -17,11 +17,13 @@ import Model._
   * The reference shells out one sqlite3 process per report
   * (players × seasons × type), one after another; here every report family
   * is one DataFrame, written once — `partitionBy(player_id)` on the series
-  * reports replaces the per-player loop — and [[runReports]] runs the 15
-  * writes as one concurrent wave over a persisted stats view, on at most
-  * `min(15, defaultParallelism)` pool threads; a failed write fails the
-  * rebuild only after every other write has ended and before the view is
-  * released.
+  * reports replaces the per-player loop. [[reportRegistry]] declares the
+  * report tree once: each entry's directory, partition columns and
+  * builder. [[runReports]] runs its entries as one concurrent wave over a
+  * persisted stats view, on at most `min(entries, defaultParallelism)`
+  * pool threads, each written through the one sink, [[writeJsonReport]];
+  * a failed write fails the rebuild only after every other write has
+  * ended and before the view is released.
   */
 object Pipeline {
 
@@ -29,6 +31,10 @@ object Pipeline {
                      players: Dataset[Player], modes: Dataset[GameMode],
                      seasons: Dataset[Season], settings: Settings) {
     lazy val stats: DataFrame = Reports.statsWz(valid, players, modes)
+    /** The mode categories, sorted: dimension data (O(10) rows), so a
+      * driver-side collect is the intended use, as is broadcasting the dim. */
+    lazy val categories: Seq[String] = modes.select(col("category")).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
   }
 
   /** Build the context from raw per-match JSON documents. */
@@ -40,12 +46,14 @@ object Pipeline {
     Context(spark, valid, players, modes, seasons, settings)
   }
 
-  /** Write a report as single-file JSON (reference S7 sink shape:
-    * one JSON document per report, generate_lookup_data.sh:319-349).
-    * Small report DataFrames only — coalesce(1) is the point, not a
-    * bottleneck: every report here is already aggregated/top-k'd. */
-  def writeJsonReport(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
+  /** The one report sink: `df` as JSON at `path`. With no `partitionBy`
+    * columns, a single file (reference S7 sink shape: one JSON document
+    * per report, generate_lookup_data.sh:319-349) — coalesce(1) is the
+    * point, not a bottleneck: every such report is already
+    * aggregated/top-k'd. With them, one directory per partition value. */
+  def writeJsonReport(df: DataFrame, path: String, partitionBy: String*): Unit =
+    if (partitionBy.isEmpty) df.coalesce(1).write.mode("overwrite").json(path)
+    else df.write.mode("overwrite").partitionBy(partitionBy: _*).json(path)
 
   /** The reference's cron run loop (`run_and_deploy.sh`: fetch → parse →
     * generate → sync) as ONE streaming job: each invocation is one
@@ -73,7 +81,7 @@ object Pipeline {
                     players: Dataset[Player], modes: Dataset[GameMode],
                     seasons: Dataset[Season],
                     settings: Settings = Settings()): Unit = {
-    recoverFactStore(factDir) // heal a crashed compaction swap first
+    recoverFactStore(spark, factDir) // heal a crashed compaction swap first
     val fact = Landing.listedOnDriver(spark, landingDir, factDir) {
       // one JSON document per file; the file source's own bound on one batch
       val landing = spark.readStream.schema(matchSchema)
@@ -90,7 +98,7 @@ object Pipeline {
       Landing.readIfExists(spark, factDir, Some(factSchema(valid.schema)))
         .map(_.drop("fact_day"))
         .getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], valid.schema))
+          spark.sparkContext.emptyRDD[Row], valid.schema))
     }
     runReports(Context(spark, fact, players, modes, seasons, settings), reportDir)
   }
@@ -100,9 +108,17 @@ object Pipeline {
   private[codstats] def factSchema(valid: StructType): StructType =
     valid.add("fact_day", DateType)
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-  }
+  /** The names of the data files directly in `dir`: the files Spark reads,
+    * not `_`- or `.`-prefixed. */
+  private def dataFiles(fs: FileSystem, dir: Path): Set[String] =
+    fs.listStatus(dir).iterator.filter(_.isFile).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+
+  /** The valid rows' schema as the tick declares it (no `fact_day`),
+    * derived by analysis alone: validating zero documents runs no job. */
+  private def validSchema(spark: SparkSession): StructType =
+    Normalize.validGames(spark.createDataFrame(java.util.List.of[Row](), matchSchema),
+      spark.emptyDataset(Encoders.product[GameMode])).schema
 
   /** Self-heal a fact store left mid-swap by a CRASHED [[compactFactStore]]:
     * restore a staged-out whole store or per-day backups whose replacement
@@ -116,22 +132,23 @@ object Pipeline {
     * would treat the live staging/backup dirs as crash leftovers). A
     * deployment that cannot serialize writers needs a manifest/table
     * format instead of rename-swaps — see the compaction scaladoc. */
-  def recoverFactStore(factDir: String): Unit = {
-    val root = new java.io.File(factDir)
-    val wholeOld = new java.io.File(factDir + "_old")
-    if (!root.exists() && wholeOld.exists()) wholeOld.renameTo(root)
-    if (!root.exists()) return
+  def recoverFactStore(spark: SparkSession, factDir: String): Unit = {
+    val root = new Path(factDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val wholeOld = root.suffix("_old")
+    if (!fs.exists(root) && fs.exists(wholeOld)) fs.rename(wholeOld, root)
+    if (!fs.exists(root)) return
     // root exists ⇒ any whole-store swap completed; a surviving backup or
-    // staging copy is a crash leftover (e.g. mid-rmTree) — drop both so a
+    // staging copy is a crash leftover (e.g. mid-delete) — drop both so a
     // stale full copy never lingers on disk
-    rmTree(wholeOld)
-    rmTree(new java.io.File(factDir + "_compacting"))
-    val entries = Option(root.listFiles()).map(_.toSeq).getOrElse(Nil)
+    fs.delete(wholeOld, true)
+    fs.delete(root.suffix("_compacting"), true)
+    val entries = fs.listStatus(root).toSeq.map(_.getPath)
     entries.filter(_.getName.startsWith("_old_fact_day=")).foreach { old =>
-      val live = new java.io.File(root, old.getName.stripPrefix("_old_"))
-      if (!live.exists()) old.renameTo(live) else rmTree(old)
+      val live = new Path(root, old.getName.stripPrefix("_old_"))
+      if (!fs.exists(live)) fs.rename(old, live) else fs.delete(old, true)
     }
-    entries.filter(_.getName.startsWith("_tmp_fact_day=")).foreach(rmTree)
+    entries.filter(_.getName.startsWith("_tmp_fact_day=")).foreach(fs.delete(_, true))
   }
 
   /** Compact the streaming fact store: every `continuousRun` tick appends
@@ -140,14 +157,18 @@ object Pipeline {
     * planning cost dominates the scan). INCREMENTAL: only day partitions
     * holding more than one data file are rewritten (ticks append only to
     * recent days, so old days are compacted once and never touched again)
-    * — O(days touched since last compaction), not O(store). Each rewrite
-    * stages into a `_`-prefixed dir (invisible to Spark readers), swaps by
-    * rename with a backup kept until the swap completes, and rolls back on
-    * failure; [[recoverFactStore]] heals any crash window. A legacy
+    * — O(days touched since last compaction), not O(store). Each day is
+    * read with the declared schema of the valid rows every tick appends,
+    * so no footer-schema job runs. Each rewrite stages into a `_`-prefixed
+    * dir (invisible to Spark readers), swaps by rename with a backup kept
+    * until the swap completes, and rolls back on failure; [[recoverFactStore]] heals any crash window. A legacy
     * UNPARTITIONED store (pre-day-layout) is migrated wholesale on first
-    * call — run compaction once when upgrading, before the next tick.
-    * Local-FS renames here; an object-store deployment swaps via a
-    * manifest/table format instead.
+    * call, its schema read from its footers — run compaction once when
+    * upgrading, before the next tick. Compaction and recovery resolve the
+    * store through its Hadoop file system, as [[Landing.readIfExists]]
+    * does, so a `file:` URI store is compacted and healed too; the swaps
+    * are renames — an object-store deployment swaps via a manifest/table
+    * format instead.
     *
     * Concurrency contract: the store has ONE writer at a time — run
     * compaction between `continuousRun` ticks, never concurrently with one
@@ -162,63 +183,57 @@ object Pipeline {
     * such guard (it predates the partitioned layout, so no tick can be
     * appending day partitions to it). */
   def compactFactStore(spark: SparkSession, factDir: String): Unit = {
-    recoverFactStore(factDir)
-    val root = new java.io.File(factDir)
-    if (!root.exists()) return
-    val entries = Option(root.listFiles()).map(_.toSeq).getOrElse(Nil)
-    val dayDirs = entries.filter(f =>
-      f.isDirectory && f.getName.startsWith("fact_day="))
+    recoverFactStore(spark, factDir)
+    val root = new Path(factDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return
+    val dayDirs = fs.listStatus(root).toSeq.filter(s =>
+      s.isDirectory && s.getPath.getName.startsWith("fact_day=")).map(_.getPath)
     if (dayDirs.isEmpty) {
       // legacy unpartitioned store → migrate to the day-partitioned layout
-      val staging = new java.io.File(factDir + "_compacting")
-      rmTree(staging)
+      val staging = root.suffix("_compacting")
+      fs.delete(staging, true)
       val df0 = spark.read.parquet(factDir)
       val df = if (df0.columns.contains("fact_day")) df0
                else df0.withColumn("fact_day", to_date(col("ended_at")))
       df.repartition(col("fact_day"))
-        .write.mode("overwrite").partitionBy("fact_day").parquet(staging.getPath)
-      val old = new java.io.File(factDir + "_old")
-      rmTree(old)
-      require(root.renameTo(old), s"compaction: cannot stage out $factDir")
-      if (!staging.renameTo(root)) {
-        old.renameTo(root)
+        .write.mode("overwrite").partitionBy("fact_day").parquet(staging.toString)
+      val old = root.suffix("_old")
+      fs.delete(old, true)
+      require(fs.rename(root, old), s"compaction: cannot stage out $factDir")
+      if (!fs.rename(staging, root)) {
+        fs.rename(old, root)
         sys.error(s"compaction swap failed for $factDir; original restored")
       }
-      rmTree(old)
+      fs.delete(old, true)
       return
     }
-    def dataFiles(d: java.io.File): Set[String] =
-      Option(d.listFiles()).map(_.filter(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(_.getName).toSet).getOrElse(Set.empty)
+    lazy val schema = validSchema(spark)
     dayDirs.foreach { d =>
-      val snapshot = dataFiles(d)
+      val snapshot = dataFiles(fs, d)
       if (snapshot.size > 1) {
-        val stg = new java.io.File(root, "_tmp_" + d.getName)
-        spark.read.parquet(d.getPath).coalesce(1)
-          .write.mode("overwrite").parquet(stg.getPath)
-        if (dataFiles(d) != snapshot) {
+        val stg = new Path(root, "_tmp_" + d.getName)
+        spark.read.schema(schema).parquet(d.toString).coalesce(1)
+          .write.mode("overwrite").parquet(stg.toString)
+        if (dataFiles(fs, d) != snapshot) {
           // a concurrent tick appended despite the single-writer contract:
           // the staging copy is stale — discard it, keep the live partition
-          rmTree(stg)
+          fs.delete(stg, true)
         } else {
-          val old = new java.io.File(root, "_old_" + d.getName)
-          rmTree(old)
-          require(d.renameTo(old), s"compaction: cannot stage out ${d.getPath}")
-          if (!stg.renameTo(d)) {
-            old.renameTo(d)
-            sys.error(s"compaction swap failed for ${d.getPath}; partition restored")
+          val old = new Path(root, "_old_" + d.getName)
+          fs.delete(old, true)
+          require(fs.rename(d, old), s"compaction: cannot stage out $d")
+          if (!fs.rename(stg, d)) {
+            fs.rename(old, d)
+            sys.error(s"compaction swap failed for $d; partition restored")
           }
           // a file appended in the instant between the re-list above and the
-          // renameTo travelled into the backup — move it into the live
+          // rename travelled into the backup — move it into the live
           // partition before dropping the backup, so even that window loses
           // nothing (part-file names are unique, no collision possible)
-          Option(old.listFiles()).foreach(_.foreach { f =>
-            if (f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
-                && !snapshot.contains(f.getName))
-              f.renameTo(new java.io.File(d, f.getName))
-          })
-          rmTree(old)
+          (dataFiles(fs, old) -- snapshot).foreach(f =>
+            fs.rename(new Path(old, f), new Path(d, f)))
+          fs.delete(old, true)
         }
       }
     }
@@ -236,24 +251,51 @@ object Pipeline {
     df.withColumnsRenamed((("kd" +: cumalativeKeys).map(m =>
       s"${m}_cum" -> s"cumalative_$m")).toMap)
 
-  /** The frozen report-tree inventory (FIXTURES.md §4 ↔ the files the
-    * reference frontend loads, generate_lookup_data.sh): one entry per
-    * written directory; the e2e golden test pins this exact set. */
-  val reportInventory: Seq[String] = Seq(
-    "meta", "seasons", "players",            // write_meta (:54-91)
-    "leaderboards",                          // per-metric top-10 (:101-349)
-    "most_wins", "most_lastplaces",          // lifetime counts (:416-456)
-    "team_leaderboards",                     // team rollups (:478-505)
-    "recent_matches", "recent_sessions",     // (:514-581)
-    "sessions",                              // per-player sessions (:941-961)
-    "season_rollup",                         // per-season rollup (:590-633)
-    "player_stats",                          // per-player season doc (:590-701)
-    "unknown_modes",                         // audit (parse_matches.sh:205-221)
-    "time_series", "game_series")            // per-player series (:707-868)
+  /** One directory of the report tree: `build` makes the report from a
+    * context, and [[writeJsonReport]] writes it to the directory,
+    * partitioned by `partitionBy`. */
+  case class Report(dir: String, partitionBy: Seq[String], build: Context => DataFrame)
+
+  /** The report tree (FIXTURES.md §4 ↔ the files the reference frontend
+    * loads, generate_lookup_data.sh), in inventory order: one entry per
+    * written directory; the e2e golden test pins this exact set. The
+    * per-(player, season) reports are partitioned writes, which replace
+    * the reference's players × seasons query loop; the 'lifetime' season
+    * partition carries the unscoped series. */
+  val reportRegistry: Seq[Report] = Seq(
+    // write_meta (:54-91); players.json copy (:56): the dim ships with the site
+    Report("meta", Nil, c => c.spark.sql(
+      "SELECT unix_millis(current_timestamp()) AS updatedAt")),
+    Report("seasons", Nil, c => Reports.seasonsDoc(c.seasons)),
+    Report("players", Nil, _.players.toDF()),
+    Report("leaderboards", Nil, c => Reports.leaderboards(c.stats)),       // top-10s (:101-349)
+    Report("most_wins", Nil, c => Reports.mostWins(c.stats)),              // lifetime (:416-456)
+    Report("most_lastplaces", Nil, c => Reports.mostLastPlaces(c.stats)),
+    Report("team_leaderboards", Nil, c => Reports.teamStats(c.stats)),     // teams (:478-505)
+    Report("recent_matches", Nil, c => Reports.recentMatchesDoc(c.stats, c.modes)), // (:514-581)
+    Report("recent_sessions", Nil, c => Reports.recentSessions(c.stats, c.settings)),
+    Report("sessions", Seq("player_id"), c => Reports.sessions(c.stats, c.settings)), // :941-961
+    Report("season_rollup", Nil, c => Reports.seasonRollup(c.stats, c.seasons)), // (:590-633)
+    Report("player_stats", Nil, c =>                                     // season doc (:590-701)
+      Reports.playerStatsDoc(c.stats, c.seasons, c.modes, c.categories)),
+    // audit (parse_matches.sh:205-221)
+    Report("unknown_modes", Nil, c => Normalize.unknownModes(c.valid, c.modes)),
+    // per-player series (:707-868)
+    Report("time_series", Seq("player_id", "season_id"), c => renameCumalative(
+      Reports.timeSeries(
+        Reports.perDayBySeason(c.stats, c.seasons, c.settings)
+          .withColumn("day", date_format(col("day"), "yyyy-MM-dd")),
+        entity = Seq(col("player_id"), col("season_id"))))),
+    Report("game_series", Seq("player_id", "season_id"), c => renameCumalative(
+      Reports.gameSeriesBySeason(c.stats, c.seasons, settings = c.settings))))
+
+  /** The report tree's directories, in inventory order. */
+  val reportInventory: Seq[String] = reportRegistry.map(_.dir)
 
   /** Materialize the standard report set under `outDir` — one directory
-    * per file the reference frontend loads (write_meta +
-    * write_leaderboards + per-player loops, generate_lookup_data.sh).
+    * per [[reportRegistry]] entry, one per file the reference frontend
+    * loads (write_meta + write_leaderboards + per-player loops,
+    * generate_lookup_data.sh).
     *
     * The stats view (`ctx.stats`: fact ⨝ players ⨝ tracked modes) is
     * persisted once for the rebuild and every report family reads that one
@@ -267,16 +309,16 @@ object Pipeline {
     * MEMORY_AND_DISK (`persist()`), so at scale the view spills to local
     * disk instead of being recomputed.
     *
-    * The view is materialized by one `count()` on the caller's thread,
-    * then the [[reportWrites]] run as ONE concurrent wave: each is
-    * submitted to a fixed pool of daemon threads named `report-wave-<n>`,
-    * `min(writes, defaultParallelism)` of them — the entry count caps the
-    * threads where a cluster's parallelism runs to thousands. Spark
-    * schedules the wave's jobs side by side in this session, so the 15
-    * small writes (1–19 tasks each) share the cores instead of queueing
-    * one behind another: the reference's one-sqlite3-process-per-report
-    * fan-out (SURVEY §3 E1) without its serial floor. Each pool thread
-    * sets the job description `report <dir>` while its write runs.
+    * One `count()` materializes the view and the mode categories are
+    * collected on the caller's thread; then the registry's entries run as
+    * ONE concurrent wave on a fixed pool of daemon threads named
+    * `report-wave-<n>`, `min(entries, defaultParallelism)` of them — the
+    * entry count caps the threads where a cluster's parallelism runs to
+    * thousands. Spark schedules the wave's jobs side by side, so the small
+    * writes (1–19 tasks each) share the cores instead of queueing: the
+    * reference's one-sqlite3-process-per-report fan-out (SURVEY §3 E1)
+    * without its serial floor. Each pool thread builds its entry's report
+    * and writes it under the job description `report <dir>`.
     *
     * Failure contract: every write runs to its end, failed or not; then
     * the first failure in inventory order is rethrown with any others
@@ -289,31 +331,30 @@ object Pipeline {
     val s = ctx.stats.persist()
     try {
       s.count()
-      // category list is dimension data (O(10) rows): driver-side collect is
-      // the intended use, same as broadcasting the dim itself
-      val categories = ctx.modes.select(col("category")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      runWave(ctx.spark.sparkContext, outDir, reportWrites(ctx, s, categories))
+      ctx.categories // its collect runs here, outside every `report <dir>`
+      runWave(ctx, outDir)
     } finally s.unpersist()
   }
 
-  /** Runs each `(dir, write)` as `write(outDir/dir)` on a bounded pool and
-    * waits for all of them; see [[runReports]] for the contract. */
-  private def runWave(sc: SparkContext, outDir: String,
-                      writes: Seq[(String, String => Unit)]): Unit = {
+  /** Writes each [[reportRegistry]] entry to `outDir/<dir>` on a bounded
+    * pool and waits for all of them; see [[runReports]] for the contract. */
+  private def runWave(ctx: Context, outDir: String): Unit = {
+    val sc = ctx.spark.sparkContext
     val threads = new ConcurrentLinkedQueue[Thread]()
     val pool = Executors.newFixedThreadPool(
-      math.min(writes.size, sc.defaultParallelism), (r: Runnable) => {
+      math.min(reportRegistry.size, sc.defaultParallelism), (r: Runnable) => {
         val t = new Thread(r, s"report-wave-${threads.size + 1}")
         t.setDaemon(true)
         threads.add(t)
         t
       })
     try {
-      val pending = writes.map { case (dir, write) =>
+      val pending = reportRegistry.map { report =>
         pool.submit[Unit](() => {
-          sc.setJobDescription(s"report $dir")
-          try write(s"$outDir/$dir") finally sc.setJobDescription(null)
+          sc.setJobDescription(s"report ${report.dir}")
+          try writeJsonReport(report.build(ctx), s"$outDir/${report.dir}",
+            report.partitionBy: _*)
+          finally sc.setJobDescription(null)
         })
       }
       val failures = pending.flatMap { f =>
@@ -328,43 +369,5 @@ object Pipeline {
       pool.shutdown()
       threads.forEach((t: Thread) => t.join())
     }
-  }
-
-  /** The report tree as one `(dir, write)` list, in [[reportInventory]]
-    * order: `write` builds the report from the persisted view `s` and
-    * writes it to the path it is given. Building is lazy, inside `write`,
-    * so each report's construction runs on its own wave thread. */
-  private[codstats] def reportWrites(ctx: Context, s: DataFrame,
-                                     categories: Seq[String]): Seq[(String, String => Unit)] = {
-    def json(df: => DataFrame): String => Unit = path => writeJsonReport(df, path)
-    // per-(player, season) outputs: partitioned writes replace the
-    // reference's players × seasons query loop; the 'lifetime' season
-    // partition carries the unscoped series
-    def parts(cols: String*)(df: => DataFrame): String => Unit =
-      path => df.write.mode("overwrite").partitionBy(cols: _*).json(path)
-    Seq(
-      "meta" -> json(ctx.spark.sql(
-        "SELECT unix_millis(current_timestamp()) AS updatedAt")),
-      "seasons" -> json(Reports.seasonsDoc(ctx.seasons)),
-      // players.json copy (write_meta:56): the dim ships with the site
-      "players" -> json(ctx.players.toDF()),
-      "leaderboards" -> json(Reports.leaderboards(s)),
-      "most_wins" -> json(Reports.mostWins(s)),
-      "most_lastplaces" -> json(Reports.mostLastPlaces(s)),
-      "team_leaderboards" -> json(Reports.teamStats(s)),
-      "recent_matches" -> json(Reports.recentMatchesDoc(s, ctx.modes)),
-      "recent_sessions" -> json(Reports.recentSessions(s, ctx.settings)),
-      "sessions" -> parts("player_id")(Reports.sessions(s, ctx.settings)),
-      "season_rollup" -> json(Reports.seasonRollup(s, ctx.seasons)),
-      "player_stats" -> json(
-        Reports.playerStatsDoc(s, ctx.seasons, ctx.modes, categories)),
-      "unknown_modes" -> json(Normalize.unknownModes(ctx.valid, ctx.modes)),
-      "time_series" -> parts("player_id", "season_id")(renameCumalative(
-        Reports.timeSeries(
-          Reports.perDayBySeason(s, ctx.seasons, ctx.settings)
-            .withColumn("day", date_format(col("day"), "yyyy-MM-dd")),
-          entity = Seq(col("player_id"), col("season_id"))))),
-      "game_series" -> parts("player_id", "season_id")(renameCumalative(
-        Reports.gameSeriesBySeason(s, ctx.seasons, settings = ctx.settings))))
   }
 }

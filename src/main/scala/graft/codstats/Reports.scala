@@ -43,16 +43,19 @@ object Reports {
     "distance_traveled", "headshots", "caches_opened", "revives", "downs",
     "vehicles_destroyed")
 
-  def leaderboards(stats: DataFrame, k: Int = 10): DataFrame = {
-    val melted = corePlayers(stats).select(
+  def leaderboards(stats: DataFrame, k: Int = 10): DataFrame =
+    TopK.perGroup(melt(stats, leaderboardMetrics), k, Seq(col("metric")),
+      Seq(desc("value"), col("player_id"), col("game_id")))
+
+  /** Core players' games melted to one (player_id, game_id, ended_at,
+    * metric, value) row per metric in `metrics`. */
+  private def melt(stats: DataFrame, metrics: Seq[String]): DataFrame =
+    corePlayers(stats).select(
       col("player_id"), col("game_id"), col("ended_at"),
-      explode(array(leaderboardMetrics.map(m =>
+      explode(array(metrics.map(m =>
         struct(lit(m).as("metric"), col(m).as("value"))): _*)).as("mv"))
       .select(col("player_id"), col("game_id"), col("ended_at"),
               col("mv.metric").as("metric"), col("mv.value").as("value"))
-    TopK.perGroup(melted, k, Seq(col("metric")),
-      Seq(desc("value"), col("player_id"), col("game_id")))
-  }
 
   /** Leaderboards shaped as one JSON document per metric (the reference's
     * json_group_array report sink, generate_lookup_data.sh:319-349).
@@ -187,10 +190,14 @@ object Reports {
     * reproduces the unscoped series). */
   def perDayBySeason(stats: DataFrame, seasons: Dataset[Season],
                      settings: Settings = Settings()): DataFrame =
-    perDayKeyed(
-      RangeJoin.broadcastRange(stats, seasons.toDF(),
-        col("ended_at"), col("start_ts"), col("end_ts")),
-      Seq(col("player_id"), col("season_id")), settings)
+    perDayKeyed(bySeason(stats, seasons), Seq(col("player_id"), col("season_id")), settings)
+
+  /** Each `stats` row once per season whose [start_ts, end_ts) holds its
+    * `ended_at` — the broadcast range join over the O(10)-row dim; the
+    * all-overlapping 'lifetime' season holds every row. */
+  private def bySeason(stats: DataFrame, seasons: Dataset[Season]): DataFrame =
+    RangeJoin.broadcastRange(stats, seasons.toDF(),
+      col("ended_at"), col("start_ts"), col("end_ts"))
 
   private def perDayKeyed(stats: DataFrame, keys: Seq[Column],
                           settings: Settings): DataFrame =
@@ -209,19 +216,30 @@ object Reports {
         sum(when(col("kills") >= settings.monsterKills, 1L).otherwise(0L)).as("monsters"),
         sum(when(col("kills") === 0.0, 1L).otherwise(0L)).as("gooseeggs"))
 
-  /** Team identity + per-team rollup (parse_matches.sh:389-470): one
-    * roster per game, kept when it shares > 1 game. Rosters of any size
-    * count — the full-team rule is [[fullTeamStats]]'s. Deterministic
-    * roster key: sorted distinct player ids. */
-  def teamStats(stats: DataFrame): DataFrame = {
-    val perGame = stats.groupBy(col("game_id"))
+  /** Team identity + per-team rollup (parse_matches.sh:389-470), the rule
+    * `team_leaderboards` is written from: a game's roster is every player
+    * of `stats` in that game, keyed by its sorted distinct player ids, and
+    * a roster is kept when it played > 1 game together, rolled up per
+    * (team_key, n_players). Rosters of any size count; the reference
+    * counts only full teams, the rule of [[fullTeamStats]]. */
+  def teamStats(stats: DataFrame): DataFrame =
+    perTeam(rosters(stats), col("n_players"))
+
+  /** One roster per game (and `keys`): its team key (the sorted distinct
+    * player ids), its size, and the game's team totals. */
+  private def rosters(stats: DataFrame, keys: Column*): DataFrame =
+    stats.groupBy(col("game_id") +: keys: _*)
       .agg(
         concat_ws(",", sort_array(collect_set(col("player_id")))).as("team_key"),
         count(lit(1)).as("n_players"),
         sum(col("kills")).as("kills"),
         sum(col("damage_done")).as("damage_done"),
         min(col("team_placement")).as("team_placement"))
-    perGame.groupBy(col("team_key"), col("n_players"))
+
+  /** [[rosters]] rolled up per (team_key, `key`), kept when the team
+    * shares > 1 game. */
+  private def perTeam(perGame: DataFrame, key: Column): DataFrame =
+    perGame.groupBy(col("team_key"), key)
       .agg(
         count(lit(1)).as("n_games"),
         round(avg(col("kills")), 2).as("avg_kills"),
@@ -229,7 +247,6 @@ object Reports {
         max(col("kills")).as("max_kills"),
         sum(when(col("team_placement") === 1.0, 1L).otherwise(0L)).as("wins"))
       .filter(col("n_games") > 1)
-  }
 
   /** Longest gulag win/loss streaks, top-k (generate_lookup_data.sh:
     * 356-414, SURVEY §2.5 W6): only DECIDED gulags participate
@@ -257,33 +274,17 @@ object Reports {
     val withCat = stats.join(
       broadcast(modes.select(col("id").as("game_mode_sub"), col("category"))),
       Seq("game_mode_sub"))
-    val perGame = withCat.groupBy(col("game_id"), col("category"))
-      .agg(
-        concat_ws(",", sort_array(collect_set(col("player_id")))).as("team_key"),
-        count(lit(1)).as("n_players"),
-        sum(col("kills")).as("kills"),
-        sum(col("damage_done")).as("damage_done"),
-        min(col("team_placement")).as("team_placement"))
-    perGame.join(broadcast(sizeDf), Seq("category"))
-      .filter(col("n_players") === col("expected_size"))
-      .groupBy(col("team_key"), col("category"))
-      .agg(
-        count(lit(1)).as("n_games"),
-        round(avg(col("kills")), 2).as("avg_kills"),
-        round(avg(col("damage_done")), 2).as("avg_damage"),
-        max(col("kills")).as("max_kills"),
-        sum(when(col("team_placement") === 1.0, 1L).otherwise(0L)).as("wins"))
-      .filter(col("n_games") > 1)
+    perTeam(rosters(withCat, col("category"))
+      .join(broadcast(sizeDf), Seq("category"))
+      .filter(col("n_players") === col("expected_size")), col("category"))
   }
 
   /** Season×player rollup via the overlapping range join
     * (generate_lookup_data.sh:590-633): per-season totals + guarded ratio
     * metrics (K/D divides raw sums; Dmg/Kill truncates like SQLite's
     * CAST AS int; gulag win% of decided gulags). */
-  def seasonRollup(stats: DataFrame, seasons: Dataset[Season]): DataFrame = {
-    val joined = RangeJoin.broadcastRange(stats, seasons.toDF(),
-      col("ended_at"), col("start_ts"), col("end_ts"))
-    joined.groupBy(col("player_id"), col("season_id"))
+  def seasonRollup(stats: DataFrame, seasons: Dataset[Season]): DataFrame =
+    bySeason(stats, seasons).groupBy(col("player_id"), col("season_id"))
       .agg(
         count(lit(1)).as("n_games"),
         sum(col("kills")).as("kills"),
@@ -307,7 +308,6 @@ object Reports {
         when(col("teams_sum") === 0L, lit(null).cast("double"))
           .otherwise(lit(100.0) * col("placement_sum") / col("teams_sum"))
           .as("avg_placement_pct"))
-  }
 
   /** The combined per-player stats document: one row per player, a
     * season-ordered JSON array of {season metrics ⨝ category placements}
@@ -338,9 +338,7 @@ object Reports {
     val withCat = stats.join(
       broadcast(modes.select(col("id").as("game_mode_sub"), col("category"))),
       Seq("game_mode_sub"), "left")
-    val joined = RangeJoin.broadcastRange(withCat, seasons.toDF(),
-      col("ended_at"), col("start_ts"), col("end_ts"))
-    val agg = joined.groupBy(col("player_id"), col("season_id"))
+    val agg = bySeason(withCat, seasons).groupBy(col("player_id"), col("season_id"))
       .pivot("category", categories)
       .agg(round(avg(col("team_placement")), 2))
     agg.select(col("player_id") +: col("season_id") +: categories.map(c =>
@@ -404,10 +402,8 @@ object Reports {
   def gameSeriesBySeason(stats: DataFrame, seasons: Dataset[Season],
                          ks: Seq[Int] = Seq(10, 25),
                          settings: Settings = Settings()): DataFrame =
-    gameSeries(
-      RangeJoin.broadcastRange(stats, seasons.toDF(),
-        col("ended_at"), col("start_ts"), col("end_ts")),
-      ks, settings, Seq(col("player_id"), col("season_id")))
+    gameSeries(bySeason(stats, seasons), ks, settings,
+      Seq(col("player_id"), col("season_id")))
 
   /** Lifetime per-metric records with the reference's tie semantics
     * (index.js:408-418, SURVEY §2.6 T5): every player tied at the metric
@@ -415,12 +411,7 @@ object Reports {
     * Per-metric max via broadcast (never an unbounded window over a
     * handful of metric keys). */
   def records(stats: DataFrame, metrics: Seq[String] = leaderboardMetrics): DataFrame = {
-    val melted = corePlayers(stats).select(
-      col("player_id"), col("game_id"), col("ended_at"),
-      explode(array(metrics.map(m =>
-        struct(lit(m).as("metric"), col(m).as("value"))): _*)).as("mv"))
-      .select(col("player_id"), col("game_id"), col("ended_at"),
-              col("mv.metric").as("metric"), col("mv.value").as("value"))
+    val melted = melt(stats, metrics)
     val maxes = melted.groupBy(col("metric")).agg(max(col("value")).as("vmax"))
     val wFirst = Window.partitionBy(col("metric"), col("player_id"))
       .orderBy(col("ended_at"), col("game_id"))

@@ -2,6 +2,8 @@ package graft.codstats
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -169,9 +171,49 @@ class StreamingIngestSpec extends SparkSpec {
     old.mkdirs(); compacting.mkdirs()
     Files.writeString(old.toPath.resolve("stale"), "x")
     Files.writeString(compacting.toPath.resolve("stale"), "x")
-    Pipeline.recoverFactStore(dir)
+    Pipeline.recoverFactStore(spark, dir)
     assert(!old.exists() && !compacting.exists())
     assert(spark.read.parquet(dir).count() == 1L) // live store untouched
+  }
+
+  /** Data files per day partition of the store under `dir`. */
+  private def filesPerDay(dir: java.nio.file.Path): Map[String, Int] =
+    Files.list(dir).iterator().asScala.filter(_.getFileName.toString.startsWith("fact_day="))
+      .map(d => d.getFileName.toString ->
+        Files.list(d).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
+      .toMap
+
+  test("compaction of a store given as a file: URI leaves one file per day") {
+    val tmp = Files.createTempDirectory("graft_uri_compact")
+    val landing = Files.createDirectory(tmp.resolve("landing"))
+    val store = tmp.resolve("store").toUri.toString
+    assert(store.startsWith("file:"))
+    val players = Seq(Model.Player("u1", "p1", is_core = true)).toDS()
+    val seasons = Model.seedSeasons.map { case (id, a, b) => Model.Season(id,
+      java.sql.Timestamp.from(java.time.Instant.parse(a)),
+      java.sql.Timestamp.from(java.time.Instant.parse(b))) }.toDS()
+    def tick(): Unit = Pipeline.continuousRun(spark, landing.toString,
+      s"$tmp/ckpt", store, s"$tmp/reports",
+      players, Model.seedGameModes.toDS(), seasons)
+    writeDoc(landing, "match_m1_u1.json", "m1", "u1", 1590000000L)
+    tick()
+    writeDoc(landing, "match_m2_u1.json", "m2", "u1", 1590003600L) // same day
+    writeDoc(landing, "match_m3_u1.json", "m3", "u1", 1590090000L) // next day
+    tick()
+    val before = spark.read.parquet(store).orderBy("game_id").collect().toSeq
+    assert(filesPerDay(tmp.resolve("store")) ==
+      Map("fact_day=2020-05-20" -> 2, "fact_day=2020-05-21" -> 1))
+    val jobs = jobsStarted(Pipeline.compactFactStore(spark, store))
+    assert(filesPerDay(tmp.resolve("store")) ==
+      Map("fact_day=2020-05-20" -> 1, "fact_day=2020-05-21" -> 1))
+    assert(spark.read.parquet(store).orderBy("game_id").collect().toSeq == before)
+    // the day is read with its declared schema: no footer-schema job, which
+    // runs while a read is built, outside any SQL execution (the rewrite
+    // runs inside its own)
+    val inference = jobs.filter(j =>
+      Option(j.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+      .flatMap(_.stageInfos.map(_.name)).filter(_.startsWith("parquet at Pipeline"))
+    assert(inference.isEmpty, inference)
   }
 
   test("compaction migrates a legacy unpartitioned store to the day layout") {

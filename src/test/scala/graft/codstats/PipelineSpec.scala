@@ -1,5 +1,9 @@
 package graft.codstats
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -333,8 +337,38 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("the report wave writes exactly the inventory, in its order") {
-    assert(Pipeline.reportWrites(ctx, ctx.stats, Nil).map(_._1) ==
-      Pipeline.reportInventory)
+    val out = Files.createTempDirectory("graft_reports").toString
+    val dirs = jobsStarted(Pipeline.runReports(ctx.copy(), out))
+      .flatMap(description).filter(_.startsWith("report ")).map(_.stripPrefix("report "))
+    // every inventory directory runs its jobs under its own description,
+    // and no other `report <dir>` does
+    assert(dirs.distinct.sortBy(Pipeline.reportInventory.indexOf(_)) ==
+      Pipeline.reportInventory, dirs)
+  }
+
+  test("no report .json( write under codstats outside the one sink") {
+    val sources = Files.list(Paths.get("src/main/scala/graft/codstats")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.size >= 4, s"scan found only ${sources.size} files")
+    // a chain continued on lines that begin with '.' is one statement
+    def jsonWrites(lines: Seq[String]): Seq[String] =
+      lines.map(_.trim).foldLeft(Vector.empty[String]) {
+        case (acc, l) if l.startsWith(".") && acc.nonEmpty => acc.init :+ (acc.last + l)
+        case (acc, l) => acc :+ l
+      }.filter(st => st.contains(".write") && st.contains(".json("))
+    // the sink: writeJsonReport's definition, up to the next blank line
+    val (sink, outside) = sources.map { p =>
+      val lines = Files.readAllLines(p).asScala.toSeq
+      val start = lines.indexWhere(_.contains("def writeJsonReport("))
+      if (start < 0) (Nil, jsonWrites(lines))
+      else {
+        val end = lines.indexWhere(_.trim.isEmpty, start)
+        (jsonWrites(lines.slice(start, end)),
+         jsonWrites(lines.take(start) ++ lines.drop(end)))
+      }
+    }.unzip
+    assert(sink.flatten.nonEmpty, "the scan found no sink")
+    assert(outside.flatten.isEmpty, s"write reports through writeJsonReport: ${outside.flatten}")
   }
 
   test("continuousRun releases each micro-batch's checkpoint on return") {

@@ -2,13 +2,10 @@ package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, to_date}
 import org.apache.spark.sql.types._
 
@@ -47,18 +44,8 @@ class LandingSpec extends SparkSpec {
   }
 
   /** Descriptions of the Spark listing jobs that `body` runs. */
-  private def listingJobs(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("Listing leaf files")).foreach(seen.add)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
+  private def listingJobs(body: => Unit): Seq[String] =
+    jobsStarted(body).flatMap(description).filter(_.startsWith("Listing leaf files"))
 
   test("no streaming writer under src/main outside Landing") {
     val banned = """Trigger\.AvailableNow|\.writeStream""".r
